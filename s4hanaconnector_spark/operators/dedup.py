@@ -114,8 +114,8 @@ def ngram_coverage(
 
     sh = shingle_table(df, text_col, id_col, n)
     return (
-        # isNotNull replicates the old INNER join exactly: a null key never
-        # joined (null <> null in SQL), but a window PARTITION would keep it
+        # isNotNull keeps INNER-join semantics exactly: a null key never
+        # joins (null <> null in SQL), but a window PARTITION would keep it
         sh.filter(F.col("shingle").isNotNull())
         .withColumn(
             "df_count", F.count(F.lit(1)).over(W.partitionBy("shingle"))
@@ -209,14 +209,14 @@ def incremental_neardup_candidates(
     more than ``max_bucket`` corpus docs — boilerplate signatures that
     carry no dedup signal but would fan one batch doc out to the whole
     corpus — and it is applied to the corpus signatures BEFORE the join:
-    the r8 x100 ladder measured the old post-join placement at >450x the
-    x10 wall for 10x data, because the pre-cap join materializes
+    the x100 ladder measured a post-join placement at >450x the x10 wall
+    for 10x data, because the pre-cap join materializes
     |batch| x family_size hit rows (both factors grow with the tier —
     quadratic by construction) only for the cap to discard them. Capping
     per (band, sig) on the corpus side is value-identical: after the
     identity dedup each corpus doc contributes exactly one row per
-    bucket, so the per-(band, sig, batch_id) hit count the old window
-    measured IS the corpus bucket size, independent of batch_id.
+    bucket, so the per-(band, sig, batch_id) hit count a post-join window
+    would measure IS the corpus bucket size, independent of batch_id.
     Returns (batch_id, corpus_id, n_shared_bands)."""
     from pyspark.sql import Window as W
 
@@ -230,7 +230,7 @@ def incremental_neardup_candidates(
     if max_bucket is not None:
         # plain count window, NOT size(collect_set(...)): collect_set
         # buffers every corpus id of the bucket in window state — on
-        # exactly the hot buckets this cap exists to shed (r4 VERDICT)
+        # exactly the hot buckets this cap exists to shed
         c_sigs = (
             c_sigs.withColumn(
                 "__bucket_n",
@@ -349,10 +349,10 @@ def jaccard_pairs(
     otherwise produce a quadratic blowup while carrying no signal.
     Returns (doc_a, doc_b, jaccard) with jaccard >= threshold.
 
-    With ``df_cap`` set the pairing is bucket-local (the change-#9 shape of
+    With ``df_cap`` set the pairing is bucket-local (the shape of
     minhash_lsh_candidates): one groupBy(shingle) folds each shingle's doc
-    list into a row, the cap filter IS the df filter (size(docs) = the old
-    row count: shingles are array_distinct per doc), per-doc sizes explode
+    list into a row, the cap filter IS the df filter (size(docs) = the
+    shingle's row count: shingles are array_distinct per doc), per-doc sizes explode
     back out of the capped buckets, and intersection counts explode from
     row-local sorted (i < j) pair arrays bounded at cap(cap-1)/2 per row.
     The historical shape — count + semi-join for the cap, then a shingle
@@ -659,9 +659,9 @@ def semantic_dedup(
     published choice when a trained quantizer already exists for the ANN
     index, because dedup then reuses the index's cells for free.
 
-    100 TB plan shape: cell assignment is the IVF operator's — broadcast
-    centroid table, one row-local argmax pass, zero corpus shuffle
-    (operators/similarity.py cell_assigner, both delivery modes). The only
+    100 TB plan shape: cell assignment is the IVF operator's — the
+    centroid table collected once, one row-local argmax pass, zero corpus
+    shuffle (operators/similarity.py cell_assigner). The only
     shuffle is ONE hash exchange of (id, vec, cell) on the cell id for the
     within-cell self-join; with ~sqrt(N) cells each side of the join holds
     ~sqrt(N) rows per cell and the pairwise work is N^1.5 total instead of
@@ -716,8 +716,8 @@ def semantic_dedup_windowed(
     pairing: str = "expr",
 ) -> DataFrame:
     """SemDeDup with a PAIR BUDGET — the winnowed rung that caps
-    :func:`semantic_dedup`'s within-cell quadratic pairing (VERDICT r11
-    next #5, the one alpha>1 family on the x100 ladder): members of each
+    :func:`semantic_dedup`'s within-cell quadratic pairing (the one
+    alpha>1 family on the x100 ladder): members of each
     cell are RANKED by their (rounded) cosine affinity to the cell's own
     centroid — the SemDeDup paper's centroid-distance ordering — and each
     member is scored ONLY against its next ``pair_window`` successors in
@@ -747,15 +747,9 @@ def semantic_dedup_windowed(
     path via the shared per-cell :func:`_arrow_cell_window_neighbor`). Recall vs the
     uncapped rung is GATED, not assumed (tests/test_scale_smoke.py ladders
     both and measures the contraction-set recall)."""
-    from s4hanaconnector_spark.operators.similarity import (
-        cell_assigner,
-        cosine,
-    )
+    from s4hanaconnector_spark.operators.similarity import cell_assigner
 
-    if pair_window < 1:
-        raise ValueError(f"pair_window must be >= 1, got {pair_window}")
-    if pairing not in ("expr", "arrow"):
-        raise ValueError(f"unknown pairing backend: {pairing}")
+    _check_window(pair_window, pairing)
     assign = cell_assigner(
         df, n_centroids=n_centroids, c_id=id_col, vec=vec,
         round_digits=round_digits, centroids=centroids, assignment=assignment,
@@ -765,32 +759,26 @@ def semantic_dedup_windowed(
     # affinity join — same default prefix rule as cell_assigner resolves
     # internally, same explicit-centroids override
     if centroids is None:
-        cent = (
-            df.orderBy(id_col)
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("__cent_id"), F.col(vec).alias("__cv"))
+        centroids = df.orderBy(id_col).limit(n_centroids).select(
+            F.col(id_col).alias("cent_id"), vec
         )
-    else:
-        cent = centroids.select(
-            F.col("cent_id").alias("__cent_id"), F.col(vec).alias("__cv")
-        )
-    ranked = (
-        cells.join(F.broadcast(cent), F.col("__cell") == F.col("__cent_id"))
-        .select(
-            id_col, vec, "__cell",
-            F.round(cosine(F.col(vec), F.col("__cv")), round_digits)
-            .alias("__aff"),
-        )
-    )
     return _windowed_contract(
-        df.select(F.col(id_col)), ranked, id_col, vec,
+        df.select(F.col(id_col)), cells, centroids, id_col, vec,
         threshold, round_digits, pair_window, pairing,
     )
 
 
+def _check_window(pair_window: int, pairing: str) -> None:
+    if pair_window < 1:
+        raise ValueError(f"pair_window must be >= 1, got {pair_window}")
+    if pairing not in ("expr", "arrow"):
+        raise ValueError(f"unknown pairing backend: {pairing}")
+
+
 def _windowed_contract(
     ids: DataFrame,
-    ranked: DataFrame,
+    cells: DataFrame,
+    centroids: DataFrame,
     id_col: str,
     vec: str,
     threshold: float,
@@ -799,24 +787,33 @@ def _windowed_contract(
     pairing: str,
 ) -> DataFrame:
     """Shared pair-budget tail (:func:`semantic_dedup_windowed` and the
-    from-index variant): ``ranked`` carries ``(id, vec, __cell, __aff)``;
-    members pair only with their next ``pair_window`` successors in
-    (affinity desc, id) rank order within each cell, then contract exactly
-    as :func:`_contract_cells` does."""
+    from-index variant): every ``(id, vec, __cell)`` member of ``cells``
+    gets its rounded affinity to its own cell's centroid (a broadcast join
+    with the ``(cent_id, vec)`` table), pairs only with its next
+    ``pair_window`` successors in (affinity desc, id) rank order within
+    the cell, then contracts exactly as :func:`_contract_cells` does."""
     from pyspark.sql import Window as W
 
     from s4hanaconnector_spark.operators.similarity import cosine
 
+    cent = centroids.select(
+        F.col("cent_id").alias("__cent_id"), F.col(vec).alias("__cv")
+    )
+    ranked = cells.join(
+        F.broadcast(cent), F.col("__cell") == F.col("__cent_id")
+    ).select(
+        id_col, vec, "__cell",
+        F.round(cosine(F.col(vec), F.col("__cv")), round_digits).alias("__aff"),
+    )
     if pairing == "arrow":
-        # r12 (same restructure as _contract_cells): per-cell applyInArrow
-        # replaces the window+lead successor-array construction — which
-        # materialized ``pair_window`` copies of every member's VECTOR in
-        # the JVM and shipped both vectors per candidate pair through the
-        # boundary — with one member-sized crossing per cell. The rank
+        # per-cell applyInArrow (same shape as _contract_cells) instead of
+        # the window+lead successor arrays, which materialize
+        # ``pair_window`` copies of every member's VECTOR in the JVM and
+        # would ship both vectors per candidate pair through the boundary
+        # — one member-sized crossing per cell instead. The rank
         # order ((__aff desc, id asc), NaN affinities first like Spark's
         # NaN-greatest desc) and the next-``pair_window``-successors pair
-        # set are reproduced exactly; scoring keeps the row-wise
-        # float64 ops of the old per-pair arrow scoring.
+        # set are reproduced exactly; scoring is row-wise float64.
         neigh = _arrow_cell_window_neighbor(
             ranked.select(id_col, vec, "__cell", "__aff"), id_col, vec,
             threshold, round_digits, pair_window,
@@ -863,14 +860,18 @@ def _windowed_contract(
             cos.alias("cosine"),
         ).filter(F.col("cosine") >= threshold)
         neigh = pairs.groupBy("id_b").agg(F.min("id_a").alias("__min_neighbor"))
-    return (
-        ids.join(neigh, on=F.col(id_col) == F.col("id_b"), how="left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("__min_neighbor"), F.col(id_col)).alias(
-                "canonical_id"
-            ),
-        )
+    return _contract(ids, neigh, id_col)
+
+
+def _contract(ids: DataFrame, neigh: DataFrame, id_col: str) -> DataFrame:
+    """The single contraction step of the SemDeDup family: every id maps
+    onto its lowest qualifying lower-id neighbor from ``neigh``
+    ``(id_b, __min_neighbor)``, or onto itself when it has none."""
+    return ids.select(F.col(id_col)).join(
+        neigh, on=F.col(id_col) == F.col("id_b"), how="left"
+    ).select(
+        F.col(id_col),
+        F.coalesce(F.col("__min_neighbor"), F.col(id_col)).alias("canonical_id"),
     )
 
 
@@ -902,17 +903,15 @@ def semantic_dedup_from_index(
     join (the postings don't store it); with ``pair_window`` set,
     ``max_cell`` is ignored — windowed pairing is linear in occupancy,
     which is the cap's whole job."""
-    import json
     import os
 
     from s4hanaconnector_spark.operators.similarity import (
-        _fs_read_text,
         _index_tombstones,
+        _read_index_meta,
         _read_postings,
-        cosine,
     )
 
-    meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
+    meta = _read_index_meta(spark, path)
     id_col, vec = meta["c_id"], meta["vec"]
     cells = _read_postings(spark, path, "vectors")
     tomb = _index_tombstones(spark, path, id_col)
@@ -921,27 +920,10 @@ def semantic_dedup_from_index(
         # from the output id set (same reader contract as probe_ann_index)
         cells = cells.join(F.broadcast(tomb), on=id_col, how="left_anti")
     if pair_window is not None:
-        if pair_window < 1:
-            raise ValueError(f"pair_window must be >= 1, got {pair_window}")
-        if pairing not in ("expr", "arrow"):
-            raise ValueError(f"unknown pairing backend: {pairing}")
-        round_digits = meta["round_digits"]
-        cent = spark.read.parquet(os.path.join(path, "centroids")).select(
-            F.col("cent_id").alias("__cent_id"), F.col(vec).alias("__cv")
-        )
-        ranked = (
-            cells.join(
-                F.broadcast(cent), F.col("__cell") == F.col("__cent_id")
-            )
-            .select(
-                id_col, vec, "__cell",
-                F.round(cosine(F.col(vec), F.col("__cv")), round_digits)
-                .alias("__aff"),
-            )
-        )
+        _check_window(pair_window, pairing)
         return _windowed_contract(
-            cells.select(F.col(id_col)), ranked, id_col, vec,
-            threshold, round_digits, pair_window, pairing,
+            cells, cells, spark.read.parquet(os.path.join(path, "centroids")),
+            id_col, vec, threshold, meta["round_digits"], pair_window, pairing,
         )
     return _contract_cells(
         cells.select(id_col, vec), cells, id_col, vec,
@@ -969,7 +951,7 @@ def _contract_cells(
 
     # max_cell bounds cell MEMBERSHIP — under multi-probe (n_assign > 1)
     # that includes secondary (probe) members, so a cell can be dropped
-    # whose primary occupancy is under the cap (ADVICE r10). Deliberate:
+    # whose primary occupancy is under the cap. Deliberate:
     # the self-join below is quadratic in MEMBERS, probe members included,
     # so membership is exactly the quantity the cap must bound to keep the
     # pairing stage N^1.5; a primary-only cap would re-admit the quadratic
@@ -987,23 +969,20 @@ def _contract_cells(
     if pairing not in ("expr", "arrow"):
         raise ValueError(f"unknown pairing backend: {pairing}")
     if pairing == "arrow":
-        # r12 optimization (guide §8 "move heavy bytes once"): the old
-        # arrow backend still materialized the within-cell SELF-JOIN in the
-        # JVM — every candidate PAIR crossed the Python boundary carrying
-        # BOTH vectors (|pairs| x 2 x dims doubles, quadratic in cell
-        # occupancy), then scored row-wise in numpy. Per-cell
-        # applyInPandas ships each member vector ONCE (|members| x dims —
-        # the same bytes the self-join's exchange already moved), computes
-        # the full within-cell cosine matrix blockwise in numpy, and emits
-        # only each member's min qualifying lower-id neighbor (<= 1 row
-        # per member instead of every qualifying pair). Same hash
-        # exchange on __cell, no join, linear boundary traffic. Rounding/
-        # NaN contract unchanged from the per-pair arrow scoring (round-half-up
-        # on the binary double; zero-norm NaN passes like Spark's
-        # NaN-greatest); the matmul's BLAS reduction order is the SAME
-        # documented boundary class as the old backend's pairwise-sum
-        # (_arrow_assign docstring) — fixture equality vs expr is
-        # test-pinned away from boundaries.
+        # move heavy bytes once: a JVM within-cell SELF-JOIN would send
+        # every candidate PAIR across the Python boundary carrying BOTH
+        # vectors (|pairs| x 2 x dims doubles, quadratic in cell
+        # occupancy). Per-cell applyInArrow ships each member vector ONCE
+        # (|members| x dims — the same bytes the exchange already moves),
+        # computes the full within-cell cosine matrix blockwise in numpy,
+        # and emits only each member's min qualifying lower-id neighbor
+        # (<= 1 row per member instead of every qualifying pair). Same
+        # hash exchange on __cell, no join, linear boundary traffic.
+        # Rounding is round-half-up on the binary double; zero-norm NaN
+        # passes like Spark's NaN-greatest; the matmul's BLAS reduction
+        # order is the documented boundary class (_arrow_assign
+        # docstring) — fixture equality vs expr is test-pinned away from
+        # boundaries.
         neigh = _arrow_cell_min_neighbor(
             cells.select(id_col, vec, "__cell"), id_col, vec,
             threshold, round_digits,
@@ -1026,14 +1005,7 @@ def _contract_cells(
             cos.alias("cosine"),
         ).filter(F.col("cosine") >= threshold)
         neigh = pairs.groupBy("id_b").agg(F.min("id_a").alias("__min_neighbor"))
-    return (
-        df.select(F.col(id_col))
-        .join(neigh, on=F.col(id_col) == F.col("id_b"), how="left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("__min_neighbor"), F.col(id_col)).alias("canonical_id"),
-        )
-    )
+    return _contract(df, neigh, id_col)
 
 
 def _arrow_cell_min_neighbor(
@@ -1043,15 +1015,14 @@ def _arrow_cell_min_neighbor(
     threshold: float,
     round_digits: int,
 ) -> DataFrame:
-    """Per-cell vectorized SemDeDup pairing (r12): groupBy(__cell) ->
+    """Per-cell vectorized SemDeDup pairing: groupBy(__cell) ->
     applyInArrow; inside each cell the full pairwise cosine runs as
     blockwise numpy matmul and each member emits at most one row —
     ``(id_b, __min_neighbor)`` where ``__min_neighbor`` is the LOWEST id
-    among its >= ``threshold`` lower-id cell-mates. This replaces the JVM
-    self-join + per-pair boundary crossing of the old arrow backend with
-    one member-sized boundary crossing per cell.
+    among its >= ``threshold`` lower-id cell-mates, with one member-sized
+    boundary crossing per cell.
 
-    Contract (identical to the pair-level backend): cosine rounded
+    Contract (identical to the expr self-join): cosine rounded
     half-up on the binary double at ``round_digits`` before thresholding;
     zero-norm vectors produce NaN/inf affinities that PASS the threshold
     (Spark NaN-greatest semantics); the min-neighbor is the smallest
@@ -1118,13 +1089,12 @@ def _arrow_cell_window_neighbor(
     round_digits: int,
     pair_window: int,
 ) -> DataFrame:
-    """Per-cell vectorized PAIR-BUDGET pairing (r12): groupBy(__cell) ->
+    """Per-cell vectorized PAIR-BUDGET pairing: groupBy(__cell) ->
     applyInArrow. Members are ordered by (rounded affinity desc, id asc) —
     NaN affinities first, matching Spark's NaN-greatest descending sort —
     and each member scores against its next ``pair_window`` successors in
     that order (the :func:`semantic_dedup_windowed` pair set, bit for
-    bit). Scoring is the row-wise float64 cosine of the old
-    per-pair arrow scoring (same pairwise-sum reduction, same
+    bit). Scoring is a row-wise float64 cosine (pairwise-sum reduction,
     round-half-up on the binary double, zero-norm NaN passes). Emits
     ``(id_b, __min_neighbor)`` — per member, the lowest qualifying
     partner id below it."""
@@ -1239,8 +1209,8 @@ def incremental_semantic_dedup(
 
     100 TB plan shape — the corpus is NEVER shuffled: the quantizer is
     frozen from the corpus (or passed in — at scale, the ANN index's own
-    trained centroids), both sides get the broadcast-centroid row-local
-    cell assignment, and the corpus side's only join is a broadcast-hash
+    trained centroids), both sides get the shared row-local cell
+    assignment, and the corpus side's only join is a broadcast-hash
     join against the (tiny) batch cell table keyed on the cell id — one
     corpus scan, hits only survive. The within-batch leg self-joins the
     batch alone. A batch row in a corpus-hot cell costs one cosine per
@@ -1338,7 +1308,7 @@ def _arrow_classify_corpus_hits(
     threshold: float,
     round_digits: int,
 ) -> DataFrame:
-    """Vectorized corpus-vs-batch scoring (r12): ``mapInArrow`` straight
+    """Vectorized corpus-vs-batch scoring: ``mapInArrow`` straight
     over the corpus cell scan — the corpus is STILL never shuffled (the
     operator's 100 TB design claim holds under both backends). The tiny
     batch side is materialized once (same |batch| bound as the expr leg's
@@ -1350,9 +1320,10 @@ def _arrow_classify_corpus_hits(
     qualifying corpus id seen in THIS Arrow batch. A final
     min-contraction folds Arrow-batch partials and the multi-probe
     fan-out exactly like the expr leg's groupBy (min is associative).
-    This replaces the broadcast-join fan-out whose per-pair interpreted
-    HOF cosine dominates the corpus scan at scale (|cell| x |batch in
-    cell| interpreted folds -> one BLAS matmul per corpus block).
+    It avoids the expr leg's broadcast-join fan-out, whose per-pair
+    interpreted HOF cosine dominates the corpus scan at scale (|cell| x
+    |batch in cell| interpreted folds -> one BLAS matmul per corpus
+    block).
 
     Contract (same as the expr leg): cosine rounded half-up on the binary
     double at ``round_digits`` before thresholding; zero-norm vectors
@@ -1487,26 +1458,17 @@ def incremental_semantic_dedup_from_index(
     Returns (batch_id, status, canonical_id) keyed by the index's own id
     column.
     """
-    import json
-    import os
-
     from s4hanaconnector_spark.operators.similarity import (
-        _auto_assignment,
-        _fs_read_text,
+        _index_assigner,
         _index_tombstones,
+        _read_index_meta,
         _read_postings,
-        cell_assigner,
     )
 
-    meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
+    meta = _read_index_meta(spark, path)
     id_col, vec = meta["c_id"], meta["vec"]
     round_digits = meta["round_digits"]
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    assignment = meta.get("assignment") or _auto_assignment(centroids)
-    assign = cell_assigner(
-        None, n_centroids=meta["n_centroids"], c_id=id_col, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
-    )
+    assign = _index_assigner(spark, path, meta)
     b_cells = (
         assign(batch.select(id_col, vec), id_col, n_assign)
         .select(F.col(id_col).alias("batch_id"), F.col(vec).alias("__bv"), "__cell")
@@ -1633,19 +1595,19 @@ def substring_duplication(
     Scale shape is ngram_coverage's: row-local fingerprint selection ->
     explode (~2·chars/w rows per doc) -> per-fp document frequency as a
     COUNT WINDOW over the fp partitioning -> groupBy(doc). Never pairwise;
-    linear in corpus chars. Same r12 rewrite as ngram_coverage: the old
-    groupBy(fp) + join-back evaluated the ENTIRE winnowing subtree (one
-    md5 per char position — the operator's dominant cost) twice, once per
-    join input; the window computes the identical df_count from one
-    subtree evaluation and one exchange of the (doc, fp) rows.
+    linear in corpus chars. As in ngram_coverage, a groupBy(fp) +
+    join-back would evaluate the ENTIRE winnowing subtree (one md5 per
+    char position — the operator's dominant cost) twice, once per join
+    input; the window computes the identical df_count from one subtree
+    evaluation and one exchange of the (doc, fp) rows.
     Returns (doc, total_fps, dup_fps, coverage)."""
     from pyspark.sql import Window as W
 
     fps = winnowed_fingerprints(df, text_col, id_col, k, w)
     return (
-        # isNotNull replicates the old INNER join exactly: a null-text doc
+        # isNotNull keeps INNER-join semantics exactly: a null-text doc
         # fingerprints to [null] (md5(null) = null), and a null key never
-        # joined — but a window PARTITION groups nulls together and would
+        # joins — but a window PARTITION groups nulls together and would
         # keep the row, changing the output for null-text documents
         fps.filter(F.col("fp").isNotNull())
         .withColumn("df_count", F.count(F.lit(1)).over(W.partitionBy("fp")))

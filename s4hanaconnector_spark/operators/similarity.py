@@ -29,13 +29,13 @@ from pyspark.sql import functions as F
 
 def _vec_matrix(arr):
     """(rows x dims) float64 matrix from an Arrow ``list<float>`` /
-    ``list<double>`` column — the r12 Python-boundary fast path shared by
+    ``list<double>`` column — the Python-boundary fast path shared by
     every vectorized (mapInArrow / applyInArrow) operator here and in
     operators/dedup.py. The flat values buffer is read zero-copy and
     reshaped, and the float32 -> float64 widening is exact, so the result
-    is bit-identical to the old per-row ``np.asarray(v, float64)``
-    conversion (measured 10x faster on a 200k x 64 batch). Ragged or
-    null-bearing columns fall back to the per-row path."""
+    is bit-identical to a per-row ``np.asarray(v, float64)`` conversion
+    (measured 10x faster on a 200k x 64 batch). Ragged or null-bearing
+    columns fall back to the per-row path."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -95,13 +95,11 @@ def brute_force_topk(
     is scanned once and never shuffled until the (tiny) ranked output.
     Cosine is rounded before ranking (with id tiebreak) so the k-frontier
     is deterministic across engines/float orders."""
-    from pyspark.sql import Window as W
-
-    # r13 (guide §4.1): norms are per-ROW quantities — materialize each
-    # side's norm BEFORE the join so per-PAIR work is one dot + divide;
-    # inline, the corpus norm re-folded per query and the query norm per
-    # candidate (higher-order lambdas are interpreted, no CSE). Same float
-    # ops in the same order (dot / (qn * cn)) -> bit-identical cosine.
+    # norms are per-ROW quantities — materialize each side's norm BEFORE
+    # the join so per-PAIR work is one dot + divide; inline, the corpus
+    # norm re-folds per query and the query norm per candidate
+    # (higher-order lambdas are interpreted, no CSE). Same float ops in the
+    # same order (dot / (qn * cn)) -> bit-identical cosine.
     q = queries.select(
         F.col(q_id), F.col(vec).alias("__qv"), _norm(F.col(vec)).alias("__qn")
     )
@@ -114,6 +112,16 @@ def brute_force_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         q_id, c_id, cos.alias("cosine")
     ).filter(F.col(q_id) != F.col(c_id))
+    return _rank_topk(scored, k, q_id, c_id)
+
+
+def _rank_topk(scored: DataFrame, k: int, q_id: str, c_id: str) -> DataFrame:
+    """The ranked tail every top-k rung shares: per query, the ``k`` best
+    ``cosine`` rows with a ``c_id`` tiebreak — cosines arrive rounded, so
+    the k-frontier is engine-independent. The window on ``q_id`` is the
+    rung's only hash exchange. Returns (q_id, c_id, cosine, rn)."""
+    from pyspark.sql import Window as W
+
     w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -139,16 +147,16 @@ def kmeans_centroids(
     an index-BUILD-time cost, not a query-time one. Training runs on a
     seeded sample (at 100 TB, fit on ~1M sampled vectors, never the full
     corpus); the resulting centroid table is tiny (sqrt(N) rows) and is
-    broadcast by ivf_topk, so cell assignment stays a single projection
+    collected once by ivf_topk, so cell assignment stays a single projection
     pass over the corpus. Seeded KMeans is run-to-run deterministic, but
     NOT engine-portable like the prefix quantizer the declared oracle
-    uses — which is exactly why both exist (VERDICT r3 #8).
+    uses — which is exactly why both exist.
 
-    r12 build-latency optimization (guide §4.2 — hand bounded batches to
-    native vectorized code): when the TRAINING SAMPLE is small enough to
-    fit comfortably on the driver (<= ``_DRIVER_FIT_MAX_ROWS`` rows — the
-    planner's own sizing rule of ~100 rows/centroid stays under it until
-    ~2.6k centroids), the fit runs as seeded numpy k-means++ / Lloyd on
+    Build-latency fast path (hand bounded batches to native vectorized
+    code): when the TRAINING SAMPLE is small enough to fit comfortably on
+    the driver (<= ``_DRIVER_FIT_MAX_ROWS`` rows — the planner's own
+    sizing rule of ~100 rows/centroid stays under it until ~2.6k
+    centroids), the fit runs as seeded numpy k-means++ / Lloyd on
     the collected sample instead of spark.ml — same sample, same
     iteration cap, one collect job in place of ~2 Spark jobs per
     iteration. Larger fits (the true 100 TB regime: sqrt(N) centroids x
@@ -250,18 +258,17 @@ def _lloyd_fit(X, k: int, seed: int, max_iter: int):
     return centers
 
 
-# cell_assigner's literal-delivery / auto-backend threshold. r13 (guide
-# §1.2 "measure first"): was 2048 on the assumption that the constant-folded
-# literal expr argmax is fastest until the plan-size cliff; an interleaved
-# A/B at 16/48/96/141 cells x {x10, x100} corpora measured the Arrow matmul
-# backend ahead of the interpreted HOF argmax from ~48 cells up (141 cells
-# at the x100 corpus: expr 9.1 s vs arrow 0.9 s — the HOF path pays
-# O(cells x dims) interpreted dispatches and a cells-sized struct
-# array_sort PER ROW). 64 keeps every declared query (all pin
-# n_centroids=16, <= 44 cells for sqrt-sized paths at the driver-checked
-# SFs) on the expr literal path — the oracle-replicable semantics
-# reference — while production-sized quantizers (sqrt(N) cells) get the
-# vectorized backend.
+# cell_assigner's auto-backend threshold and the ceiling of the literal
+# expr backend. An interleaved A/B at 16/48/96/141 cells x {x10, x100}
+# corpora measured the Arrow matmul backend ahead of the interpreted HOF
+# argmax from ~48 cells up (141 cells at the x100 corpus: expr 9.1 s vs
+# arrow 0.9 s — the HOF path pays O(cells x dims) interpreted dispatches
+# and a cells-sized struct array_sort PER ROW). 64 keeps every declared
+# query (all pin n_centroids=16, <= 44 cells for sqrt-sized paths at the
+# driver-checked SFs) on the expr literal path — the oracle-replicable
+# semantics reference — while production-sized quantizers (sqrt(N) cells)
+# get the vectorized backend. Past it the literal would also inline
+# n_centroids x d ``F.lit`` nodes into every plan.
 _LITERAL_CENTROID_MAX = 64
 
 
@@ -276,7 +283,6 @@ def ivf_topk(
     vec: str = "embedding",
     round_digits: int = 6,
     centroids: DataFrame | None = None,
-    literal_centroid_max: int = _LITERAL_CENTROID_MAX,
     assignment: str = "auto",
     rescore: str = "float",
 ) -> DataFrame:
@@ -289,18 +295,20 @@ def ivf_topk(
     vectors) so the DuckDB oracle can replicate the index bit-for-bit; the
     PRODUCTION path passes ``centroids=kmeans_centroids(corpus, ...)``
     (``(cent_id, <vec>)`` rows) — sampled KMeans with ~sqrt(N) cells. Either
-    way the centroid table is broadcast and cell assignment is a pure
+    way the centroid table is collected once and cell assignment is a pure
     projection over one corpus pass (no shuffle). Affinities are rounded
     before ranking with id tiebreaks so cell boundaries and the k-frontier
     are engine-independent. Recall against the exact rung is a MEASURED
     contract: the ``similarity_ivf_recall`` declared query gates it.
 
     ``assignment`` picks the argmax backend:
-      * ``"expr"`` — Catalyst higher-order functions, the semantics
-        REFERENCE (every rounding/NaN/tiebreak rule is one shared
-        expression, oracle-replicable bit for bit);
-      * ``"arrow"`` — a numpy-vectorized ``mapInPandas`` argmax (one
-        BLAS matmul per Arrow batch). Interpreted HOF lambdas cost
+      * ``"expr"`` — Catalyst higher-order functions over the centroid
+        table inlined as a literal array, the semantics REFERENCE (every
+        rounding/NaN/tiebreak rule is one shared expression,
+        oracle-replicable bit for bit). At most ``_LITERAL_CENTROID_MAX``
+        (64) cells; past that it raises ``ValueError``;
+      * ``"arrow"`` — a numpy-vectorized ``mapInArrow`` argmax (one BLAS
+        matmul per Arrow batch). Interpreted HOF lambdas cost
         ~O(n_centroids x dims) interpreter dispatches per ROW — the x100
         ladder measured the expr backend at 2500 cells x 200k vectors at
         730 s (linear, but wide) — while the Arrow backend does the same
@@ -309,13 +317,10 @@ def ivf_topk(
         float64 summation ORDER differs sub-ulp from the expr fold, so
         cross-backend equality holds after rounding except on
         ~1e-10-of-a-boundary knife edges (fixture-pinned by tests).
-      * ``"auto"`` — expr while the centroid table fits the literal
-        delivery (≤ ``literal_centroid_max``), Arrow past it (where the
-        per-row interpreter cost dominates). r13: the threshold default
-        dropped 2048 -> 64 on measurement (see _LITERAL_CENTROID_MAX) —
-        every declared query pins 16 cells and stays on the expr/oracle
-        semantics; sqrt(N)-sized production quantizers now get the
-        vectorized backend.
+      * ``"auto"`` — expr up to 64 cells, Arrow past it (where the per-row
+        interpreter cost dominates): every declared query pins 16 cells
+        and stays on the expr/oracle semantics, sqrt(N)-sized production
+        quantizers get the vectorized backend.
 
     ``rescore`` picks the candidate-scoring representation:
       * ``"float"`` — candidates rescored against the raw corpus vectors;
@@ -331,8 +336,7 @@ def ivf_topk(
     cells, probes = ivf_assign(
         queries, corpus, n_centroids=n_centroids, n_probe=n_probe,
         q_id=q_id, c_id=c_id, vec=vec, round_digits=round_digits,
-        centroids=centroids, literal_centroid_max=literal_centroid_max,
-        assignment=assignment,
+        centroids=centroids, assignment=assignment,
     )
     return _rescore(cells, probes, k, q_id, c_id, vec, round_digits, rescore)
 
@@ -347,39 +351,24 @@ def ivf_assign(
     vec: str = "embedding",
     round_digits: int = 6,
     centroids: DataFrame | None = None,
-    literal_centroid_max: int = _LITERAL_CENTROID_MAX,
     assignment: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """The IVF index WITHOUT the rescore tail: ``cells`` = one row per
     corpus vector ``(c_id, vec, __cell)`` (its nearest cell), ``probes`` =
     ``(q_id, __qv, __cell)`` rows (each query x its n_probe nearest cells).
-    Same quantizer resolution, delivery thresholding, and backend choice
-    as ivf_topk — which is now assign + _rescore over this function's
-    output. Composed rungs (IVF x PQ) and cell-partitioned operators
-    (semantic dedup) consume the assignment directly."""
+    Same quantizer resolution and backend choice as ivf_topk — which is
+    assign + _rescore over this function's output. Composed rungs
+    (IVF x PQ) and cell-partitioned operators (semantic dedup) consume the
+    assignment directly."""
     assign = cell_assigner(
         corpus, n_centroids=n_centroids, c_id=c_id, vec=vec,
-        round_digits=round_digits, centroids=centroids,
-        literal_centroid_max=literal_centroid_max, assignment=assignment,
+        round_digits=round_digits, centroids=centroids, assignment=assignment,
     )
     cells = assign(corpus.select(c_id, vec), c_id, 1)
     probes = assign(queries.select(q_id, vec), q_id, n_probe).withColumnRenamed(
         vec, "__qv"
     )
     return cells, probes
-
-
-
-def _auto_assignment(centroids: DataFrame) -> str:
-    """The ONE auto-resolution rule for the cell-assignment backend,
-    shared by build_ann_index (persisting the resolved name),
-    append_to_ann_index and the from-index dedup readers (reconstructing
-    it for indexes written before the meta key existed). Mirrors
-    cell_assigner's auto branch at its default ``literal_centroid_max`` —
-    centralized so the rule cannot drift per call site (a drifted copy
-    re-opens the exact rounding-tie append/build divergence the persisted
-    backend closes)."""
-    return "expr" if centroids.count() <= _LITERAL_CENTROID_MAX else "arrow"
 
 
 def cell_assigner(
@@ -389,19 +378,26 @@ def cell_assigner(
     vec: str = "embedding",
     round_digits: int = 6,
     centroids: DataFrame | None = None,
-    literal_centroid_max: int = _LITERAL_CENTROID_MAX,
     assignment: str = "auto",
 ):
-    """Resolve the coarse quantizer ONCE (centroid table, delivery mode,
-    argmax backend) and return ``assign(df, id_col, keep_rn) -> DataFrame``
+    """Resolve the coarse quantizer ONCE (centroid table and argmax
+    backend) and return ``assign(df, id_col, keep_rn) -> DataFrame``
     mapping any ``(id, vec)`` frame to ``(id, vec, __cell)`` rows — the
     nearest ``keep_rn`` cells per row under the shared rounding/NaN/tiebreak
-    contract. This is the extraction seam of :func:`ivf_topk`'s assignment
-    stage (r9: the composed IVF x PQ rung and the semantic-dedup operator
-    both need cell assignment without the rescore tail); every behavior
-    comment below is the original ivf_topk text, unchanged. ``corpus`` is
+    contract. This is the assignment seam of :func:`ivf_topk`, the
+    composed IVF x PQ rung, the persisted index and the semantic-dedup
+    operators. The returned function carries the resolved backend as
+    ``assign.backend`` (``"expr"`` or ``"arrow"``; see :func:`ivf_topk`
+    for the choice), which :func:`build_ann_index` persists. ``corpus`` is
     only consulted for the default prefix quantizer — callers that pass
-    ``centroids`` (e.g. probing a PERSISTED index) may pass None."""
+    ``centroids`` (e.g. probing a PERSISTED index) may pass None.
+
+    Whatever the backend, the centroid table is collected to the driver
+    exactly once: it is ~sqrt(N) rows by design, and both backends need
+    its rows — the expr backend inlines them as a literal array, the
+    Arrow backend ships them in the task closure."""
+    if assignment not in ("auto", "expr", "arrow"):
+        raise ValueError(f"unknown assignment backend: {assignment}")
     if centroids is not None:
         cent = centroids.select(
             F.col("cent_id").alias("__cent_id"), F.col(vec).alias("__cent")
@@ -412,114 +408,56 @@ def cell_assigner(
             .limit(n_centroids)
             .select(F.col(c_id).alias("__cent_id"), F.col(vec).alias("__cent"))
         )
-
-    # Cell assignment is a ROW-LOCAL argmax over the centroid table — zero
-    # corpus shuffle in BOTH delivery modes. The previous shape (broadcast
-    # crossJoin -> row_number window partitioned by the row id) pushed
-    # |corpus| x n_centroids rows through a full shuffle-sort just to keep
-    # one row per id; at the x10 bench tier that window dominated the query.
-    # Semantics are pinned identical: affinity rounded to ``round_digits``
-    # BEFORE ranking, ties to the lowest cent_id, NaN affinities (zero-norm
-    # vectors) rank first exactly as the window's DESC NaN-greatest order
-    # did.
-    #
-    # Centroid DELIVERY is thresholded (VERDICT r7 wrong #1): up to
-    # ``literal_centroid_max`` cells the table is inlined as a literal
-    # Catalyst array (fastest — no join at all, constant-folds into the
-    # projection). Past the threshold a literal tree would be
-    # n_centroids x d ``F.lit`` nodes — at the planner's own sqrt(N) sizing,
-    # a 1B-vector corpus means ~31.6k centroids and a multi-million-node
-    # plan Catalyst must analyze and serialize to every task: a driver-side
-    # scale cliff. There the SAME struct array is built as DATA — a global
-    # ``collect_list`` over the (sqrt(N)-row) centroid table, attached to
-    # each corpus row by a broadcast of that single row — so centroid bytes
-    # travel once per executor in a broadcast payload instead of inside the
-    # plan. The downstream argmax expression is literally shared between the
-    # two modes, so the rounding/NaN/tiebreak contract cannot drift.
-    if assignment not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown assignment backend: {assignment}")
-    mode = assignment
-    use_literal = False
-    head: list = []
-    if mode == "auto":
-        # ONE centroid job decides the delivery AND feeds whichever backend
-        # wins (VERDICT r8 wrong #4: the take() probe plus the Arrow path's
-        # collect() were two jobs over the same table). A full collect is
-        # bounded by design — the centroid table is ~sqrt(N) rows, and the
-        # Arrow backend would collect all of it anyway.
-        head = cent.collect()
-        use_literal = len(head) <= literal_centroid_max
-        mode = "expr" if use_literal else "arrow"
-    elif mode == "expr":
-        # explicit expr keeps the BOUNDED probe (take, not limit+count):
-        # past the threshold this backend switches to the collect_list DATA
-        # delivery, which never needs driver-side centroid rows — collecting
-        # them here would be wasted driver memory at high cell counts.
-        head = cent.take(literal_centroid_max + 1)
-        use_literal = len(head) <= literal_centroid_max
-
-    if mode == "arrow":
-        cent_rows = sorted(
-            (r["__cent_id"], [float(x) for x in r["__cent"]])
-            for r in (head or cent.collect())
+    cent_rows = sorted(
+        (r["__cent_id"], [float(x) for x in r["__cent"]]) for r in cent.collect()
+    )
+    if assignment == "auto":
+        assignment = (
+            "expr" if len(cent_rows) <= _LITERAL_CENTROID_MAX else "arrow"
         )
+    elif assignment == "expr" and len(cent_rows) > _LITERAL_CENTROID_MAX:
+        raise ValueError(
+            f"assignment='expr' inlines the centroid table into the plan and "
+            f"takes at most {_LITERAL_CENTROID_MAX} cells, got "
+            f"{len(cent_rows)}; use assignment='arrow' or 'auto'"
+        )
+
+    if assignment == "arrow":
 
         def assign(df: DataFrame, id_col: str, keep_rn: int) -> DataFrame:
             return _arrow_assign(df, id_col, vec, keep_rn, cent_rows, round_digits)
 
+        assign.backend = "arrow"
         return assign
 
-    if use_literal:
-        cent_rows = sorted(
-            (r["__cent_id"], [float(x) for x in r["__cent"]]) for r in head
-        )
-        import math as _m
+    # Cell assignment is a ROW-LOCAL argmax over the literal centroid array
+    # — no join at all, zero corpus shuffle. A broadcast crossJoin ->
+    # row_number window partitioned by the row id would push |corpus| x
+    # n_centroids rows through a full shuffle-sort just to keep one row per
+    # id. Semantics: affinity rounded to ``round_digits`` BEFORE ranking,
+    # ties to the lowest cent_id, NaN affinities (zero-norm vectors) rank
+    # first exactly as a DESC NaN-greatest window order would.
+    import math as _m
 
-        cent_lit = F.array(
-            *[
-                F.struct(
-                    F.lit(cid).cast("bigint").alias("cid"),
-                    F.array(*[F.lit(x) for x in cv]).alias("cv"),
-                    F.lit(_m.sqrt(sum(x * x for x in cv))).alias("cnorm"),
-                )
-                for cid, cv in cent_rows
-            ]
-        )
-        cent_arr = None
-    else:
-        # one row: array_sort on the struct orders by its FIRST field (cid),
-        # matching the literal path's sorted(cent_rows); cv is widened to
-        # double exactly as float(x)/F.lit would; cnorm is the same
-        # left-to-right double fold _m.sqrt(sum(x*x)) computes
-        cent_arr = cent.groupBy().agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__cent_id").cast("bigint").alias("cid"),
-                        F.transform(
-                            F.col("__cent"), lambda x: x.cast("double")
-                        ).alias("cv"),
-                        _norm(F.col("__cent")).alias("cnorm"),
-                    )
-                )
-            ).alias("__cents")
-        )
+    cent_lit = F.array(
+        *[
+            F.struct(
+                F.lit(cid).cast("bigint").alias("cid"),
+                F.array(*[F.lit(x) for x in cv]).alias("cv"),
+                F.lit(_m.sqrt(sum(x * x for x in cv))).alias("cnorm"),
+            )
+            for cid, cv in cent_rows
+        ]
+    )
 
     def assign(df: DataFrame, id_col: str, keep_rn: int) -> DataFrame:
         # materialize the row norm FIRST: higher-order lambdas re-evaluate
         # referenced subtrees per element (repo-wide perf rule), so _norm
         # inside the transform would recompute per centroid
-        if use_literal:
-            with_norm = df.select(
-                id_col, vec, _norm(F.col(vec)).alias("__vnorm"),
-                cent_lit.alias("__cents"),
-            )
-        else:
-            # broadcast of a single row -> BroadcastNestedLoopJoin; the
-            # corpus side stays un-shuffled (plan-tested)
-            with_norm = df.crossJoin(F.broadcast(cent_arr)).select(
-                id_col, vec, _norm(F.col(vec)).alias("__vnorm"), "__cents"
-            )
+        with_norm = df.select(
+            id_col, vec, _norm(F.col(vec)).alias("__vnorm"),
+            cent_lit.alias("__cents"),
+        )
         aff = lambda c: F.round(  # noqa: E731
             _dot(F.col(vec), c["cv"]) / (F.col("__vnorm") * c["cnorm"]), round_digits
         )
@@ -540,8 +478,8 @@ def cell_assigner(
             id_col, vec, F.explode(F.transform(picked, lambda s: s["cid"])).alias("__cell")
         )
 
+    assign.backend = "expr"
     return assign
-
 
 
 def _rescore(
@@ -564,8 +502,6 @@ def _rescore(
     symmetric int8 code before scoring (asymmetric: the probe side stays
     float) — row-local, two-step projection so the max-|x| subtree is
     materialized once per row, one shared encoding (quantize_int8)."""
-    from pyspark.sql import Window as W
-
     if rescore == "int8":
         cells = cells.select(
             "__cell",
@@ -579,9 +515,9 @@ def _rescore(
         )
     elif rescore != "float":
         raise ValueError(f"unknown rescore mode: {rescore}")
-    # r13 (guide §4.1): hoist the per-row norms out of the per-candidate
-    # cosine — the candidate-side norm re-folded once per probing query and
-    # the query norm once per candidate. Identical float ops/order.
+    # hoist the per-row norms out of the per-candidate cosine — inline, the
+    # candidate-side norm re-folds once per probing query and the query
+    # norm once per candidate. Identical float ops/order.
     cells = cells.withColumn("__cn", _norm(F.col(vec)))
     probes = probes.withColumn("__qn", _norm(F.col("__qv")))
     cos = F.round(
@@ -593,12 +529,7 @@ def _rescore(
         .filter(F.col(q_id) != F.col(c_id))
         .select(q_id, c_id, cos.alias("cosine"))
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(q_id, c_id, "cosine", "rn")
-    )
+    return _rank_topk(scored, k, q_id, c_id)
 
 
 def _arrow_assign(
@@ -611,13 +542,13 @@ def _arrow_assign(
 ) -> DataFrame:
     """Vectorized cell assignment: one dense float64 matmul per Arrow batch
     instead of O(n_centroids x dims) interpreted lambda dispatches per row.
-    Row-local like the expr backend (mapInPandas adds no shuffle), same
+    Row-local like the expr backend (mapInArrow adds no shuffle), same
     contract: affinity rounded HALF_UP at ``round_digits`` before ranking,
     ties to the lowest cent_id (cent_rows arrive cid-sorted, and numpy's
     stable argsort keeps first-index-wins on equal keys), NaN affinities
     (zero-norm vectors) rank first.
 
-    Boundary caveat (two distinct classes, ADVICE r8):
+    Boundary caveat (two distinct classes):
       * reduction order — numpy's pairwise/BLAS summation differs sub-ulp
         from the expr fold, so a cosine within ~1e-10 of a rounding
         boundary can round differently across backends;
@@ -628,13 +559,13 @@ def _arrow_assign(
         floor(|x|*scale+0.5) rounds the BINARY double, which for such a
         repr sits just below the half and rounds down (0.123456).
     Both classes only move affinities sitting exactly on a cell boundary;
-    since ``assignment='auto'`` switches backends at literal_centroid_max,
-    boundary-vector cell assignment can depend on centroid count. A
-    per-element Python-decimal emulation of BigDecimal would serialize the
-    (rows x cells) affinity matrix through the interpreter — exactly the
-    cost this backend exists to avoid — so the contract is DOCUMENTED and
-    the shipped default is recall-gated where it actually engages: the
-    x100 ladder's >2048-cell rung measures the Arrow backend's recall
+    since ``assignment='auto'`` switches backends past
+    ``_LITERAL_CENTROID_MAX`` cells, boundary-vector cell assignment can
+    depend on centroid count. A per-element Python-decimal emulation of
+    BigDecimal would serialize the (rows x cells) affinity matrix through
+    the interpreter — exactly the cost this backend exists to avoid — so
+    the contract is DOCUMENTED and the shipped default is recall-gated where it actually engages: the
+    x100 ladder's 2500-cell rung measures the Arrow backend's recall
     floor against exact brute force (test_scale_smoke.py), and the
     fixture tests pin expr==arrow row equality away from boundaries."""
     import numpy as np
@@ -649,31 +580,28 @@ def _arrow_assign(
 
     n_cents = cmat.shape[0] if cmat.ndim == 2 else 0
 
-    # r12: mapInArrow instead of mapInPandas — the vector column enters as
-    # one contiguous Arrow values buffer, so the (rows x dims) matrix is a
-    # zero-copy reshape (+ exact float32->float64 widening) instead of a
-    # per-row Python list conversion (measured 10x on a 200k x 64 batch).
-    # Affinity math, rounding and tie rules are bit-identical to the
-    # mapInPandas version.
+    # mapInArrow: the vector column enters as one contiguous Arrow values
+    # buffer, so the (rows x dims) matrix is a zero-copy reshape (+ exact
+    # float32->float64 widening) instead of a per-row Python list
+    # conversion (measured 10x on a 200k x 64 batch).
     #
-    # r13 (guide §4.2 / §2.3 — touch fewer bytes): this box (like any
-    # machine running one Python worker per core) is MEMORY-BANDWIDTH
-    # bound under task concurrency, not flops bound: 32 concurrent
-    # single-threaded dgemms measured ~21 Gflop/s machine-wide vs ~120
-    # Gflop/s for one process alone. The old shape materialized the full
-    # (rows x n_cents) float64 affinity matrix ~6 times per batch (aff,
-    # abs, round, where, -r, argsort indices — ~900 MB of DRAM traffic
-    # per 7.5k-row task at 2500 cells) and stable-argsorted every row
-    # where the corpus side only needs the argmax. The keep_rn == 1 path
-    # now runs a BLOCKED running argmax: per centroid block, one gemm
-    # into a ~8 MB block that is rounded IN PLACE and folded into the
-    # running (best, cid) — the full matrix never exists, the per-element
-    # arithmetic is unchanged (same multiply-then-divide denominator,
-    # same HALF_UP-on-the-binary-double rounding, NaN -> +inf), and ties
-    # keep the LOWEST cent_id exactly like the stable argsort did
-    # (within a block np.argmax returns the first maximum; across blocks
-    # the strictly-greater update keeps the earlier block's pick).
-    # Measured: the x100 assignment rung 47 s -> see OPTIMIZATION_r13.md.
+    # One Python worker per core makes this MEMORY-BANDWIDTH bound under
+    # task concurrency, not flops bound: 32 concurrent single-threaded
+    # dgemms measured ~21 Gflop/s machine-wide vs ~120 Gflop/s for one
+    # process alone. Materializing the full (rows x n_cents) float64
+    # affinity matrix costs ~6 passes per batch (aff, abs, round, where,
+    # -r, argsort indices — ~900 MB of DRAM traffic per 7.5k-row task at
+    # 2500 cells), and the corpus side only needs the argmax. So the
+    # keep_rn == 1 path runs a BLOCKED running argmax: per centroid block,
+    # one gemm into a ~8 MB block that is rounded IN PLACE and folded into
+    # the running (best, cid) — the full matrix never exists, the
+    # per-element arithmetic is the argsort path's (same multiply-then-
+    # divide denominator, same HALF_UP-on-the-binary-double rounding,
+    # NaN -> +inf), and ties keep the LOWEST cent_id exactly like the
+    # stable argsort (within a block np.argmax returns the first maximum;
+    # across blocks the strictly-greater update keeps the earlier block's
+    # pick). A row whose every affinity is -inf never updates, so it
+    # starts on cids[0] — the argsort path's pick for an all-equal row.
     def _rounded_block(V, vnorm, lo, hi):
         with np.errstate(divide="ignore", invalid="ignore"):
             aff = V @ cmat[lo:hi].T
@@ -704,7 +632,7 @@ def _arrow_assign(
             if keep_rn == 1:
                 cblock = max(128, int(8e6 / (8 * max(rows, 1))))
                 best = np.full(rows, -np.inf)
-                best_cell = np.zeros(rows, dtype=np.int64)
+                best_cell = np.full(rows, cids[0], dtype=np.int64)
                 rr = np.arange(rows)
                 for lo in range(0, n_cents, cblock):
                     hi = min(lo + cblock, n_cents)
@@ -715,7 +643,7 @@ def _arrow_assign(
                     best[upd] = vals[upd]
                     best_cell[upd] = cids[lo + idx[upd]]
                 # no row repeat at keep_rn == 1: ids/vectors pass through
-                # untouched (the old identity ``take`` copied both columns)
+                # untouched, with no ``take`` copy of either column
                 yield pa.RecordBatch.from_arrays(
                     [ids, va, pa.array(best_cell)],
                     names=[id_col, vec, "__cell"],
@@ -790,8 +718,8 @@ def lsh_bucketed_pairs(
             .filter(F.col("__bn") <= max_bucket)
             .drop("__bn")
         )
-    # r13 (guide §4.1): one norm per row before the self-join instead of
-    # two norm folds per candidate pair. Identical float ops/order.
+    # one norm per row before the self-join instead of two norm folds per
+    # candidate pair. Identical float ops/order.
     b = b.withColumn("__n", _norm(F.col(vec)))
     a, c = b.alias("a"), b.alias("b")
     cos = _dot(F.col(f"a.{vec}"), F.col(f"b.{vec}")) / (
@@ -860,8 +788,6 @@ def quantized_topk(
     rounding so the k-frontier is engine-independent. Returns
     (q_id, c_id, cosine, rn) where cosine is computed against the
     quantized corpus vector."""
-    from pyspark.sql import Window as W
-
     q = queries.select(
         F.col(q_id), F.col(vec).alias("__qv"), _norm(F.col(vec)).alias("__qn")
     )
@@ -869,8 +795,8 @@ def quantized_topk(
     # column FIRST — inline, the max subtree re-evaluates per element in
     # the interpreted lambda (O(dims²)/row; 2.5x wall on the bench corpus).
     # The encoding itself is quantize_int8 — ONE definition, no drift.
-    # r13 (guide §4.1): the quantized-vector norm is also per-row —
-    # materialized once instead of once per (q, c) pair.
+    # The quantized-vector norm is also per-row — materialized once
+    # instead of once per (q, c) pair.
     c = corpus.select(
         F.col(c_id),
         F.col(vec).alias("__v"),
@@ -886,12 +812,7 @@ def quantized_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         q_id, c_id, cos.alias("cosine")
     ).filter(F.col(q_id) != F.col(c_id))
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(q_id, c_id, "cosine", "rn")
-    )
+    return _rank_topk(scored, k, q_id, c_id)
 
 
 def pq_subspace_codebooks(
@@ -953,44 +874,51 @@ def pq_subspace_codebooks(
     ]
 
 
+def _pq_codes(V, cmats, scale: float):
+    """The ONE PQ encoding rule, on a (rows × dims) float64 batch matrix:
+    per subspace, one (rows × codes) squared-L2 distance matrix (an
+    interpreted per-row fold measured ~8 s for 2000 rows × 512
+    code-distances on one core), and the codeword with the minimum
+    distance rounded HALF_UP at ``scale`` = 10**round_digits, ties to the
+    lowest code id (numpy argmin is first-occurrence and codebooks arrive
+    code-ordered) — the rule the declared oracle replays. Boundary caveat
+    identical to :func:`_arrow_assign` (reduction order +
+    binary-vs-shortest-decimal rounding, only on exact half-ties of a
+    distance at digit round_digits+1) — documented there, recall-gated by
+    ``similarity_pq_recall``. Returns (rows × m) int32 codes."""
+    import numpy as np
+
+    sub = cmats[0].shape[1]
+    codes = np.empty((V.shape[0], len(cmats)), dtype=np.int32)
+    for s, cm in enumerate(cmats):
+        diff = V[:, None, s * sub:(s + 1) * sub] - cm[None, :, :]
+        # distances are >= 0: plain floor(x*scale+0.5) IS half-up
+        D = (diff * diff).sum(axis=2)
+        codes[:, s] = np.floor(D * scale + 0.5).argmin(axis=1)
+    return codes
+
+
 def _arrow_pq_encode(
-    df: DataFrame,
+    cells: DataFrame,
     id_col: str,
     vec: str,
     codebooks: list[list[list[float]]],
     round_digits: int,
-    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Vectorized PQ encode: per Arrow batch, one (rows × codes) squared-L2
-    distance matrix per subspace instead of m × n_codes interpreted lambda
-    folds per ROW (the expr encode measured ~8 s for 2000 rows × 512
-    code-distances on one core — per-row interpreter width, the same mode
-    as IVF's expr assignment at high cell counts). Same contract as the
-    expr encode: distance rounded HALF_UP at ``round_digits`` before the
-    argmin, ties to the lowest code id (numpy argmin is first-occurrence
-    and codebooks arrive code-ordered). Boundary caveat identical to
-    :func:`_arrow_assign` (reduction order + binary-vs-shortest-decimal
-    rounding, only on exact half-ties of a distance at digit
-    round_digits+1) — documented there, recall-gated by
-    ``similarity_pq_recall``."""
+    """The PQ encoder as a row-local mapInArrow pass over cell-assigned
+    ``(id_col, vec, __cell)`` rows: ``(id_col, __codes, __cell)`` out —
+    exactly the (id, codes, cell) of an inverted list — with codes by
+    :func:`_pq_codes` and the cell riding through untouched."""
     import numpy as np
 
     m = len(codebooks)
-    sub = len(codebooks[0][0])
     cmats = [np.array(book, dtype=np.float64) for book in codebooks]
     scale = 10.0 ** round_digits
-    id_type = df.schema[id_col].dataType.simpleString()
-    # ``keep`` columns (e.g. the IVF ``__cell`` of the composed rung) ride
-    # through the encode untouched — same row order, no extra pass
-    keep_decl = "".join(
-        f", `{c}` {df.schema[c].dataType.simpleString()}" for c in keep
-    )
-    out_schema = f"`{id_col}` {id_type}, `__codes` array<int>{keep_decl}"
+    id_type = cells.schema[id_col].dataType.simpleString()
+    out_schema = f"`{id_col}` {id_type}, `__codes` array<int>, `__cell` bigint"
 
-    # r12: mapInArrow — zero-copy matrix ingestion (_vec_matrix) and the
-    # codes emitted as one Arrow list column over a flat buffer instead of
-    # a Python list of numpy rows. Distance math and the rounded-argmin
-    # contract are unchanged.
+    # zero-copy matrix ingestion (_vec_matrix); the codes leave as one
+    # Arrow list column over a flat buffer, not a Python list of rows
     def gen(batches):
         import pyarrow as pa
 
@@ -998,30 +926,22 @@ def _arrow_pq_encode(
             if batch.num_rows == 0:
                 continue
             V = _vec_matrix(batch.column(batch.schema.get_field_index(vec)))
-            codes = np.empty((V.shape[0], m), dtype=np.int32)
-            for s in range(m):
-                Vs = V[:, s * sub:(s + 1) * sub]
-                diff = Vs[:, None, :] - cmats[s][None, :, :]
-                D = (diff * diff).sum(axis=2)
-                # distances are >= 0: plain floor(x*scale+0.5) IS half-up
-                Dr = np.floor(D * scale + 0.5)
-                codes[:, s] = Dr.argmin(axis=1)
+            codes = _pq_codes(V, cmats, scale)
             n = batch.num_rows
             codes_arr = pa.ListArray.from_arrays(
                 pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
                 pa.array(codes.ravel(), type=pa.int32()),
             )
-            cols = [
-                batch.column(batch.schema.get_field_index(id_col)),
-                codes_arr,
-            ]
-            names = [id_col, "__codes"]
-            for c in keep:
-                cols.append(batch.column(batch.schema.get_field_index(c)))
-                names.append(c)
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(batch.schema.get_field_index(id_col)),
+                    codes_arr,
+                    batch.column(batch.schema.get_field_index("__cell")),
+                ],
+                names=[id_col, "__codes", "__cell"],
+            )
 
-    return df.mapInArrow(gen, out_schema)
+    return cells.mapInArrow(gen, out_schema)
 
 
 def _arrow_pq_score(
@@ -1033,10 +953,9 @@ def _arrow_pq_score(
     round_digits: int,
     q_id: str,
 ) -> DataFrame:
-    """Vectorized PQ encode + ADC score in ONE numpy pass: per batch the
-    corpus rows are encoded (see :func:`_arrow_pq_encode` — same rounded
-    argmin contract), then each query's cosine against the reconstruction
-    is m lookup-table gathers — LUT[s][code] = dot(q_s, codeword) and
+    """PQ encode + ADC score in ONE numpy pass: per batch the corpus rows
+    are encoded (:func:`_pq_codes`), then each query's cosine against the
+    reconstruction is m lookup-table gathers — LUT[s][code] = dot(q_s, codeword) and
     N2[s][code] = |codeword|², both precomputed once from (queries ×
     codebooks). Emits (q_id, id_col, cosine) rows; boundary caveat as
     :func:`_arrow_assign` (the rerank stage re-scores candidates exactly,
@@ -1060,9 +979,8 @@ def _arrow_pq_score(
     qid_type = "bigint" if isinstance(qids[0], int) else "string"
     out_schema = f"`{q_id}` {qid_type}, `{id_col}` {id_type}, `cosine` double"
 
-    # r12: mapInArrow — zero-copy matrix ingestion (_vec_matrix); the
-    # (|Q| x rows) output is assembled with an Arrow ``take`` for the tiled
-    # corpus ids. Encode/LUT/ADC math is unchanged.
+    # zero-copy matrix ingestion (_vec_matrix); the (|Q| x rows) output is
+    # assembled with an Arrow ``take`` for the tiled corpus ids
     def gen(batches):
         import pyarrow as pa
 
@@ -1071,12 +989,7 @@ def _arrow_pq_score(
                 continue
             V = _vec_matrix(batch.column(batch.schema.get_field_index(vec)))
             rows = V.shape[0]
-            codes = np.empty((rows, m), dtype=np.int64)
-            for s in range(m):
-                Vs = V[:, s * sub:(s + 1) * sub]
-                diff = Vs[:, None, :] - cmats[s][None, :, :]
-                D = (diff * diff).sum(axis=2)
-                codes[:, s] = np.floor(D * scale + 0.5).argmin(axis=1)
+            codes = _pq_codes(V, cmats, scale)
             subs = np.arange(m)
             rn2 = n2[subs[None, :], codes].sum(axis=1)  # (rows,)
             # dot[qi, row] = sum_s LUT[qi, s, codes[row, s]]
@@ -1101,7 +1014,8 @@ def _arrow_pq_score(
 def _pq_cb_df(spark, codebooks: list[list[list[float]]]) -> DataFrame:
     """The PQ codebook as a ONE-ROW DataFrame ``__cb`` (per codeword: the
     vector and its precomputed |cw|²) — broadcast DATA delivery for the ADC
-    scoring expression, shared by the plain-PQ and IVF×PQ rungs."""
+    scoring expression of the IVF×PQ rung and the index probe: a literal
+    would cost thousands of py4j F.lit calls per plan BUILD."""
     cb_data = [
         [
             ([float(x) for x in cw], float(sum(x * x for x in cw)))
@@ -1120,8 +1034,7 @@ def _pq_adc_cos(sub: int, round_digits: int) -> Column:
     rounded — as a pure column expression over ``__codes`` (the row's PQ
     codes), ``__qv``/``__qnorm`` (the float query), and ``__cb`` (the
     broadcast codebook row from :func:`_pq_cb_df`). One shared definition so
-    the plain-PQ expr backend and the IVF×PQ candidate scorer cannot
-    drift."""
+    the inline IVF×PQ rung and the persisted-index probe cannot drift."""
 
     def seg(col: Column, s: Column) -> Column:
         return F.slice(col, s * sub + F.lit(1), sub)
@@ -1157,60 +1070,6 @@ def _pq_adc_cos(sub: int, round_digits: int) -> Column:
     return F.round(dotqr / (F.col("__qnorm") * F.sqrt(rn2)), round_digits)
 
 
-def _pq_encode_expr(codebooks: list[list[list[float]]], round_digits: int):
-    """The Catalyst-HOF PQ encoder (semantics REFERENCE backend): returns a
-    function mapping a vector column to its ``array<int>`` PQ codes — per
-    subspace s, argmin over codewords of round(L2²(vec_s, cw), d), ties to
-    the lowest code id. The codebook rides the plan as a LITERAL here:
-    m × n_codes F.lit subtrees are thousands of py4j constructions
-    (measured ~5 s of DRIVER time per invocation at m=16 × 32 codes —
-    why the default backend is Arrow and the ADC scoring ships the same
-    table as broadcast DATA). One shared definition for the plain-PQ and
-    IVF×PQ rungs."""
-    sub = len(codebooks[0][0])
-
-    def seg(col: Column, s: Column) -> Column:
-        return F.slice(col, s * sub + F.lit(1), sub)
-
-    cb_lit = F.array(*[
-        F.array(*[
-            F.struct(
-                F.array(*[F.lit(float(x)) for x in cw]).alias("cw"),
-                F.lit(float(sum(x * x for x in cw))).alias("n2"),
-            )
-            for cw in book
-        ])
-        for book in codebooks
-    ])
-
-    def encode_expr(v: Column) -> Column:
-        return F.transform(
-            cb_lit,
-            lambda book, s: F.array_sort(
-                F.transform(
-                    book,
-                    lambda cwn, code: F.struct(
-                        F.round(
-                            F.aggregate(
-                                F.zip_with(
-                                    seg(v, s), cwn["cw"],
-                                    lambda a, b: (a.cast("double") - b)
-                                    * (a.cast("double") - b),
-                                ),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x,
-                            ),
-                            round_digits,
-                        ).alias("dist"),
-                        code.alias("code"),
-                    ),
-                )
-            )[0]["code"],
-        )
-
-    return encode_expr
-
-
 def pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1222,7 +1081,6 @@ def pq_topk(
     vec: str = "embedding",
     round_digits: int = 6,
     codebooks: list[list[list[float]]] | None = None,
-    encode: str = "auto",
 ) -> DataFrame:
     """Asymmetric product-quantization top-k (FAISS ``PQm`` shape): each
     corpus vector is encoded as ``m`` small code ids — one byte-scale symbol
@@ -1232,90 +1090,30 @@ def pq_topk(
 
     This is the completion of the quantization ladder (int8 SQ = 4×,
     PQ = 16-32×): at 100 TB, PQ codes are what keeps a billion-vector
-    index memory-resident. Plan shape matches the other rungs — the (KiB)
-    codebook rides the plan as a literal, encode + score are row-local
-    projections over ONE corpus pass, broadcast(queries) cross join, and
-    the only hash exchange is the final ranked window on q_id.
+    index memory-resident. Plan shape: encode + score are ONE row-local
+    mapInArrow pass over the corpus (full ADC — per query a (m × n_codes)
+    lookup table of subspace dots is precomputed from the codebooks
+    driver-side, |Q|·m·n_codes·sub flops, and each corpus row's cosine is
+    m LUT gathers; :func:`_arrow_pq_score`); queries are collected to the
+    driver under the same |Q|-is-small contract the other rungs broadcast
+    them by; the only hash exchange is the final ranked window on q_id.
 
     Determinism contract (oracle-replicable): encoding picks per subspace
     the codeword with the minimum L2² distance ROUNDED at ``round_digits``,
     ties to the lowest code id; the final cosine(query, reconstruction) is
     rounded at ``round_digits`` and ranked with an id tiebreak. Recall vs
-    the exact rung is a MEASURED contract (``similarity_pq_recall``).
-
-    ``encode`` picks the encode backend (the same split as ivf_topk's
-    ``assignment``): ``"expr"`` is the Catalyst-HOF semantics reference —
-    every rounding/tie rule one shared expression — but costs
-    O(m × n_codes × dims/m) interpreted dispatches per ROW (measured ~4 ms
-    per row at m=16, n_codes=32); ``"arrow"`` does the same work as dense
-    numpy distance matrices per batch; ``"auto"`` (default) picks arrow
-    once m × n_codes ≥ 128 (where interpreter width dominates), expr below
-    it. Scoring and rerank are shared — only the code ASSIGNMENT differs,
-    within the documented boundary class (:func:`_arrow_pq_encode`)."""
+    the exact rung is a MEASURED contract (``similarity_pq_recall``)."""
     if codebooks is None:
         codebooks = pq_subspace_codebooks(corpus, m, n_codes, c_id, vec)
-    m = len(codebooks)
-    n_codes = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    if encode not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown encode backend: {encode}")
-    if encode == "auto":
-        encode = "arrow" if m * n_codes >= 128 else "expr"
-
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-
-    if encode == "arrow":
-        # full ADC (asymmetric distance computation): encode AND score in
-        # one numpy pass — per query a (m × n_codes) lookup table of
-        # subspace dots is precomputed from the codebooks (driver-side,
-        # |Q|·m·n_codes·sub flops, microseconds), and each corpus row's
-        # cosine is m LUT gathers instead of a nested interpreted fold per
-        # pair. Queries are collected driver-side — the same |Q|-is-small
-        # contract under which the expr path broadcasts them.
-        qrows = sorted(
-            (r[0], [float(x) for x in r[1]])
-            for r in queries.select(q_id, vec).collect()
-        )
-        scored = _arrow_pq_score(
-            corpus.select(c_id, vec), c_id, vec, qrows, codebooks,
-            round_digits, q_id,
-        ).filter(F.col(q_id) != F.col(c_id))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select(q_id, c_id, "cosine", "rn")
-        )
-    else:
-        c = corpus.select(
-            F.col(c_id),
-            _pq_encode_expr(codebooks, round_digits)(F.col(vec)).alias("__codes"),
-        )
-    q = queries.select(
-        F.col(q_id),
-        F.col(vec).alias("__qv"),
-        _norm(F.col(vec)).alias("__qnorm"),
+    qrows = sorted(
+        (r[0], [float(x) for x in r[1]])
+        for r in queries.select(q_id, vec).collect()
     )
-
-    # the codebook rides the SCORING plan as broadcast DATA (one row,
-    # KiB-scale — the same delivery as ivf_topk's past-threshold centroid
-    # table): a literal would cost thousands of py4j F.lit calls per plan
-    # BUILD and a plan tree Catalyst re-analyzes every invocation
-    cb_df = _pq_cb_df(corpus.sparkSession, codebooks)
-    cos = _pq_adc_cos(sub, round_digits)
-
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .crossJoin(F.broadcast(cb_df))
-        .filter(F.col(q_id) != F.col(c_id))
-        .select(q_id, c_id, cos.alias("cosine"))
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(q_id, c_id, "cosine", "rn")
-    )
+    scored = _arrow_pq_score(
+        corpus.select(c_id, vec), c_id, vec, qrows, codebooks,
+        round_digits, q_id,
+    ).filter(F.col(q_id) != F.col(c_id))
+    return _rank_topk(scored, k, q_id, c_id)
 
 
 def pq_rerank_topk(
@@ -1330,7 +1128,6 @@ def pq_rerank_topk(
     vec: str = "embedding",
     round_digits: int = 6,
     codebooks: list[list[list[float]]] | None = None,
-    encode: str = "auto",
 ) -> DataFrame:
     """PQ candidates + exact rerank — how production PQ indexes are actually
     queried (FAISS ``PQm`` + refine): the full corpus is scanned only in its
@@ -1349,24 +1146,62 @@ def pq_rerank_topk(
     cand = pq_topk(
         queries, corpus, k=rerank, m=m, n_codes=n_codes,
         q_id=q_id, c_id=c_id, vec=vec, round_digits=round_digits,
-        codebooks=codebooks, encode=encode,
+        codebooks=codebooks,
     ).select(q_id, c_id)
-    from pyspark.sql import Window as W
+    return _refine(cand, queries, corpus, k, q_id, c_id, vec, round_digits)
 
+
+def _refine(
+    shortlist: DataFrame,
+    queries: DataFrame,
+    vectors: DataFrame,
+    k: int,
+    q_id: str,
+    c_id: str,
+    vec: str,
+    round_digits: int,
+) -> DataFrame:
+    """Exact rerank of a ``(q_id, c_id)`` shortlist, shared by every PQ
+    rung: fetch ONLY the shortlist's float vectors from ``vectors`` (a
+    broadcast semi-style join, so the vector side never shuffles) and
+    rank them by the exact rounded cosine."""
     q = queries.select(F.col(q_id), F.col(vec).alias("__qv"))
-    fetched = corpus.select(F.col(c_id), F.col(vec)).join(
-        F.broadcast(cand), on=c_id
+    fetched = vectors.select(F.col(c_id), F.col(vec)).join(
+        F.broadcast(shortlist), on=c_id
     )
     cos = F.round(cosine(F.col("__qv"), F.col(vec)), round_digits)
     scored = fetched.join(F.broadcast(q), on=q_id).select(
         q_id, c_id, cos.alias("cosine")
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(q_id, c_id, "cosine", "rn")
+    return _rank_topk(scored, k, q_id, c_id)
+
+
+def _adc_shortlist(
+    coded: DataFrame,
+    probes: DataFrame,
+    codebooks: list[list[list[float]]],
+    rerank: int,
+    q_id: str,
+    c_id: str,
+    round_digits: int,
+) -> DataFrame:
+    """IVF×PQ candidate stage, shared by the inline rung and the
+    persisted-index probe: ``coded`` postings ``(c_id, __codes, __cell)``
+    meet the (|Q| × n_probe row) probe table through a broadcast hash
+    join on the cell id, are scored by the :func:`_pq_adc_cos` expression
+    with the KiB codebook as a one-row broadcast, and the top ``rerank``
+    per query come back as ``(q_id, c_id)``."""
+    qn = probes.withColumn("__qnorm", _norm(F.col("__qv")))
+    cand = (
+        coded.join(F.broadcast(qn), on="__cell")
+        .filter(F.col(q_id) != F.col(c_id))
+        .crossJoin(F.broadcast(_pq_cb_df(coded.sparkSession, codebooks)))
+        .select(
+            q_id, c_id,
+            _pq_adc_cos(len(codebooks[0][0]), round_digits).alias("cosine"),
+        )
     )
+    return _rank_topk(cand, rerank, q_id, c_id).select(q_id, c_id)
 
 
 def ivf_pq_topk(
@@ -1385,7 +1220,6 @@ def ivf_pq_topk(
     centroids: DataFrame | None = None,
     codebooks: list[list[list[float]]] | None = None,
     assignment: str = "auto",
-    encode: str = "auto",
 ) -> DataFrame:
     """The full production ANN composition — FAISS ``IVFx,PQy`` + refine
     (IVFADC, Jégou et al. TPAMI'11): an IVF coarse quantizer prunes the
@@ -1413,18 +1247,8 @@ def ivf_pq_topk(
     the ``similarity_ivf_pq_recall`` declared query gates the composition,
     whose loss is bounded by its parts (IVF probe miss + PQ candidate
     miss, each separately gated)."""
-    from pyspark.sql import Window as W
-
     if codebooks is None:
         codebooks = pq_subspace_codebooks(corpus, m, n_codes, c_id, vec)
-    m = len(codebooks)
-    n_codes = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    if encode not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown encode backend: {encode}")
-    if encode == "auto":
-        encode = "arrow" if m * n_codes >= 128 else "expr"
-
     cells, probes = ivf_assign(
         queries, corpus, n_centroids=n_centroids, n_probe=n_probe,
         q_id=q_id, c_id=c_id, vec=vec, round_digits=round_digits,
@@ -1432,43 +1256,11 @@ def ivf_pq_topk(
     )
     # encode ONCE per corpus row, keeping its cell: the inverted lists of a
     # real deployment store exactly (cell, id, codes)
-    if encode == "arrow":
-        coded = _arrow_pq_encode(
-            cells, c_id, vec, codebooks, round_digits, keep=("__cell",)
-        )
-    else:
-        coded = cells.select(
-            F.col(c_id),
-            _pq_encode_expr(codebooks, round_digits)(F.col(vec)).alias("__codes"),
-            "__cell",
-        )
-    qn = probes.withColumn("__qnorm", _norm(F.col("__qv")))
-    cand = (
-        coded.join(F.broadcast(qn), on="__cell")
-        .filter(F.col(q_id) != F.col(c_id))
-        .crossJoin(F.broadcast(_pq_cb_df(corpus.sparkSession, codebooks)))
-        .select(q_id, c_id, _pq_adc_cos(sub, round_digits).alias("cosine"))
+    coded = _arrow_pq_encode(cells, c_id, vec, codebooks, round_digits)
+    shortlist = _adc_shortlist(
+        coded, probes, codebooks, rerank, q_id, c_id, round_digits
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    shortlist = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= rerank)
-        .select(q_id, c_id)
-    )
-    # refine: fetch ONLY the shortlist's float vectors and rescore exactly
-    q = queries.select(F.col(q_id), F.col(vec).alias("__qv"))
-    fetched = corpus.select(F.col(c_id), F.col(vec)).join(
-        F.broadcast(shortlist), on=c_id
-    )
-    cos = F.round(cosine(F.col("__qv"), F.col(vec)), round_digits)
-    scored = fetched.join(F.broadcast(q), on=q_id).select(
-        q_id, c_id, cos.alias("cosine")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(q_id, c_id, "cosine", "rn")
-    )
+    return _refine(shortlist, queries, corpus, k, q_id, c_id, vec, round_digits)
 
 
 def _estimate_corpus_rows(corpus: DataFrame, bound: int) -> int:
@@ -1544,25 +1336,19 @@ def topk(
     this and get the exact answer when it is cheap and the indexed answer
     when exactness would be a job-killer cross-join."""
     if index_path is not None and strategy in ("auto", "index"):
-        import json
-        import os
-
         spark = queries.sparkSession
         # honor the caller's vec/q_id contract exactly like every inline
         # rung: the probe resolves columns by the INDEX meta's names, so a
         # caller-named vector column is projected onto the index's before
         # probing (otherwise a frame carrying both names would silently
         # score the wrong column)
-        meta = json.loads(
-            _fs_read_text(spark, os.path.join(index_path, "meta.json"))
-        )
+        meta = _read_index_meta(spark, index_path)
         q = queries.select(F.col(q_id), F.col(vec).alias(meta["vec"]))
         n_probe = ivf_kwargs.pop("n_probe", 4)
         rerank = ivf_kwargs.pop("rerank", 100)
         # the index route consumes exactly n_probe/rerank from ivf_kwargs;
-        # anything left would vanish silently (ADVICE r11 — a misspelled
-        # kwarg deserves an error, same as Python's own TypeError would
-        # give on the inline rungs)
+        # anything left would vanish silently — a misspelled kwarg deserves
+        # an error, same as Python's own TypeError gives on the inline rungs
         if ivf_kwargs:
             raise TypeError(
                 "topk(index_path=...) got unsupported kwargs: "
@@ -1629,7 +1415,7 @@ def _fs_write_text(spark, path: str, text: str) -> None:
     Spark's Hadoop FileSystem API so it lands on the SAME filesystem as the
     index's parquet halves — a build pointed at hdfs://... or s3a://...
     keeps its metadata next to its postings instead of silently writing a
-    driver-local POSIX file (ADVICE r9). ``file:``/bare local paths resolve
+    driver-local POSIX file. ``file:``/bare local paths resolve
     to the local FS, so behavior on a laptop is unchanged."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
@@ -1717,6 +1503,48 @@ def _fs_read_text(spark, path: str) -> str:
         inp.close()
 
 
+def _read_index_meta(spark, path: str) -> dict:
+    """Read and validate a :func:`build_ann_index` index's ``meta.json``.
+    The file is input from outside the program, and every reader assigns
+    and encodes new vectors with exactly the backends the index was built
+    with — a silently substituted backend could disagree with the build
+    on the documented rounding-tie boundaries (:func:`_arrow_assign`). So
+    a missing ``assignment``/``encode`` key, or a backend this engine does
+    not have, fails loudly instead of being guessed."""
+    import json
+    import os
+
+    meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
+    for key, allowed in (("assignment", ("expr", "arrow")), ("encode", ("arrow",))):
+        if key not in meta:
+            raise ValueError(
+                f"index meta.json at {path} has no {key!r} key; rebuild the "
+                "index with build_ann_index"
+            )
+        if meta[key] not in allowed:
+            raise ValueError(
+                f"index meta.json at {path}: unsupported {key!r} backend "
+                f"{meta[key]!r} (expected one of {allowed}); rebuild the "
+                "index with build_ann_index"
+            )
+    return meta
+
+
+def _index_assigner(spark, path: str, meta: dict):
+    """The cell assigner of a built index: its persisted centroid table
+    under the backend ``meta.json`` records — what probe, append and the
+    from-index dedup readers assign new vectors with, so a vector lands in
+    the cell a one-shot build would give it (see :func:`_read_index_meta`)."""
+    import os
+
+    return cell_assigner(
+        None, n_centroids=meta["n_centroids"], c_id=meta["c_id"],
+        vec=meta["vec"], round_digits=meta["round_digits"],
+        centroids=spark.read.parquet(os.path.join(path, "centroids")),
+        assignment=meta["assignment"],
+    )
+
+
 def build_ann_index(
     corpus: DataFrame,
     path: str,
@@ -1729,7 +1557,6 @@ def build_ann_index(
     centroids: DataFrame | None = None,
     codebooks: list[list[list[float]]] | None = None,
     assignment: str = "auto",
-    encode: str = "auto",
 ) -> dict:
     """Persist a disk-resident IVFADC index: ONE corpus pass assigns cells
     and PQ-encodes every vector, then writes
@@ -1749,7 +1576,14 @@ def build_ann_index(
     probe, which is how a 100 TB corpus is actually served (build once on
     ingest, probe forever). Default quantizer/codebooks are the
     deterministic prefix rules (oracle-replicable); production passes
-    ``kmeans_centroids(...)`` / trained codebooks."""
+    ``kmeans_centroids(...)`` / trained codebooks.
+
+    ``meta.json`` records the cell-assignment backend ``cell_assigner``
+    resolved (never ``"auto"``) and the encoder (``"arrow"``): every later
+    append and probe assigns and encodes with exactly these, so an
+    appended vector lands in the cell and codes a one-shot rebuild would
+    give it (the backends differ on documented rounding-tie boundaries,
+    :func:`_arrow_assign`)."""
     import json
     import os
 
@@ -1757,10 +1591,6 @@ def build_ann_index(
         codebooks = pq_subspace_codebooks(corpus, m, n_codes, c_id, vec)
     m = len(codebooks)
     n_codes = len(codebooks[0])
-    if encode not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown encode backend: {encode}")
-    if encode == "auto":
-        encode = "arrow" if m * n_codes >= 128 else "expr"
     if centroids is None:
         centroids = (
             corpus.orderBy(c_id)
@@ -1770,36 +1600,12 @@ def build_ann_index(
     # materialize the centroid table once: it feeds the assigner here AND
     # is persisted for probe-time reuse
     centroids = centroids.localCheckpoint(eager=False)
-    # Resolve 'auto' to the concrete backend HERE so the RESOLVED name can
-    # be persisted in meta.json — append_to_ann_index must re-assign new
-    # rows with the exact backend the index was built with (the backends
-    # differ on documented _arrow_assign rounding-tie boundaries), the same
-    # bit-identical-append contract the persisted 'encode' key carries
-    # (ADVICE r10: an explicit assignment='arrow' build was getting
-    # auto-resolved appends). The rule mirrors cell_assigner's auto branch:
-    # <= literal_centroid_max (its 2048 default — build_ann_index always
-    # calls it with that default) centroids -> expr, else arrow; the
-    # centroid table is frozen on disk, so the same count resolves the same
-    # backend at every future append.
-    if assignment not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown assignment backend: {assignment}")
-    if assignment == "auto":
-        assignment = _auto_assignment(centroids)
     assign = cell_assigner(
         corpus, n_centroids=n_centroids, c_id=c_id, vec=vec,
         round_digits=round_digits, centroids=centroids, assignment=assignment,
     )
     cells = assign(corpus.select(c_id, vec), c_id, 1)
-    if encode == "arrow":
-        coded = _arrow_pq_encode(
-            cells, c_id, vec, codebooks, round_digits, keep=("__cell",)
-        )
-    else:
-        coded = cells.select(
-            F.col(c_id),
-            _pq_encode_expr(codebooks, round_digits)(F.col(vec)).alias("__codes"),
-            "__cell",
-        )
+    coded = _arrow_pq_encode(cells, c_id, vec, codebooks, round_digits)
     centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     # the build is ingest unit "base": every leaf lives one directory
     # under an __ingest=<key> partition so appends own their unit dir and
@@ -1816,17 +1622,11 @@ def build_ann_index(
     cells.write.mode("overwrite").partitionBy("__cell").parquet(
         os.path.join(path, "vectors", "__ingest=base")
     )
-    # "encode" is the RESOLVED backend: append_to_ann_index must re-encode
-    # new rows with the exact backend the index was built with (the two
-    # backends differ on documented _arrow_assign tie boundaries), so an
-    # explicit encode='expr' build must not get arrow-encoded appends
-    # (ADVICE r9).
     meta = {
         "n_centroids": n_centroids, "m": m, "n_codes": n_codes,
         "c_id": c_id, "vec": vec, "round_digits": round_digits,
-        "encode": encode, "assignment": assignment,
+        "encode": "arrow", "assignment": assign.backend,
     }
-    spark = corpus.sparkSession
     _fs_write_text(spark, os.path.join(path, "codebooks.json"), json.dumps(codebooks))
     _fs_write_text(spark, os.path.join(path, "meta.json"), json.dumps(meta))
     return meta
@@ -1855,27 +1655,16 @@ def probe_ann_index(
     import json
     import os
 
-    from pyspark.sql import Window as W
-
-    meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
+    meta = _read_index_meta(spark, path)
     codebooks = json.loads(
         _fs_read_text(spark, os.path.join(path, "codebooks.json"))
     )
     c_id, vec = meta["c_id"], meta["vec"]
     round_digits = meta["round_digits"]
-    sub = len(codebooks[0][0])
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    # assign QUERY vectors with the index's FROZEN backend (ADVICE r11:
-    # this primary reader was still auto-resolving while build/append pin
-    # the persisted backend — an explicit-'arrow' build at <=2048 centroids
-    # would probe through expr and diverge on the documented rounding-tie
-    # boundaries); pre-key indexes reconstruct the auto rule exactly as
-    # append_to_ann_index does
-    assign = cell_assigner(
-        None, n_centroids=meta["n_centroids"], c_id=c_id, vec=vec,
-        round_digits=round_digits, centroids=centroids,
-        assignment=meta.get("assignment") or _auto_assignment(centroids),
-    )
+    # assign QUERY vectors with the index's FROZEN backend, like append: an
+    # auto-resolved probe of an explicit-'arrow' build would go through
+    # expr and diverge on the documented rounding-tie boundaries
+    assign = _index_assigner(spark, path, meta)
     probes = assign(queries.select(q_id, vec), q_id, n_probe).withColumnRenamed(
         vec, "__qv"
     )
@@ -1895,35 +1684,13 @@ def probe_ann_index(
     tomb = _index_tombstones(spark, path, c_id)
     if tomb is not None:
         codes = codes.join(F.broadcast(tomb), on=c_id, how="left_anti")
-    qn = probes.withColumn("__qnorm", _norm(F.col("__qv")))
-    cand = (
-        codes.join(F.broadcast(qn), on="__cell")
-        .filter(F.col(q_id) != F.col(c_id))
-        .crossJoin(F.broadcast(_pq_cb_df(spark, codebooks)))
-        .select(q_id, c_id, _pq_adc_cos(sub, round_digits).alias("cosine"))
-    )
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    shortlist = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= rerank)
-        .select(q_id, c_id)
+    shortlist = _adc_shortlist(
+        codes, probes, codebooks, rerank, q_id, c_id, round_digits
     )
     vectors = _read_postings(spark, path, "vectors").filter(
         F.col("__cell").isin(probed_cells)
     )
-    q = queries.select(F.col(q_id), F.col(vec).alias("__qv"))
-    fetched = vectors.select(F.col(c_id), F.col(vec)).join(
-        F.broadcast(shortlist), on=c_id
-    )
-    cos = F.round(cosine(F.col("__qv"), F.col(vec)), round_digits)
-    scored = fetched.join(F.broadcast(q), on=q_id).select(
-        q_id, c_id, cos.alias("cosine")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(q_id, c_id, "cosine", "rn")
-    )
+    return _refine(shortlist, queries, vectors, k, q_id, c_id, vec, round_digits)
 
 
 def _index_tombstones(spark, path: str, c_id: str):
@@ -1966,18 +1733,16 @@ def delete_from_ann_index(batch: DataFrame, path: str) -> dict:
     (re-counting the accumulated log here would make every small takedown
     pay a full log scan; the applied total comes back from
     ``compact_ann_index`` as ``tombstones_applied``)."""
-    import json
     import os
 
     spark = batch.sparkSession
-    meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
-    c_id = meta["c_id"]
+    c_id = _read_index_meta(spark, path)["c_id"]
     tpath = os.path.join(path, "tombstones")
     ids = batch.select(c_id).distinct().localCheckpoint(eager=False)
     n = ids.count()
     if n == 0:
-        # _index_tombstones keys liveness off directory existence (ADVICE
-        # r11): writing an empty batch would create tombstones/ and
+        # _index_tombstones keys liveness off directory existence:
+        # writing an empty batch would create tombstones/ and
         # permanently route every reader onto the anti-join path despite
         # nothing being deleted
         return {"tombstones_appended": 0}
@@ -1999,7 +1764,7 @@ def compact_ann_index(spark, path: str, dedup_ids: bool = False) -> dict:
     (equality-tested — including with live tombstones, which compaction
     applies PHYSICALLY and clears: probes already excluded those ids, so
     materializing the deletes changes nothing observable; see
-    :func:`delete_from_ann_index`). Durability contract (ADVICE r10): renames follow
+    :func:`delete_from_ann_index`). Durability contract: renames follow
     write-new / stage-old / swap / drop-old on the index's own filesystem;
     a rename that FAILS (returns false) is rolled back in-process, and a
     PROCESS CRASH in the stage→swap window (postings dir missing, original
@@ -2013,7 +1778,7 @@ def compact_ann_index(spark, path: str, dedup_ids: bool = False) -> dict:
     ``compact_changes``: fold the append log, change nothing observable.
 
     ``dedup_ids=True`` additionally drops duplicate postings by id during
-    the rewrite — the REPAIR for at-least-once ingest replay (ADVICE r10):
+    the rewrite — the REPAIR for at-least-once ingest replay:
     ``append_to_ann_index`` inside a foreachBatch is not idempotent, so a
     replayed micro-batch duplicates its postings. Replay rows are
     bit-identical (same vector, frozen quantizer/codebooks → same cell and
@@ -2028,12 +1793,9 @@ def compact_ann_index(spark, path: str, dedup_ids: bool = False) -> dict:
     ACTUALLY removed from the codes leaf (ids tombstoned but never
     resident contribute zero), so ``n_after == n_before -
     tombstones_applied`` holds when ``dedup_ids`` is off."""
-    import json
     import os
 
-    id_col = json.loads(
-        _fs_read_text(spark, os.path.join(path, "meta.json"))
-    )["c_id"]
+    id_col = _read_index_meta(spark, path)["c_id"]
     # tombstones are applied PHYSICALLY here (delete_from_ann_index logs
     # them; readers exclude them; compaction materializes the deletes and
     # clears the log). EAGER localCheckpoint: the rewrite below must not
@@ -2084,7 +1846,7 @@ def compact_ann_index(spark, path: str, dedup_ids: bool = False) -> dict:
         if tomb is not None:
             if leaf == "codes":
                 # tombstones_applied = postings ACTUALLY removed, not the
-                # log's distinct-id count (ADVICE r11: tombstones for ids
+                # log's distinct-id count (tombstones for ids
                 # never resident over-report, breaking a caller's
                 # n_after == n_before - applied accounting). One broadcast
                 # semi-join count over the codes leaf, which this pass
@@ -2161,7 +1923,7 @@ def append_to_ann_index(
     append sees the union index bit-for-bit as if it had been built in
     one shot (equality-tested).
 
-    ``batch_key`` is the idempotency handle (VERDICT r11 wrong #2): pass
+    ``batch_key`` is the idempotency handle: pass
     a stable key — e.g. the ``foreachBatch`` batch id — and an
     at-least-once REPLAY of the same batch overwrites exactly its own
     unit directory instead of appending duplicate postings, making
@@ -2174,15 +1936,14 @@ def append_to_ann_index(
     import os
 
     spark = batch.sparkSession
-    meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
+    meta = _read_index_meta(spark, path)
     codebooks = json.loads(
         _fs_read_text(spark, os.path.join(path, "codebooks.json"))
     )
     c_id, vec = meta["c_id"], meta["vec"]
     round_digits = meta["round_digits"]
-    m, n_codes = meta["m"], meta["n_codes"]
     # ENFORCE the delete-wins contract instead of trusting callers to
-    # remember it (VERDICT r11 wrong #3): appending a tombstoned id would
+    # remember it: appending a tombstoned id would
     # write postings every reader silently excludes until the next
     # compaction purges them too — the caller thinks the id is back, the
     # index disagrees. Re-ingesting a deleted id is compact-then-append by
@@ -2202,31 +1963,8 @@ def append_to_ann_index(
                 "the deletes, then re-append (delete wins until compaction "
                 "— see delete_from_ann_index)"
             )
-    # re-encode with the backend the index was BUILT with (persisted since
-    # the encode key landed in meta; the m*n_codes rule reconstructs the
-    # auto default for indexes written before it)
-    encode = meta.get("encode") or ("arrow" if m * n_codes >= 128 else "expr")
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    # same frozen-backend rule for cell ASSIGNMENT (ADVICE r10): use the
-    # resolved backend persisted at build; for indexes written before the
-    # key existed, reconstruct cell_assigner's auto rule from the frozen
-    # centroid table (<= its 2048 literal_centroid_max default -> expr).
-    assignment = meta.get("assignment") or _auto_assignment(centroids)
-    assign = cell_assigner(
-        None, n_centroids=meta["n_centroids"], c_id=c_id, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
-    )
-    cells = assign(batch.select(c_id, vec), c_id, 1)
-    if encode == "arrow":
-        coded = _arrow_pq_encode(
-            cells, c_id, vec, codebooks, round_digits, keep=("__cell",)
-        )
-    else:
-        coded = cells.select(
-            F.col(c_id),
-            _pq_encode_expr(codebooks, round_digits)(F.col(vec)).alias("__codes"),
-            "__cell",
-        )
+    cells = _index_assigner(spark, path, meta)(batch.select(c_id, vec), c_id, 1)
+    coded = _arrow_pq_encode(cells, c_id, vec, codebooks, round_digits)
     # each append owns its __ingest unit dir: overwrite there is
     # replay-idempotent (same batch_key -> same dir -> same files) and
     # still touches only the batch's cells' subdirectories

@@ -3,7 +3,8 @@
 Every implemented operator from SURVEY §2 is declared here as a named query:
 a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (where expressible)
 an equivalent ANSI-SQL string the DuckDB oracle runs on the same parquet
-tables. The driver hash-compares the two at sf0.01 (CORRECTNESS_r{N}.json).
+tables. ``correctness_full.py`` hash-compares the two for every declared
+query at sf0.01; ``tests/test_oracle_parity.py`` does the same at sf0.001.
 
 Determinism rules (see tests/test_oracle_parity.py, which enforces them at
 sf0.001 before the driver ever sees the queries):
@@ -23,104 +24,14 @@ from s4hanaconnector_spark.queries import cdc as _cdc  # noqa: F401,E402
 
 _MODULES = [_cdc]
 
-# Registry order is VISIBILITY order: the driver's per-round correctness
-# harness samples the first 50 entries. The head is ROTATED each round so
-# driver verification accumulates across the registry (VERDICT r8 next #2).
-#
-# Round-12 cohort (VERDICT r11 next #1: "close the driver-rotation tail"):
-# the 9 queries never driver-sampled in ANY round (cohort_retention_matrix,
-# cross_join_region_nation, feature_zscore, funnel_conversion,
-# histogram_doc_lengths, layout_zorder_spans, map_priority_rank,
-# timeseries_interpolate, window_rolling_distinct) are pinned first — a
-# green row for each ends the rotation at cumulative 235/235. The
-# remaining 37 backfill slots go to the STALEST previously-sampled
-# queries (last driver row in r2–r7), refreshing driver evidence that
-# predates the current engine by 5+ rounds, plus this round's new
-# dedup_semdedup_pair_budget.
-# Retained canaries: cdc_delta, source_jdbc_roundtrip,
-# source_jdbc_type_gallery (driver-green r9–r11; regression tripwire).
-#
-# Displaced from the r11 head: the full r11 cohort — every displaced query
-# carries a green r11 driver row and stays covered by
-# CORRECTNESS_FULL.json + tests/test_oracle_parity.py every round.
-# Queries never driver-sampled in ANY round are tracked against the union
-# of committed CORRECTNESS_r0*.json keys (see tools/rotate_head.py).
-_SAMPLE_HEAD = [
-    # canaries (driver-green r9–r11; regression tripwire)
-    "cdc_delta",
-    "source_jdbc_roundtrip",
-    "source_jdbc_type_gallery",
-    # the rotation tail: never driver-sampled before this round
-    "cohort_retention_matrix",
-    "cross_join_region_nation",
-    "feature_zscore",
-    "funnel_conversion",
-    "histogram_doc_lengths",
-    "layout_zorder_spans",
-    "map_priority_rank",
-    "timeseries_interpolate",
-    "window_rolling_distinct",
-    # NEW this round: SemDeDup with a per-cell pair budget (VERDICT r11
-    # next #5 — the winnowed rung that caps within-cell quadratic work),
-    # inline and composed with the persisted-index amortization
-    "dedup_semdedup_pair_budget",
-    "dedup_semdedup_indexed_budget",
-    # stalest backfill: last driver row r2 (10 rounds ago)
-    "q18_large_volume_orders",
-    "supplier_nation_stats",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q19_disjunctive_revenue",
-    "streaming_tumbling_revenue",
-    # stalest backfill: last driver row r3
-    "events_tumbling_window",
-    "events_sessionize",
-    "pivot_status_by_priority",
-    "join_semi_priority_count",
-    "join_anti_idle_customers",
-    "join_agg_small_qty_revenue",
-    "agg_grouping_sets",
-    "agg_percentiles",
-    "window_lag_lead_gaps",
-    "q6_forecast_revenue",
-    "q10_returned_revenue",
-    "q14_promo_revenue",
-    # stalest backfill: last driver row r4
-    "window_topk_per_customer",
-    "window_running_sum",
-    "setops_customer_segments",
-    # stalest backfill: last driver row r5
-    "agg_rollup",
-    "agg_cube",
-    "agg_count_distinct",
-    "agg_approx_count_distinct",
-    # stalest backfill: last driver row r6
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    # stalest backfill: last driver row r7
-    "cdc_temporal_join",
-    "cdc_snapshot_checksum",
-    "cdc_quarantine_malformed",
-    "streaming_nested_bo_maintenance",
-    "streaming_nested_bo_2level",
-]
-
 
 def load_all() -> dict[str, QueryDef]:
     """Import all query modules (side-effect: registration) and return a
-    REORDERED COPY of the full registry with the declared sample head pinned
-    first. The global REGISTRY keeps module registration order (ADVICE r8:
-    no mutate-in-place side effects)."""
+    copy of the full registry in module registration order."""
     from s4hanaconnector_spark.queries import analytics as _an  # noqa: F401
     from s4hanaconnector_spark.queries import jdbc_derby as _jd  # noqa: F401
     from s4hanaconnector_spark.queries import llmops as _llm  # noqa: F401
     from s4hanaconnector_spark.queries import partsupp as _ps  # noqa: F401
     from s4hanaconnector_spark.queries import surface as _surf  # noqa: F401
 
-    ordered = {n: REGISTRY[n] for n in _SAMPLE_HEAD if n in REGISTRY}
-    ordered.update((n, d) for n, d in REGISTRY.items() if n not in ordered)
-    return ordered
+    return dict(REGISTRY)

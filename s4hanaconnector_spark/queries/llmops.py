@@ -3055,8 +3055,9 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-32× fewer bytes, the difference between a memory-resident and a
     disk-bound index at 100 TB — to produce 100 candidates per query; only
     those |Q|×100 rows have their float vectors fetched and exactly
-    rescored. The codebook (KiB-scale) rides the plan as a literal; encode
-    and PQ scoring are row-local projections; the corpus never shuffles.
+    rescored. The codebook (KiB-scale) ships in the task closure; encode
+    and PQ scoring are one row-local mapInArrow pass; the corpus never
+    shuffles.
     Deterministic prefix codebooks (the same rule as the IVF quantizer) so
     the oracle replays encode→score→top-R→rerank bit-for-bit."""
     e = t(spark, sf_dir, "embeddings")

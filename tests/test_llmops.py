@@ -1414,61 +1414,81 @@ def test_index_append_equals_one_shot_build(spark, sf_dir):
     assert probe_inc == probe_full and probe_inc
 
 
-def test_index_append_reuses_build_encode_backend(spark, sf_dir):
-    """ADVICE r9: an index built with an EXPLICIT encode backend must
-    append with that same backend — the resolved backend is persisted in
-    meta.json and read back, instead of append re-deriving it from the
-    m*n_codes >= 128 auto rule (which would arrow-encode appends into an
-    expr-built index; the two backends differ on documented rounding tie
-    boundaries)."""
+def test_index_readers_reject_incomplete_meta(spark, sf_dir):
+    """meta.json is input from outside the program. Every reader that
+    assigns or encodes vectors needs the exact backends the index was
+    built with, so a meta without the 'assignment' / 'encode' keys, or
+    naming an encoder the engine does not have, fails loudly and names
+    the key instead of guessing a backend."""
     import json
     import os
     import tempfile
 
+    import pytest as _pytest
+
+    from s4hanaconnector_spark.operators.dedup import (
+        incremental_semantic_dedup_from_index,
+    )
     from s4hanaconnector_spark.operators.similarity import (
+        _fs_write_text,
         append_to_ann_index,
         build_ann_index,
-        pq_subspace_codebooks,
         probe_ann_index,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-    first = c.filter(F.col("c_id") % 2 == 0)
-    rest = c.filter(F.col("c_id") % 2 == 1)
-    cents = (
-        first.orderBy("c_id").limit(16)
-        .select(F.col("c_id").alias("cent_id"), "embedding")
-        .localCheckpoint()
-    )
-    cbs = pq_subspace_codebooks(first, 16, 32)
-
-    # m*n_codes = 512 >= 128, so the auto rule would pick arrow — the
-    # explicit expr build must override that for appends too
-    inc = tempfile.mkdtemp(prefix="ann_index_enc_")
-    meta = build_ann_index(first, inc, n_centroids=16, m=16, n_codes=32,
-                           centroids=cents, codebooks=cbs, encode="expr")
-    assert meta["encode"] == "expr"
-    with open(os.path.join(inc, "meta.json")) as f:
-        assert json.load(f)["encode"] == "expr"
-    append_to_ann_index(rest, inc)
-
-    full = tempfile.mkdtemp(prefix="ann_index_enc_full_")
-    build_ann_index(c, full, n_centroids=16, m=16, n_codes=32,
-                    centroids=cents, codebooks=cbs, encode="expr")
-    codes_inc = {
-        (r["c_id"], tuple(r["__codes"]))
-        for r in spark.read.parquet(os.path.join(inc, "codes")).collect()
-    }
-    codes_full = {
-        (r["c_id"], tuple(r["__codes"]))
-        for r in spark.read.parquet(os.path.join(full, "codes")).collect()
-    }
-    assert codes_inc == codes_full and codes_inc
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    assert probe_ann_index(spark, inc, q, k=10).count() > 0
+    batch = c.filter(F.col("c_id") >= 64)
+    path = tempfile.mkdtemp(prefix="ann_index_meta_")
+    meta = build_ann_index(c.filter(F.col("c_id") < 64), path,
+                           n_centroids=16, m=16, n_codes=32)
+    assert meta["encode"] == "arrow" and meta["assignment"] == "expr"
+
+    readers = {
+        "probe": lambda: probe_ann_index(spark, path, q, k=5),
+        "append": lambda: append_to_ann_index(batch, path),
+        "dedup": lambda: incremental_semantic_dedup_from_index(
+            spark, path, batch
+        ),
+    }
+    legacy = {k: v for k, v in meta.items() if k not in ("assignment", "encode")}
+    no_encode = {k: v for k, v in meta.items() if k != "encode"}
+    cases = (
+        (legacy, "'assignment'"),
+        (no_encode, "'encode'"),
+        ({**meta, "encode": "expr"}, "'encode'.*'expr'"),
+    )
+    for bad, key in cases:
+        _fs_write_text(spark, os.path.join(path, "meta.json"), json.dumps(bad))
+        for name, read in readers.items():
+            with _pytest.raises(ValueError, match=key):
+                read()
+                raise AssertionError(f"{name} accepted {bad}")
+
+
+def test_arrow_assign_all_neg_inf_row_takes_first_centroid(spark):
+    """A row whose rounded affinity is -inf for EVERY centroid (a vector
+    whose norm underflows to 0 while its dot products stay negative
+    subnormals) lands in the lowest centroid id — the cell the keep_rn > 1
+    argsort path ranks first — never in a cell id that does not exist.
+    Centroid ids deliberately do not start at 0."""
+    from s4hanaconnector_spark.operators.similarity import cell_assigner
+
+    cents = spark.createDataFrame(
+        [(cid, [-1e-161] * 64) for cid in (10, 20, 30)],
+        "cent_id bigint, embedding array<double>",
+    )
+    row = spark.createDataFrame(
+        [(1, [1e-162] * 64)], "c_id bigint, embedding array<double>"
+    )
+    assign = cell_assigner(None, centroids=cents, assignment="arrow")
+    one = [r["__cell"] for r in assign(row, "c_id", 1).collect()]
+    two = [r["__cell"] for r in assign(row, "c_id", 2).collect()]
+    assert one == [10], one
+    assert two[0] == one[0], two
 
 
 def test_stream_ingest_probe_equals_one_shot_rebuild(spark, sf_dir):
@@ -1538,8 +1558,9 @@ def test_index_append_reuses_build_assignment_backend(spark, sf_dir):
     )
     cbs = pq_subspace_codebooks(first, 16, 32)
 
-    # 16 centroids <= literal_centroid_max, so the auto rule resolves to
-    # expr — an explicit arrow build must override that for appends too
+    # 16 centroids are within the 64-cell literal threshold, so auto
+    # resolves to expr — an explicit arrow build must override that for
+    # appends too
     inc = tempfile.mkdtemp(prefix="ann_index_asgn_")
     meta = build_ann_index(first, inc, n_centroids=16, m=16, n_codes=32,
                            centroids=cents, codebooks=cbs,

@@ -319,66 +319,66 @@ def test_incremental_neardup_cap_uses_count_not_collect_set(spark, sf_dir):
     assert re.search(r"windowspecdefinition", plan, re.IGNORECASE), plan
 
 
-def test_ivf_centroid_delivery_paths_agree_and_never_shuffle_corpus(
-    spark, sf_dir
-):
-    """VERDICT r7 next #1: past ``literal_centroid_max`` the centroid table
-    ships as broadcast DATA (one collect_list row) instead of a literal
-    Catalyst array — a sqrt(N) centroid count at 1B vectors would otherwise
-    inline millions of F.lit nodes into the plan tree. Both delivery modes
-    must produce identical rows (the argmax expression is shared, so the
-    rounding/NaN/tiebreak contract cannot drift) and in NEITHER mode may
-    the corpus shuffle before the final (tiny) ranked output."""
+def _ivf_fixture(spark, sf_dir):
     from pyspark.sql import functions as F
-
-    from s4hanaconnector_spark.operators.similarity import ivf_topk
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
     c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-    lit = ivf_topk(q, c, k=10, n_centroids=16, n_probe=4, assignment="expr")
-    dat = ivf_topk(
-        q, c, k=10, n_centroids=16, n_probe=4, literal_centroid_max=1,
-        assignment="expr",
+    return q, c
+
+
+def _only_q_id_exchanges(plan: str) -> bool:
+    """The only hash-partitioned exchange an IVF plan may hold is the final
+    ranked window on q_id (|queries| x n_probe rows), never the corpus."""
+    return all(
+        "q_id" in line
+        for line in plan.splitlines()
+        if "Exchange hashpartitioning" in line
     )
-    assert sorted(map(tuple, lit.collect())) == sorted(map(tuple, dat.collect()))
 
-    for df, mode in ((lit, "literal"), (dat, "data")):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in plan, (mode, plan)
-        assert "CartesianProduct" not in plan, (mode, plan)
-        # the only hash-partitioned exchange allowed is the final ranked
-        # window on q_id (|queries| x n_probe rows), never the corpus
-        import re as _re
 
-        hash_ex = [
-            line for line in plan.splitlines()
-            if "Exchange hashpartitioning" in line
-        ]
-        assert all("q_id" in line for line in hash_ex), (mode, hash_ex)
-    # the data path attaches centroids through a broadcast of ONE row
-    dplan = dat._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in dplan, dplan
+def test_ivf_literal_assignment_never_shuffles_corpus(spark, sf_dir):
+    """The expr backend inlines the centroid table as a literal Catalyst
+    array: cell assignment is a projection with no join for the centroids
+    at all, and the corpus never shuffles before the final (tiny) ranked
+    output. Past 64 cells the literal would put cells x dims F.lit nodes
+    into every plan, so an explicit 'expr' there is refused."""
+    from pyspark.sql import functions as F
+
+    from s4hanaconnector_spark.operators.similarity import ivf_topk
+
+    q, c = _ivf_fixture(spark, sf_dir)
+    lit = ivf_topk(q, c, k=10, n_centroids=16, n_probe=4, assignment="expr")
+    plan = lit._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "MapInArrow" not in plan, plan
+    assert _only_q_id_exchanges(plan), plan
+    assert lit.count() > 0
+
+    many = c.filter(F.col("c_id") < 65).select(
+        F.col("c_id").alias("cent_id"), "embedding"
+    )
+    with pytest.raises(ValueError, match="at most 64 cells"):
+        ivf_topk(q, c, k=10, n_probe=4, centroids=many, assignment="expr")
 
 
 def test_ivf_arrow_assignment_matches_expr_and_stays_rowlocal(spark, sf_dir):
-    """The numpy-vectorized Arrow argmax (the default backend past
-    literal_centroid_max — interpreted HOF lambdas cost O(cells x dims)
-    dispatches per row, measured 730 s at 2500 cells x 200k vectors) must
-    produce the expr reference backend's exact rows on the fixture and add
-    no shuffle: mapInArrow is a row-local map, so the corpus still never
-    exchanges before the final ranked output."""
+    """The numpy-vectorized Arrow argmax (the auto backend past 64 cells —
+    interpreted HOF lambdas cost O(cells x dims) dispatches per row,
+    measured 730 s at 2500 cells x 200k vectors) must produce the expr
+    reference backend's exact rows on the fixture and add no shuffle:
+    mapInArrow is a row-local map, so the corpus still never exchanges
+    before the final ranked output."""
     from pyspark.sql import functions as F
 
     from s4hanaconnector_spark.operators.similarity import ivf_topk
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), "embedding")
+    q, c = _ivf_fixture(spark, sf_dir)
     kw = dict(k=10, n_centroids=16, n_probe=4)
     expr = ivf_topk(q, c, assignment="expr", **kw)
     arrow = ivf_topk(q, c, assignment="arrow", **kw)
@@ -387,28 +387,31 @@ def test_ivf_arrow_assignment_matches_expr_and_stays_rowlocal(spark, sf_dir):
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan
-    hash_ex = [
-        line for line in plan.splitlines() if "Exchange hashpartitioning" in line
-    ]
-    assert all("q_id" in line for line in hash_ex), hash_ex
+    assert _only_q_id_exchanges(plan), plan
 
     # auto routing: small centroid tables stay on the (constant-folded)
-    # literal expr path; past the literal threshold auto picks Arrow
+    # literal expr path; past 64 cells auto picks Arrow, still row-local
     auto_small = ivf_topk(q, c, **kw)
     assert "MapInArrow" not in (
         auto_small._jdf.queryExecution().executedPlan().toString()
     )
-    auto_big = ivf_topk(q, c, literal_centroid_max=1, **kw)
-    assert "MapInArrow" in (
-        auto_big._jdf.queryExecution().executedPlan().toString()
+    many = c.filter(F.col("c_id") < 80).select(
+        F.col("c_id").alias("cent_id"), "embedding"
     )
+    auto_big = ivf_topk(q, c, k=10, n_probe=4, centroids=many)
+    big_plan = auto_big._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in big_plan, big_plan
+    assert "SortMergeJoin" not in big_plan, big_plan
+    assert "CartesianProduct" not in big_plan, big_plan
+    assert _only_q_id_exchanges(big_plan), big_plan
     assert sorted(map(tuple, auto_big.collect())) == sorted(
-        map(tuple, expr.collect())
+        map(tuple, ivf_topk(q, c, k=10, n_probe=4, centroids=many,
+                            assignment="arrow").collect())
     )
 
     # degenerate probe fan-out (n_probe > n_centroids): the Arrow argmax
     # must narrow its slice like the expr path's F.slice does, not raise a
-    # column-length mismatch inside mapInPandas
+    # column-length mismatch inside mapInArrow
     deg = dict(k=5, n_centroids=2, n_probe=4)
     deg_e = ivf_topk(q, c, assignment="expr", **deg)
     deg_a = ivf_topk(q, c, assignment="arrow", **deg)
@@ -417,63 +420,94 @@ def test_ivf_arrow_assignment_matches_expr_and_stays_rowlocal(spark, sf_dir):
     )
 
 
-def test_ivf_auto_runs_one_centroid_job(spark, sf_dir, monkeypatch):
-    """VERDICT r8 wrong #4: auto past the literal threshold used to run TWO
-    centroid jobs — the take(literal_centroid_max+1) probe and then the
-    Arrow path's full cent.collect(). Auto now collects the (sqrt(N)-row)
-    centroid table ONCE and feeds whichever backend wins; explicit expr
-    keeps the bounded take probe (its data delivery never needs driver-side
-    rows)."""
-    from pyspark.sql import functions as F
-
-    # patch the CONCRETE class (pyspark 4 routes pyspark.sql.DataFrame's
-    # methods through the classic/connect subclass, so patching the base
-    # never fires)
+def _count_driver_jobs(monkeypatch) -> list:
+    """Record every collect/take/count issued through the DataFrame API.
+    Patches the CONCRETE class (pyspark 4 routes pyspark.sql.DataFrame's
+    methods through the classic/connect subclass, so patching the base
+    never fires); classic take(n) is limit(n).collect(), so the collect
+    nested inside a counted take is not counted twice."""
     from pyspark.sql.classic.dataframe import DataFrame
+
+    calls: list[str] = []
+    orig = {n: getattr(DataFrame, n) for n in ("collect", "take", "count")}
+    depth = 0
+
+    def counted(name):
+        def wrapper(self, *a, **kw):
+            nonlocal depth
+            if depth == 0:
+                calls.append(name)
+            depth += 1
+            try:
+                return orig[name](self, *a, **kw)
+            finally:
+                depth -= 1
+
+        return wrapper
+
+    for name in orig:
+        monkeypatch.setattr(DataFrame, name, counted(name))
+    return calls
+
+
+def test_ivf_auto_runs_one_centroid_job(spark, sf_dir, monkeypatch):
+    """Every assignment mode collects the (sqrt(N)-row) centroid table
+    exactly ONCE and feeds the chosen backend from those rows — no
+    separate sizing probe or count job, at or past the 64-cell
+    threshold."""
+    from pyspark.sql import functions as F
 
     from s4hanaconnector_spark.operators.similarity import ivf_topk
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), "embedding"
+    q, c = _ivf_fixture(spark, sf_dir)
+    many = (
+        c.filter(F.col("c_id") < 80)
+        .select(F.col("c_id").alias("cent_id"), "embedding")
+        .localCheckpoint()
     )
-    c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-
-    calls: list[str] = []
-    orig_collect, orig_take = DataFrame.collect, DataFrame.take
-    in_take = False
-
-    def counting_collect(self):
-        # classic take(n) is limit(n).collect(): don't double-count the
-        # collect nested inside a counted take
-        if not in_take:
-            calls.append("collect")
-        return orig_collect(self)
-
-    def counting_take(self, num):
-        nonlocal in_take
-        calls.append("take")
-        in_take = True
-        try:
-            return orig_take(self, num)
-        finally:
-            in_take = False
-
-    monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    monkeypatch.setattr(DataFrame, "take", counting_take)
-
-    kw = dict(k=10, n_centroids=16, n_probe=4)
-    # auto -> arrow (past the threshold): exactly one collect, no probe
-    ivf_topk(q, c, literal_centroid_max=1, **kw)
+    calls = _count_driver_jobs(monkeypatch)
+    kw = dict(k=10, n_probe=4)
+    # auto -> expr literal (within the threshold): exactly one collect
+    ivf_topk(q, c, n_centroids=16, **kw)
     assert calls == ["collect"], calls
-    # auto -> expr literal (within the threshold): still exactly one job
+    # auto -> arrow (past the threshold): still exactly one collect
     calls.clear()
-    ivf_topk(q, c, **kw)
+    ivf_topk(q, c, centroids=many, **kw)
     assert calls == ["collect"], calls
-    # explicit expr past the threshold: one bounded probe, zero collects
-    calls.clear()
-    ivf_topk(q, c, assignment="expr", literal_centroid_max=1, **kw)
-    assert calls == ["take"], calls
+    # explicit backends: the same single collect
+    for backend in ("expr", "arrow"):
+        calls.clear()
+        ivf_topk(q, c, n_centroids=16, assignment=backend, **kw)
+        assert calls == ["collect"], (backend, calls)
+
+
+def test_build_ann_index_runs_one_centroid_job(spark, sf_dir, monkeypatch):
+    """build_ann_index persists the backend cell_assigner resolved, so the
+    centroid table is read to the driver once — no separate count job to
+    re-derive the auto rule — and meta.json records that backend."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from s4hanaconnector_spark.operators.similarity import (
+        build_ann_index,
+        pq_subspace_codebooks,
+    )
+
+    _, c = _ivf_fixture(spark, sf_dir)
+    cbs = pq_subspace_codebooks(c, 16, 32)
+    cents = (
+        c.orderBy("c_id").limit(16)
+        .select(F.col("c_id").alias("cent_id"), "embedding")
+        .localCheckpoint()
+    )
+    calls = _count_driver_jobs(monkeypatch)
+    meta = build_ann_index(
+        c, tempfile.mkdtemp(prefix="ann_one_job_"), n_centroids=16,
+        centroids=cents, codebooks=cbs,
+    )
+    assert calls == ["collect"], calls
+    assert meta["assignment"] == "expr" and meta["encode"] == "arrow", meta
 
 
 def test_ivf_int8_rescore_plan_quantizes_candidates_only(spark, sf_dir):
@@ -506,8 +540,8 @@ def test_ivf_int8_rescore_plan_quantizes_candidates_only(spark, sf_dir):
 
 def test_ivf_int8_rescore_agrees_across_assignment_backends(spark, sf_dir):
     """rescore='int8' composes with BOTH assignment backends (the auto
-    default switches at literal_centroid_max, so the quantized rescore must
-    not care which backend assigned the cells)."""
+    default switches past 64 cells, so the quantized rescore must not care
+    which backend assigned the cells)."""
     from pyspark.sql import functions as F
 
     from s4hanaconnector_spark.operators.similarity import ivf_topk
@@ -524,73 +558,57 @@ def test_ivf_int8_rescore_agrees_across_assignment_backends(spark, sf_dir):
 
 
 def test_pq_rerank_plan_never_shuffles_corpus(spark, sf_dir):
-    """PQ + rerank keeps the rung family's plan contract: the codebook is a
-    plan literal, encode/score are row-local projections, the candidate set
-    and queries ride broadcasts, and the only hash exchanges are the ranked
-    windows on q_id — the corpus itself never exchanges on either of its
-    two passes (codes scan, candidate fetch)."""
-    from pyspark.sql import functions as F
-
+    """PQ + rerank keeps the rung family's plan contract: encode + score
+    are one row-local mapInArrow pass, the candidate set and queries ride
+    broadcasts, and the only hash exchanges are the ranked windows on
+    q_id — the corpus itself never exchanges on either of its two passes
+    (codes scan, candidate fetch)."""
     from s4hanaconnector_spark.operators.similarity import pq_rerank_topk
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), "embedding")
+    q, c = _ivf_fixture(spark, sf_dir)
     df = pq_rerank_topk(q, c, k=10, rerank=20, m=8, n_codes=8)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan
-    hash_ex = [
-        line for line in plan.splitlines() if "Exchange hashpartitioning" in line
-    ]
-    assert all("q_id" in line for line in hash_ex), hash_ex
+    assert _only_q_id_exchanges(plan), plan
+    assert "MapInArrow" in plan, plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
 
 
-def test_pq_encode_backends_agree_and_arrow_stays_rowlocal(spark, sf_dir):
-    """The PQ ADC backend (numpy encode + LUT score, the auto default past
-    m × n_codes >= 128) must produce the expr reference backend's exact
-    rows on the fixture, stay row-local (MapInArrow, no corpus exchange),
-    and reject unknown backend names."""
-    import pytest as _pytest
+def test_pq_lut_score_matches_adc_expr_and_stays_rowlocal(spark, sf_dir):
+    """pq_topk's fused encode + lookup-table score must give exactly the
+    rows of the shared ADC column expression (_pq_adc_cos — the scorer of
+    the IVF×PQ rung and the index probe) applied to the same encoder's
+    codes, and stay row-local (MapInArrow, no corpus exchange)."""
     from pyspark.sql import functions as F
 
-    from s4hanaconnector_spark.operators.similarity import (
-        pq_subspace_codebooks,
-        pq_topk,
-    )
+    from s4hanaconnector_spark.operators import similarity as S
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-    cbs = pq_subspace_codebooks(c, m=16, n_codes=16)
-    expr = pq_topk(q, c, k=20, codebooks=cbs, encode="expr")
-    arrow = pq_topk(q, c, k=20, codebooks=cbs, encode="arrow")
-    assert sorted(map(tuple, expr.collect())) == sorted(map(tuple, arrow.collect()))
+    q, c = _ivf_fixture(spark, sf_dir)
+    cbs = S.pq_subspace_codebooks(c, m=16, n_codes=16)
+    lut = S.pq_topk(q, c, k=20, codebooks=cbs)
 
-    plan = arrow._jdf.queryExecution().executedPlan().toString()
+    coded = S._arrow_pq_encode(
+        c.withColumn("__cell", F.lit(0).cast("bigint")), "c_id", "embedding",
+        cbs, 6,
+    )
+    qn = q.select(
+        "q_id",
+        F.col("embedding").alias("__qv"),
+        S._norm(F.col("embedding")).alias("__qnorm"),
+    )
+    adc = S._rank_topk(
+        coded.crossJoin(F.broadcast(qn))
+        .crossJoin(F.broadcast(S._pq_cb_df(spark, cbs)))
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select("q_id", "c_id", S._pq_adc_cos(len(cbs[0][0]), 6).alias("cosine")),
+        20, "q_id", "c_id",
+    )
+    assert sorted(map(tuple, lut.collect())) == sorted(map(tuple, adc.collect()))
+
+    plan = lut._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan
-    hash_ex = [
-        line for line in plan.splitlines() if "Exchange hashpartitioning" in line
-    ]
-    assert all("q_id" in line for line in hash_ex), hash_ex
-
-    # auto routing: 16 x 16 = 256 >= 128 -> arrow; tiny codebooks stay expr
-    assert "MapInArrow" in (
-        pq_topk(q, c, k=5, codebooks=cbs)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    small = pq_subspace_codebooks(c, m=8, n_codes=8)
-    assert "MapInArrow" not in (
-        pq_topk(q, c, k=5, codebooks=small)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    with _pytest.raises(ValueError, match="encode"):
-        pq_topk(q, c, encode="simd")
+    assert _only_q_id_exchanges(plan), plan
 
 
 def test_semdedup_no_cartesian_and_rowlocal_assignment(spark, sf_dir):

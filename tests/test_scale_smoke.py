@@ -557,16 +557,14 @@ def test_x100_scaling_ladder(spark):
     _ladder_entry(ladder, "similarity_ivf_probe_fixed_index", t10, t100, n100,
                   rerun=lambda: (probe(x10)[0], probe(x100)[0]))
 
-    # cell assignment at >=2k centroids (r7 VERDICT next #1): past
-    # literal_centroid_max the centroid table ships as DATA, not a literal
-    # plan tree — this rung proves assignment stays linear in corpus size
-    # at a centroid count where the literal path's plan-size cliff would
-    # begin (2500 cells x d F.lit nodes). It measures the DEFAULT backend
-    # (auto -> Arrow matmul at this count; the expr broadcast-data
-    # reference backend measured alpha 1.0 at 73 s -> 730 s in the r8 run
-    # that motivated the Arrow default — see BENCH_NOTES). The
-    # deterministic prefix quantizer keeps the rung about ASSIGNMENT cost,
-    # not KMeans build cost.
+    # cell assignment at >=2k centroids: past 64 cells auto assigns with
+    # the Arrow matmul backend instead of inlining the centroid table as a
+    # literal plan tree (2500 cells x d F.lit nodes) — this rung proves
+    # assignment stays linear in corpus size at that count. It measures
+    # the DEFAULT backend (an interpreted-HOF argmax measured alpha 1.0 at
+    # 73 s -> 730 s, which motivated the Arrow default — see BENCH_NOTES).
+    # The deterministic prefix quantizer keeps the rung about ASSIGNMENT
+    # cost, not KMeans build cost.
     def assign2k(d):
         q, c = emb(d)
         df = ivf_topk(q, c, k=10, n_centroids=2500, n_probe=4)
@@ -598,7 +596,7 @@ def test_x100_scaling_ladder(spark):
     _record_raw("arrow_backend_recall_2500_cells_x100", {
         "recall_at_10": f"{hit}/{len(bf)}",
         "floor": ">=80%",
-        "backend": "arrow (auto past literal_centroid_max)",
+        "backend": "arrow (auto past 64 cells)",
     })
     assert hit * 100 >= len(bf) * 80, (
         f"arrow-backend IVF recall regression at 2500 cells: {hit}/{len(bf)}"
@@ -644,7 +642,7 @@ def test_x100_scaling_ladder(spark):
 
     def sem_run(n):
         # arrow on BOTH stages — the backends that actually ship at scale
-        # (assignment past literal_centroid_max, pairing as ~90% of the
+        # (assignment past 64 cells, pairing as ~90% of the
         # wall); the expr reference backends carry the identical
         # complexity, measured alpha 1.38-1.41 in the r9 expr-pairing runs
         out = semantic_dedup(

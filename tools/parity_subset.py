@@ -1,10 +1,13 @@
 #!/usr/bin/env python
 """Targeted oracle parity for a named subset of declared queries — the
-round-12 per-change verification tool (full-registry `correctness_full.py`
-stays the round-end artifact; this is the fast inner loop after a change
-that touches specific operators).
+fast inner loop after a change that touches specific operators
+(full-registry `correctness_full.py` writes the whole-registry artifact).
 
 Usage: python tools/parity_subset.py QUERY [QUERY ...] [--sf SF_DIR]
+
+The session is sized from the host: ``local[$SPARK_GRAFT_CPUS]`` (default
+all cores) with a ``$SPARK_GRAFT_DRIVER_MEM`` heap (default 6g). Results
+do not depend on either.
 """
 
 from __future__ import annotations
@@ -36,11 +39,12 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from tests.parity import assert_parity
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("parity-subset")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
