@@ -21,11 +21,13 @@ Scale notes (100 TB design):
     source, shuffle both sides on PK. On a real cluster, bucket the source
     table by PK so this join is shuffle-free on the big side.
   * ``strategy="broadcast"`` is the scale path when the delta is small
-    relative to the snapshot (the normal CDC regime): an inner broadcast-hash
-    join finds live rows WITHOUT shuffling the source at all, and deletes are
-    recovered with a PK-only anti join (column-pruned scan of just the PK
-    columns). Two scans of pruned columns beat one full-width shuffle of
-    100 TB.
+    relative to the snapshot (the normal CDC regime): the source is scanned
+    once, as the probe side of a left-semi join against the broadcast
+    changed keys, and the few surviving rows are broadcast into the
+    reference's own outer join from the deduped log. Both broadcasts are
+    bounded by the changed keys; the source is never shuffled and never
+    a build side. The output equals ``strategy="outer"``; only the physical
+    plan differs.
   * PK values ride the change log as strings (PKLOG pk1..pk6 nvarchar(256),
     S4HanaProducer.java:99-111); the change view casts them back to the
     source PK types so joins compare natively instead of casting the 100 TB
@@ -157,53 +159,37 @@ def cdc_delta(
     deduped = latest_by_key(delta_range(cv, lo, hi), pk_names)
 
     marked = source.withColumn("__src_exists", F.lit(1))
-    non_pk_cols = [cm for cm in mapping.columnmappings if (cm.source_column or cm.alias) not in pk_names]
-    pk_alias = {cm.source_column: cm.alias for cm in mapping.columnmappings if cm.source_column in pk_names}
-
-    def project(joined: DataFrame, change_type: Column, deleted: Column) -> DataFrame:
-        cols = [
-            change_type,
-            F.col("_transactionid"),
-            # PKs from the log side (join key columns resolve to the left /
-            # log side under how='left'), renamed through the mapping alias
-            *[F.col(pk).alias(pk_alias.get(pk, pk)) for pk in pk_names],
-            *[cm.as_spark() for cm in non_pk_cols],
-        ]
-        if with_rowid:
-            # like the reference's "L1"."$rowid$": taken from the SOURCE
-            # side, hence NULL on deletes (the outer join found no row)
-            cols.append(
-                F.when(deleted, F.lit(None).cast("bigint"))
-                .otherwise(source_rowid(pk_names))
-                .alias("__source_rowid")
-            )
-        return joined.select(cols)
-
     if strategy == "outer":
         joined = deduped.join(marked, on=pk_names, how="left")
-        exists = F.col("__src_exists")
-        return project(joined, classify_change(exists), exists.isNull())
+    elif strategy == "broadcast":
+        # Scale path: the source is only ever the probe side. The semi join
+        # keeps the source rows whose PK changed; broadcasting them into the
+        # outer join leaves every broadcast bounded by the changed keys.
+        matched = marked.join(F.broadcast(deduped.select(pk_names)), on=pk_names, how="left_semi")
+        joined = deduped.join(F.broadcast(matched), on=pk_names, how="left")
+    else:
+        raise ValueError(f"unknown cdc_delta strategy: {strategy!r}")
 
-    if strategy == "broadcast":
-        # Scale path: no shuffle of the (huge) source. Live rows via inner
-        # broadcast-hash join; deletes via PK-only anti join (column-pruned).
-        live = marked.join(F.broadcast(deduped), on=pk_names, how="inner")
-        live_out = project(live, F.lit("A").alias("_change_type"), F.lit(False))
-        gone = deduped.join(source.select(pk_names), on=pk_names, how="left_anti")
-        gone_full = gone
-        for cm in non_pk_cols:
-            gone_full = gone_full.withColumn(cm.alias, F.lit(None))
-        gone_out = gone_full.select(
-            F.lit("D").alias("_change_type"),
-            F.col("_transactionid"),
-            *[F.col(pk).alias(pk_alias.get(pk, pk)) for pk in pk_names],
-            *[F.col(cm.alias) for cm in non_pk_cols],
-            *([F.lit(None).cast("bigint").alias("__source_rowid")] if with_rowid else []),
+    exists = F.col("__src_exists")
+    non_pk_cols = [cm for cm in mapping.columnmappings if (cm.source_column or cm.alias) not in pk_names]
+    pk_alias = {cm.source_column: cm.alias for cm in mapping.columnmappings if cm.source_column in pk_names}
+    cols = [
+        classify_change(exists),
+        F.col("_transactionid"),
+        # PKs from the log side (join key columns resolve to the left / log
+        # side under how='left'), renamed through the mapping alias
+        *[F.col(pk).alias(pk_alias.get(pk, pk)) for pk in pk_names],
+        *[cm.as_spark() for cm in non_pk_cols],
+    ]
+    if with_rowid:
+        # like the reference's "L1"."$rowid$": taken from the SOURCE side,
+        # hence NULL on deletes (the outer join found no row)
+        cols.append(
+            F.when(exists.isNull(), F.lit(None).cast("bigint"))
+            .otherwise(source_rowid(pk_names))
+            .alias("__source_rowid")
         )
-        # align null types with live_out by name
-        return live_out.unionByName(gone_out, allowMissingColumns=False)
-
-    raise ValueError(f"unknown cdc_delta strategy: {strategy!r}")
+    return joined.select(cols)
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from s4hanaconnector_spark.operators.cdc import (
     impacted_tables,
     watermark,
 )
+from s4hanaconnector_spark.operators.relational import observed
 
 
 class Writer:
@@ -59,16 +60,16 @@ class Writer:
 
 class ParquetWriter(Writer):
     """Default delivery: one parquet directory per key under ``out_dir``.
-    The read-back count is a cheap footer-only job — see
-    RangeCommitSink.write for why counting happens after durability."""
+    Rows are counted by an observed metric DURING the write job, so the
+    count is of the rows that landed and costs no second job."""
 
     def __init__(self, out_dir: str) -> None:
         self.out_dir = out_dir
 
     def write(self, key: str, df: DataFrame) -> int:
-        path = os.path.join(self.out_dir, key)
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path).count()
+        df, obs = observed(df, f"rows:{key}", {"n": F.count(F.lit(1))})
+        df.write.mode("overwrite").parquet(os.path.join(self.out_dir, key))
+        return obs.get["n"]
 
 
 class MemoryTopicWriter(Writer):
@@ -227,11 +228,11 @@ class RangeCommitSink:
         if self.committed(name, hi):
             return 0
         # Deliver FIRST, then record what actually landed: counting the
-        # input df would execute the whole delta query twice (once for the
-        # count, once for the write) and record a number taken before
-        # durability. The parquet writer's read-back count is a cheap
-        # footer-only job (file listing + row-group metadata, no column
-        # data decoded) — not free, but never re-runs the delta query.
+        # input df separately would execute the whole delta query twice
+        # (once for the count, once for the write) and record a number
+        # taken before durability. The writer reports the rows its own
+        # write job delivered (the parquet writer counts them during the
+        # write), so the delta query runs exactly once.
         n = self.writer.write(os.path.join(name, f"txid_hi={hi}"), df)
         self.log.commit(f"{name}.{hi}", {"name": name, "txid_hi": hi, "rows": n})
         return n

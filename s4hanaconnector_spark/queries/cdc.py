@@ -101,8 +101,9 @@ def cdc_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("cdc_delta_broadcast", _DELTA_ORACLE, headline=True)
 def cdc_delta_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics, scale strategy: broadcast inner join for live rows +
-    PK-only anti join for deletes — zero shuffle of the source table."""
+    """Same semantics, scale strategy: one scan of the source as the probe
+    side of a semi join against the broadcast changed keys, then the outer
+    join against those broadcast rows — zero shuffle of the source table."""
     return cdc_delta_df(spark, sf_dir, "broadcast")
 
 

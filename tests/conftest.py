@@ -37,11 +37,13 @@ def spark():
     # correctness harness injects its own plain SparkSession, so every query
     # must be self-sufficient (no reliance on get_spark confs like
     # nanosAsLong / UTC / Arrow). Only infra knobs here — parallelism,
-    # memory, UI — none of which may affect results.
+    # memory, UI — none of which may affect results. Parallelism follows
+    # the host (SPARK_GRAFT_CPUS, else every core), like session.get_spark.
     from pyspark.sql import SparkSession
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     s = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("s4spark-tests-vanilla")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.driver.memory", "8g")

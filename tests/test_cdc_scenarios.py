@@ -337,6 +337,38 @@ def test_source_rowid_passthrough(spark, strategy):
     assert again[1] == out[1]["__source_rowid"]
 
 
+@pytest.mark.parametrize("strategy", ["outer", "broadcast"])
+def test_delta_strategies_agree_on_edge_keys(spark, strategy):
+    """Both strategies are the reference's outer join (broadcast only
+    changes the physical plan), so they return the same multiset on the
+    edges too: a log PK that does not cast to the source type is a 'D'
+    with a NULL key under non-ANSI casts (and the same cast error in both
+    under ANSI), and a duplicated source PK yields one row per duplicate."""
+    log = _pklog(spark, [("U", 1, 10, 1), ("U", "x1", 11, 1), ("D", 9, 12, 1), ("U", 2, 13, 1)])
+    src = _source(spark, [(1, "a"), (1, "b"), (2, "c"), (3, "unchanged")])
+    other = "outer" if strategy == "broadcast" else "broadcast"
+
+    def delta(st):
+        rows = C.cdc_delta(src, log, MAPPING, 0, 100, strategy=st, with_rowid=True).collect()
+        return sorted((tuple(r) for r in rows), key=repr)
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        got = delta(strategy)
+        assert got == delta(other)
+        assert [r[:4] for r in got] == [
+            ("A", 10, 1, "a"), ("A", 10, 1, "b"), ("A", 13, 2, "c"),
+            ("D", 11, None, None), ("D", 12, 9, None),
+        ]
+        assert [r[4] is None for r in got] == [False, False, False, True, True]
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            delta(strategy)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_initial_load_rowid(spark):
     """O15 on the initial select (S4HanaTableMapping.java:744)."""
     src = _source(spark, [(1, "a"), (2, "b")])

@@ -49,6 +49,69 @@ def test_cdc_delta_broadcast_never_shuffles_source(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, operator text) per line of a physical-plan tree string, in
+    pre-order: a node's subtree is the run of following deeper lines."""
+    nodes = []
+    for line in plan.splitlines():
+        text = line.lstrip(" :+-")
+        if text:
+            nodes.append((len(line) - len(text), text))
+    return nodes
+
+
+def test_cdc_delta_broadcast_probes_source_once(spark, sf_dir, tmp_path):
+    """The broadcast delta scans the source ONCE, as the probe side of a
+    left-semi join against the broadcast changed keys; no broadcast is
+    built from a scan of the source, which would hash every source key on
+    every poll."""
+    from s4hanaconnector_spark.catalog import load_table
+    from s4hanaconnector_spark.operators.cdc import cdc_delta
+    from s4hanaconnector_spark.queries.cdc import HI, LO, ORDERS_MAPPING
+    from s4hanaconnector_spark.sources.pklog import synthetic_pklog
+
+    orders = load_table(spark, sf_dir, "orders")
+    src_dir, log_dir = str(tmp_path / "snapshot"), str(tmp_path / "changelog")
+    orders.write.parquet(src_dir)
+    synthetic_pklog(orders).write.parquet(log_dir)
+    df = cdc_delta(
+        spark.read.parquet(src_dir), spark.read.parquet(log_dir),
+        ORDERS_MAPPING, LO, HI, strategy="broadcast",
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = _plan_nodes(plan)
+    # scan locations are truncated in the plan string; the source is the
+    # file whose read schema is orders' columns (the log's is pk1..pk6)
+    def scans_source(t):
+        return t.startswith("FileScan") and "ReadSchema: struct<o_" in t
+
+    src_scans = [i for i, (_d, t) in enumerate(nodes) if scans_source(t)]
+    full = [i for i in src_scans if "o_custkey" in nodes[i][1]]
+    assert len(full) == 1, plan
+    (scan,) = full
+
+    def parent(i):
+        return next(j for j in range(i - 1, -1, -1) if nodes[j][0] < nodes[i][0])
+
+    j = parent(scan)
+    while "Join" not in nodes[j][1]:
+        j = parent(j)
+    assert nodes[j][1].startswith("BroadcastHashJoin"), plan
+    assert "LeftSemi, BuildRight" in nodes[j][1], plan
+
+    for i, (depth, text) in enumerate(nodes):
+        if not text.startswith("BroadcastExchange"):
+            continue
+        # the exchange's input down to its first join must not scan the
+        # source: the build side is a join output or the change log
+        for d, t in nodes[i + 1:]:
+            if d <= depth or "Join" in t:
+                break
+            assert not scans_source(t), plan
+    assert src_scans == full, plan  # the key column is not scanned apart
+    assert "SortMergeJoin" not in plan, plan
+
+
 def test_q3_small_dims_broadcast(spark, sf_dir):
     """E4: filtered customer/orders sides are broadcast, lineitem is joined
     without a sort-merge."""

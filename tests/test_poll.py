@@ -452,6 +452,58 @@ def test_truncated_marker_reads_uncommitted(spark, tmp_path):
     assert sink.last_committed("t") == 9
 
 
+def _jobs_run_by(spark, action):
+    """``(jobs started while action() ran, its result)`` — a statusTracker
+    diff, after the listener bus has drained."""
+    sc = spark.sparkContext
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out = action()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before), out
+
+
+def test_parquet_writer_counts_during_the_write(spark, tmp_path):
+    """The parquet sink counts rows inside its own write job: it runs
+    exactly as many jobs as a bare ``df.write.parquet`` of the same frame
+    (no read-back job), and returns the rows that landed."""
+    from s4hanaconnector_spark.operators.cdc import cdc_delta
+    from s4hanaconnector_spark.poll import ParquetWriter
+
+    src = _src(spark, [(i, f"v{i}") for i in range(50)])
+    log = _pklog(spark, [("U", i, 10 + i % 3) for i in range(0, 80, 2)])
+    df = cdc_delta(src, log, MAPPING, 0, 100, strategy="broadcast")
+    sink_jobs, n = _jobs_run_by(spark, lambda: ParquetWriter(str(tmp_path / "sink")).write("k", df))
+    bare_jobs, _ = _jobs_run_by(spark, lambda: df.write.parquet(str(tmp_path / "bare")))
+    assert sink_jobs == bare_jobs > 0
+    landed = spark.read.parquet(str(tmp_path / "sink" / "k"))
+    assert n == landed.count() == 40
+    assert landed.filter("_change_type = 'D'").count() == 15
+
+
+@pytest.mark.parametrize("empty", ["filter", "limit0"])
+def test_parquet_writer_empty_frame_counts_zero(spark, tmp_path, empty):
+    """An empty frame still completes its observation: the writer returns
+    0 instead of blocking forever on ``Observation.get``."""
+    import threading
+
+    from s4hanaconnector_spark.poll import ParquetWriter
+
+    df = _src(spark, [(1, "a"), (2, "b")])
+    df = df.filter("id < 0") if empty == "filter" else df.limit(0)
+    got = {}
+    t = threading.Thread(
+        target=lambda: got.setdefault("n", ParquetWriter(str(tmp_path)).write("k", df)),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "ParquetWriter.write blocked on an empty frame"
+    assert got["n"] == 0
+
+
 def test_quarantine_seen_compaction_preserves_dedup(spark, tmp_path):
     """The fingerprint side-state is append-only (plus crash-replay
     duplicates); compaction must rewrite it distinct + few-file without
