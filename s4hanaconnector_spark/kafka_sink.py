@@ -122,7 +122,12 @@ class KafkaFramedWriter(Writer):
     (S4HanaProducer.java:458). In-memory that is a dict overwrite; against
     a broker it is the transactional producer's abort path — Spark's kafka
     sink participates via the idempotent RangeCommitSink marker, which is
-    how the reference tags transactions with the hi watermark (:424)."""
+    how the reference tags transactions with the hi watermark (:424).
+
+    Safe for concurrent keys (``poll()`` writes its mappings side by
+    side): in memory each call is one store into its topic's dict under
+    its own range key; ``setdefault`` creates a shared topic dict
+    atomically under the GIL."""
 
     def __init__(
         self,

@@ -7,7 +7,9 @@ orchestration over the engine's operators:
   2. short-circuit: lo == hi means nothing to do (:396-398)
   3. impacted tables (O23): DISTINCT table_name in (lo, hi] — bounded by
      table count, so collecting it driver-side is safe at any scale
-  4. per impacted mapping: the delta query (O10-O14) over (lo, hi]
+  4. per impacted mapping: the delta query (O10-O14) over (lo, hi]; the
+     impacted mappings are emitted concurrently, one unit (resume point,
+     delta, write, commit) per mapping
   5. transactional emit (O26): each (mapping, hi) range lands exactly once —
      a replayed poll with an already-committed range is a no-op, the same
      idempotency the reference gets from tagging Kafka transactions with the
@@ -25,9 +27,11 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from s4hanaconnector_spark.mapping import TableMapping
 from s4hanaconnector_spark.operators.cdc import (
@@ -52,6 +56,11 @@ class Writer:
     ``write(key, df) -> rows_landed`` where a re-``write`` of the same key
     REPLACES any earlier, uncommitted delivery for that key (Kafka: abort
     the old txn and republish; files: mode="overwrite").
+
+    Concurrency: ``poll()`` emits its impacted mappings side by side, so
+    ``write()`` may be called concurrently for DISTINCT keys within one
+    poll (never twice at once for the same key). An implementation must
+    keep per-key state apart — shared mutable state needs its own lock.
     """
 
     def write(self, key: str, df: DataFrame) -> int:  # pragma: no cover
@@ -61,7 +70,9 @@ class Writer:
 class ParquetWriter(Writer):
     """Default delivery: one parquet directory per key under ``out_dir``.
     Rows are counted by an observed metric DURING the write job, so the
-    count is of the rows that landed and costs no second job."""
+    count is of the rows that landed and costs no second job. Safe for
+    concurrent keys: each call runs its own Spark job into its own
+    directory, with its own ``Observation``."""
 
     def __init__(self, out_dir: str) -> None:
         self.out_dir = out_dir
@@ -77,7 +88,9 @@ class MemoryTopicWriter(Writer):
     an in-memory topic; a replayed write of the same key replaces the prior
     (uncommitted) delivery, mirroring abort-and-republish. Driver-side
     collect makes this strictly a test/demo implementation — it exists to
-    prove the sink protocol is portable off parquet (O26)."""
+    prove the sink protocol is portable off parquet (O26). Safe for
+    concurrent keys: each call is one store into the ``topics`` dict under
+    its own key (atomic under the GIL)."""
 
     def __init__(self) -> None:
         self.topics: dict[str, list] = {}
@@ -493,6 +506,17 @@ def poll(
     and return hi (the next resume point). ``from_txid`` unchanged means
     nothing was safe to read.
 
+    The impacted mappings' units (resume point, ``load_source``, delta,
+    write, commit) run concurrently on a thread pool sized by the
+    context's default parallelism, so ``load_source`` is called from pool
+    threads and must be safe to call from several at once. Their jobs
+    inherit the caller's job group, so ``cancelJobGroup`` still cancels
+    the whole poll. ``poll`` waits for every unit and then re-raises the
+    first failure in mapping order; it never returns ``hi`` when a unit
+    failed. The mappings that did commit keep their ranges, the state a
+    crash partway leaves, and the per-mapping resume point makes it
+    replay-safe.
+
     ``on_alert`` is the O22 hook (S4HanaProducer.java:339-358): called as
     ``on_alert(level, oldest_start_time)`` when the oldest in-flight write
     transaction has been open longer than the info (5 s) / warn (60 s)
@@ -547,25 +571,34 @@ def poll(
         r["table_name"]
         for r in impacted_tables(pklog, schema_name, from_txid, hi).collect()
     }
-    # one changed physical table can feed several mapping objects
-    # (tabledirectory fan-out, S4HanaProducer.java:56-61)
-    for m in mappings:
-        if m.mastertable not in changed:
-            continue
-        # Per-mapping resume: a crash partway through this loop leaves some
-        # mappings committed at hi and others not; if the watermark has
-        # advanced by the replay (hi' > hi), re-emitting (from_txid, hi']
-        # for the already-committed mappings would create two committed
-        # ranges with OVERLAPPING rows. Each mapping therefore resumes from
-        # its own last committed hi — ranges per mapping never overlap,
-        # which is the reference's all-tables-in-one-Kafka-transaction
-        # atomicity re-expressed for per-mapping markers.
+
+    def emit(m: TableMapping) -> None:
+        # Per-mapping resume: a crash or a failed unit leaves some mappings
+        # committed at hi and others not; if the watermark has advanced by
+        # the replay (hi' > hi), re-emitting (from_txid, hi'] for the
+        # already-committed mappings would create two committed ranges with
+        # OVERLAPPING rows. Each mapping therefore resumes from its own last
+        # committed hi — ranges per mapping never overlap, which is the
+        # reference's all-tables-in-one-Kafka-transaction atomicity
+        # re-expressed for per-mapping markers.
         lo_m = max(from_txid, sink.last_committed(m.name) or from_txid)
         if hi <= lo_m:
-            continue
+            return
         delta = cdc_delta(
             load_source(m.mastertable), pklog, m, lo_m, hi,
             schema_name=schema_name, strategy="broadcast",
         )
         sink.write(m.name, hi, delta)
+
+    # one changed physical table can feed several mapping objects
+    # (tabledirectory fan-out, S4HanaProducer.java:56-61). Their units run
+    # side by side: each one's driver-side build and planning overlaps the
+    # others' jobs. Every unit is wrapped on this thread, so its jobs carry
+    # the caller's job group, description and scheduler pool.
+    units = [m for m in mappings if m.mastertable in changed]
+    workers = max(1, min(len(units), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(emit), m) for m in units]
+    for f in futures:  # every unit has finished; first failure in mapping order
+        f.result()
     return hi

@@ -1,13 +1,41 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# Per-test call durations, written to .pytest_durations.json at the repo root
+# when the session ends (slowest first, with the total), so the suite's wall
+# is on record for every run.
+DURATIONS_PATH = os.path.join(ROOT, ".pytest_durations.json")
+_durations: dict[str, float] = {}
+
+
+def pytest_runtest_logreport(report):
+    if report.when == "call":
+        _durations[report.nodeid] = report.duration
+
+
+def pytest_sessionfinish(session, exitstatus):
+    if not _durations:
+        return
+    tests = sorted(_durations.items(), key=lambda kv: kv[1], reverse=True)
+    with open(DURATIONS_PATH, "w") as f:
+        json.dump(
+            {
+                "total_s": round(sum(_durations.values()), 3),
+                "tests": [{"id": k, "s": round(v, 3)} for k, v in tests],
+            },
+            f,
+            indent=1,
+        )
 
 
 # Runtime confs session.get_spark sets: any in-process code path that calls

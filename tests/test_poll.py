@@ -6,6 +6,7 @@ PerformanceIT's shape without HANA/Kafka."""
 from __future__ import annotations
 
 import datetime
+import functools
 import glob
 import os
 
@@ -427,6 +428,159 @@ def test_poll_crash_partway_then_advance_never_overlaps_ranges(spark, tmp_path):
     # u (uncommitted at 10) re-emitted its full range under the new hi
     u_20 = spark.read.parquet(str(tmp_path / "out" / "u" / "txid_hi=20"))
     assert {r["id"] for r in u_20.collect()} == {1}
+
+
+def _mapping(name):
+    return TableMapping(
+        name=name, mastertable=name,
+        columnmappings=[ColumnMapping("id", '"L1"."id"'), ColumnMapping("val", '"L1"."val"')],
+        pkcolumns=["id"],
+    )
+
+
+# three mappings, one per physical table
+TUV = [MAPPING, _mapping("u"), _mapping("v")]
+
+
+def _log_over(spark, changes):
+    """One change log over several tables: ``{table: [(pk, txid), ...]}``."""
+    logs = [_pklog(spark, [("U", pk, tx) for pk, tx in rows], table=t)
+            for t, rows in changes.items()]
+    return functools.reduce(lambda a, b: a.unionByName(b), logs)
+
+
+def test_poll_emits_impacted_mappings_concurrently(spark, tmp_path):
+    """The impacted mappings' units are in flight together: every write
+    waits at a three-party barrier before delivering, so a poll that
+    emitted its mappings one after another would break the barrier on its
+    first write and raise."""
+    import threading
+
+    from s4hanaconnector_spark.poll import ParquetWriter, Writer
+
+    if spark.sparkContext.defaultParallelism < 3:
+        pytest.skip("the unit pool is sized by defaultParallelism, here < 3")
+
+    class BarrierWriter(Writer):
+        def __init__(self, out_dir):
+            self.inner = ParquetWriter(out_dir)
+            self.barrier = threading.Barrier(3, timeout=30)
+
+        def write(self, key, df):
+            self.barrier.wait()
+            return self.inner.write(key, df)
+
+    out = str(tmp_path / "out")
+    sink = RangeCommitSink(out, writer=BarrierWriter(out))
+    src = _src(spark, [(1, "a"), (2, "b"), (3, "c")])
+    log = _log_over(spark, {"t": [(1, 10)], "u": [(2, 10)], "v": [(3, 10)]})
+    hi = poll(spark, TUV, lambda n: src, log, _txns(spark, []), 0, sink, NOW)
+    assert hi == 10
+    for name, pk in (("t", 1), ("u", 2), ("v", 3)):
+        assert sink.committed(name, 10)
+        got = spark.read.parquet(os.path.join(out, name, "txid_hi=10"))
+        assert [(r["id"], r["val"]) for r in got.collect()] == [(pk, "abc"[pk - 1])]
+
+
+def test_poll_failed_unit_reraises_and_replay_emits_only_its_range(spark, tmp_path):
+    """One of three mappings' delivery fails: poll re-raises that very
+    exception after the other units finish, their ranges stay committed,
+    and a replay after the watermark advanced emits rows only into the
+    failed mapping's range — no mapping ever holds two committed ranges
+    that share a row (the crash-partway contract, reached by a failure)."""
+    import json
+
+    from s4hanaconnector_spark.poll import ParquetWriter, Writer
+
+    class FailingU(Writer):
+        def __init__(self, out_dir):
+            self.inner = ParquetWriter(out_dir)
+            self.boom = RuntimeError("delivery of u failed")
+            self.armed = True
+
+        def write(self, key, df):
+            if self.armed and key.split(os.sep)[0] == "u":
+                raise self.boom
+            return self.inner.write(key, df)
+
+    out = str(tmp_path / "out")
+    writer = FailingU(out)
+    sink = RangeCommitSink(out, writer=writer)
+    src = _src(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")])
+    log1 = _log_over(spark, {"t": [(1, 10)], "u": [(2, 10)], "v": [(3, 10)]})
+    with pytest.raises(RuntimeError) as ei:
+        poll(spark, TUV, lambda n: src, log1, _txns(spark, []), 0, sink, NOW)
+    assert ei.value is writer.boom
+    assert sink.committed("t", 10) and sink.committed("v", 10)
+    assert sink.last_committed("u") is None
+
+    # the caller never got hi, so it replays from 0; the watermark has
+    # advanced by then (u changed again at txid 20)
+    writer.armed = False
+    log2 = log1.unionByName(_pklog(spark, [("U", 4, 20)], table="u"))
+    hi = poll(spark, TUV, lambda n: src, log2, _txns(spark, []), 0, sink, NOW)
+    assert hi == 20
+
+    def rows(name, hi):
+        with open(sink.log.marker(f"{name}.{hi}")) as f:
+            return json.load(f)["rows"]
+
+    # t and v resumed from their own hi=10: their new ranges are empty
+    assert (rows("t", 20), rows("u", 20), rows("v", 20)) == (0, 2, 0)
+    u_20 = spark.read.parquet(os.path.join(out, "u", "txid_hi=20"))
+    assert sorted(r["id"] for r in u_20.collect()) == [2, 4]
+    for name in ("t", "u", "v"):
+        ids = [r["id"] for r in sink.read_committed(spark, name).collect()]
+        assert len(ids) == len(set(ids)), f"{name}: overlapping committed ranges"
+
+
+def test_poll_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Jobs the pool threads start carry the caller's job group, so
+    ``cancelJobGroup`` still reaches the whole poll."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sink = RangeCommitSink(str(tmp_path / "out"))
+    src = _src(spark, [(1, "a"), (2, "b"), (3, "c")])
+    log = _log_over(spark, {"t": [(1, 10)], "u": [(2, 10)], "v": [(3, 10)]})
+    bus.waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("poll-g", "three-mapping poll")
+    try:
+        assert poll(spark, TUV, lambda n: src, log, _txns(spark, []), 0, sink, NOW) == 10
+    finally:
+        sc._jsc.clearJobGroup()  # _jobs_run_by asserts no group is set
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    # the watermark and impacted-table collects, plus a write per mapping
+    assert len(sc.statusTracker().getJobIdsForGroup("poll-g")) >= 5
+    assert all(sink.committed(n, 10) for n in ("t", "u", "v"))
+
+
+def test_poll_concurrent_memory_deliveries_lose_nothing(spark, tmp_path):
+    """Stress of the Writer contract: five mappings delivered side by side
+    into one MemoryTopicWriter under a short thread switch interval each
+    land exactly their own rows and marker."""
+    import sys
+
+    from s4hanaconnector_spark.poll import MemoryTopicWriter
+
+    names = ["t", "u", "v", "w", "x"]
+    writer = MemoryTopicWriter()
+    sink = RangeCommitSink(str(tmp_path / "out"), writer=writer)
+    src = _src(spark, [(i, f"v{i}") for i in range(len(names))])
+    log = _log_over(spark, {n: [(i, 10)] for i, n in enumerate(names)})
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        hi = poll(spark, [_mapping(n) for n in names], lambda n: src, log,
+                  _txns(spark, []), 0, sink, NOW)
+    finally:
+        sys.setswitchinterval(old)
+    assert hi == 10
+    assert {k: [r["id"] for r in v] for k, v in writer.topics.items()} == {
+        os.path.join(n, "txid_hi=10"): [i] for i, n in enumerate(names)
+    }
+    assert all(sink.committed(n, 10) for n in names)
 
 
 def test_truncated_marker_reads_uncommitted(spark, tmp_path):
