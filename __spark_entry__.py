@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash). ``correctness_full.py`` runs the same check for the whole
+registry and records it in ``CORRECTNESS_FULL.json``.
 
 All real logic lives in ``s4hanaconnector_spark``; this module only adapts
 the registry to the driver's interface.

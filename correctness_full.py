@@ -1,20 +1,31 @@
-"""Full-registry correctness artifact: run EVERY declared query against its
-DuckDB oracle at sf0.01 and write ``CORRECTNESS_FULL.json`` — the in-repo,
-auditable parity record for the whole registry (the driver's per-round
-``CORRECTNESS_r*.json`` samples 50 queries; this closes the evidence gap for
-the rest — ADVICE r3).
+"""Oracle parity for declared queries: run each against its DuckDB oracle.
 
-Usage: ``python correctness_full.py [sf_dir]`` (default /root/testdata/sf0.01).
+Usage: ``python correctness_full.py [NAME ...] [--sf SF_DIR]`` (default
+the sf0.01 fixtures).
+
+With no names it runs EVERY declared query and writes
+``CORRECTNESS_FULL.json`` — the in-repo, auditable parity record for the
+whole registry. With names it runs just those (the inner loop after a change
+that touches specific operators), prints OK/FAIL per name and writes no
+artifact. Exit status 1 on any failure.
+
+The session is sized from the host: ``local[$SPARK_GRAFT_CPUS]`` (default
+all cores) with a ``$SPARK_GRAFT_DRIVER_MEM`` heap (default a share of host
+memory). Results do not depend on either.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
 import duckdb
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -23,22 +34,30 @@ TABLES = [
 
 
 def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", metavar="NAME")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", metavar="SF_DIR")
+    args = ap.parse_args()
+    sf = args.sf
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
+
+    from s4hanaconnector_spark.session import driver_memory
     from tests.parity import assert_parity
 
     # a PLAIN session, mirroring the driver's injected one — running under
     # get_spark's tuned confs (UTC, nanosAsLong, Arrow) would let this
-    # artifact stay green for queries that only work WITH those confs,
+    # check stay green for queries that only work WITH those confs,
     # exactly the portability gap it exists to audit. Only result-neutral
     # infra knobs here.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("correctness-full-plain")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("correctness-plain")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
@@ -46,13 +65,14 @@ def main() -> int:
     for n in TABLES:
         con.execute(f"CREATE VIEW {n} AS SELECT * FROM '{sf}/{n}.parquet'")
     qs, oracles = e.queries(), e.oracle_sql()
+    names = args.names or list(qs)
     out: dict[str, dict] = {}
     failed = 0
-    for name, fn in qs.items():
+    for name in names:
         t0 = time.time()
         rec: dict = {"ok": False, "oracle": name in oracles, "err": None}
         try:
-            sdf = fn(spark, sf)
+            sdf = qs[name](spark, sf)
             if name in oracles:
                 # assert_parity returns the verified row count — re-running
                 # the oracle for a separate count(*) would execute every
@@ -66,28 +86,31 @@ def main() -> int:
             rec["err"] = repr(ex)[:400]
         rec["sec"] = round(time.time() - t0, 2)
         out[name] = rec
-        print(("OK  " if rec["ok"] else "FAIL"), name, flush=True)
+        if rec["ok"]:
+            kind = "parity-exact" if rec["oracle"] else "rows-only, no oracle"
+            print(f"OK   {name}: {rec['rows']} rows {kind} ({rec['sec']}s)", flush=True)
+        else:
+            print(f"FAIL {name}: {rec['err']}", flush=True)
+    spark.stop()
     n_oracle = sum(1 for r in out.values() if r["oracle"] and r["ok"])
-    artifact = {
-        "sf_dir": sf,
-        "n_queries": len(qs),
-        "n_ok": len(qs) - failed,
-        "n_fail": failed,
-        # how many of the oks were actually ORACLE-VERIFIED (vs rows-only
-        # smoke for non-SQL-expressible queries) — the summary must not
-        # conflate "parity-proven" with "didn't crash"
-        "n_oracle_checked": n_oracle,
-        "queries": out,
-    }
-    # anchor to the repo, not the cwd: run from anywhere, the committed
-    # artifact is the one that updates
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "CORRECTNESS_FULL.json")
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print(
-        f"wrote CORRECTNESS_FULL.json: {len(qs) - failed}/{len(qs)} ok "
-        f"({n_oracle} oracle-verified)"
-    )
+    print(f"{len(names) - failed}/{len(names)} ok ({n_oracle} oracle-verified)")
+    if not args.names:
+        artifact = {
+            "sf_dir": sf,
+            "n_queries": len(qs),
+            "n_ok": len(qs) - failed,
+            "n_fail": failed,
+            # how many of the oks were actually ORACLE-VERIFIED (vs rows-only
+            # smoke for non-SQL-expressible queries) — the summary must not
+            # conflate "parity-proven" with "didn't crash"
+            "n_oracle_checked": n_oracle,
+            "queries": out,
+        }
+        # anchor to the repo, not the cwd: run from anywhere, the committed
+        # artifact is the one that updates
+        with open(os.path.join(ROOT, "CORRECTNESS_FULL.json"), "w") as f:
+            json.dump(artifact, f, indent=1, sort_keys=True)
+        print("wrote CORRECTNESS_FULL.json")
     return 1 if failed else 0
 
 

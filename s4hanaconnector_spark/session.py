@@ -13,6 +13,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+# default driver heap: this share of the host's physical memory
+HEAP_SHARE = 0.4
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else ``HEAP_SHARE`` of the host's memory."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_gb = max(1, int(HEAP_SHARE * total / 2**30))
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{heap_gb}g"
+
 
 def get_spark(
     app_name: str = "s4hanaconnector_spark",
@@ -21,7 +31,8 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) the engine SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``) and
+    :func:`driver_memory` sizes the heap.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -48,7 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the events fixture stores TIMESTAMP(NANOS); Spark has no nano

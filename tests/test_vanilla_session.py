@@ -27,7 +27,7 @@ def test_events_loads_on_fresh_session(spark, sf_dir):
 
 def test_events_query_on_fresh_session(spark, sf_dir, duck):
     """One full events-based oracle query through a fresh-conf session —
-    the exact shape that was red in CORRECTNESS_r01."""
+    the shape that once failed under a plain driver session."""
     fresh = spark.newSession()
     from s4hanaconnector_spark.queries import load_all
     from tests.parity import assert_parity
