@@ -194,9 +194,12 @@ def _summary(doc: dict) -> dict:
 
 def _streaming_tier(spark, base_dir: str) -> dict:
     """Measured streaming latency: BASELINE.md's "<= 5 s per 1k-change
-    micro-batch" target, measured through the full poll composition —
-    file-source change feed (E17) -> per-batch cdc_delta against the orders
-    table (E8) -> transactional foreachBatch sink with commit markers (E16).
+    micro-batch" target, measured through the always-on CDC path —
+    file-source change feed (E17) triggering batch ``poll()`` per
+    micro-batch (``streaming.core.poll_each_batch``: safe watermark,
+    impacted tables, delta against the orders table, ``RangeCommitSink``
+    commit markers). The transaction table is empty, so nothing is held
+    back.
 
     Three legs:
       * ``1k``:  21 polls x 1k changes (21 samples so nearest-rank p95 is a
@@ -205,9 +208,12 @@ def _streaming_tier(spark, base_dir: str) -> dict:
         fan-out lands bursts as bigger polls, S4HanaProducer.java:400-420);
         at 10 samples nearest-rank p95 EQUALS max — the conservative
         direction for a latency gate;
-      * ``burst``: a 10-poll backlog drained in one AvailableNow pass (no
-        maxFilesPerTrigger) — restart-recovery wall, not steady-state.
+      * ``burst``: a 10-poll backlog drained in one AvailableNow pass —
+        restart-recovery wall, not steady-state.
 
+    In the steady legs each poll's file lands and is drained before the
+    next one lands: every micro-batch re-reads the log by txid range, so a
+    log holding the whole backlog would emit it all in the first batch.
     The pipeline is stateless (its checkpoint holds no ``state/``), so the
     state-store provider does not enter what is timed."""
     import shutil
@@ -236,15 +242,21 @@ def _run_streaming_leg(spark, base_dir, base, n_polls, rows_per, burst=False) ->
     from pyspark.sql import functions as F
 
     from s4hanaconnector_spark.catalog import load_table
-    from s4hanaconnector_spark.operators.cdc import cdc_delta
+    from s4hanaconnector_spark.poll import RangeCommitSink
     from s4hanaconnector_spark.queries.cdc import ORDERS_IDENTITY
-    from s4hanaconnector_spark.streaming.core import changes_stream, transactional_sink
+    from s4hanaconnector_spark.streaming.core import (
+        PKLOG_DDL,
+        changes_stream,
+        drain,
+        poll_each_batch,
+    )
 
     log_dir = os.path.join(base, "log")
     os.makedirs(log_dir)
     orders = load_table(spark, base_dir, "orders")
     n_orders = orders.count()
-    for p in range(n_polls):
+
+    def land(p: int) -> None:
         rows = spark.range(rows_per).select(
             F.lit("2026-01-01 00:00:00").cast("timestamp").alias("change_ts"),
             F.lit("S4").alias("schema_name"),
@@ -258,37 +270,39 @@ def _run_streaming_leg(spark, base_dir, base, n_polls, rows_per, burst=False) ->
         w = os.path.join(base, f"w{p}")
         rows.coalesce(1).write.parquet(w)
         part = glob.glob(os.path.join(w, "part-*.parquet"))[0]
-        # one file per poll, copied in mod-time order so triggers see the
-        # polls in sequence (maxFilesPerTrigger=1 = one poll per batch)
         shutil.copy(part, os.path.join(log_dir, f"poll{p:03d}.parquet"))
 
-    def apply_delta(batch_df, batch_id):
-        return cdc_delta(orders, batch_df, ORDERS_IDENTITY, 0, 10**12)
+    on_batch = poll_each_batch(
+        spark, [ORDERS_IDENTITY], lambda name: orders,
+        lambda: spark.read.schema(PKLOG_DDL).parquet(log_dir),
+        lambda: spark.createDataFrame([], "update_transaction_id bigint, start_time timestamp"),
+        0, RangeCommitSink(os.path.join(base, "out")), lambda: "2026-01-01 00:00:00",
+    )
 
-    sink = transactional_sink(os.path.join(base, "out"), transform=apply_delta)
-    stream = changes_stream(
-        spark, log_dir, max_files_per_trigger=None if burst else 1
-    )
+    def run():
+        return drain(
+            changes_stream(spark, log_dir).writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+        )
+
     steal = _steal()
-    t0 = time.perf_counter()
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drained = q.awaitTermination(300)
-    drain_wall = time.perf_counter() - t0
+    if burst:
+        for p in range(n_polls):
+            land(p)
+        t0 = time.perf_counter()
+        progresses = run().recentProgress
+        drain_wall = time.perf_counter() - t0
+    else:
+        progresses = []
+        for p in range(n_polls):
+            land(p)
+            progresses += run().recentProgress
     steal = round(_steal() - steal, 2)
-    progresses = list(q.recentProgress)
-    q.stop()
-    walls = sorted(
-        p["durationMs"]["triggerExecution"] / 1000.0
-        for p in progresses
-        if p["numInputRows"] > 0
-    )
+    # AvailableNow runs no empty batch here, and the trigger never reads a
+    # batch's rows (its progress reports numInputRows 0): every entry is a poll
+    walls = sorted(p["durationMs"]["triggerExecution"] / 1000.0 for p in progresses)
     if not walls:  # pragma: no cover - defensive: never report an empty leg
-        return {"batches": 0, "drained": bool(drained)}
+        return {"batches": 0}
     if burst:
         # backlog-recovery leg: the metric is the wall to drain the whole
         # pile, plus how many batches the engine chose to split it into
@@ -298,7 +312,6 @@ def _run_streaming_leg(spark, base_dir, base, n_polls, rows_per, burst=False) ->
             "batches": len(walls),
             "drain_sec": round(drain_wall, 3),
             "steal_s": steal,
-            "drained": bool(drained),
         }
 
     def pct(frac: float) -> float:
@@ -316,7 +329,6 @@ def _run_streaming_leg(spark, base_dir, base, n_polls, rows_per, burst=False) ->
         "max_sec": round(walls[-1], 3),
         "target_sec": 5.0,
         "steal_s": steal,
-        "drained": bool(drained),
     }
 
 

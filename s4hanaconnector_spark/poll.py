@@ -16,9 +16,11 @@ orchestration over the engine's operators:
      hi watermark (beginDeltaTransaction(hi, ...), :424)
   6. return hi as the new resume point (:456)
 
-Streaming is the same composition under foreachBatch (streaming/core.py);
-this batch driver exists because the reference's contract IS a pull-based
-poll loop, and because backfills/replays are batch invocations of exactly
+Streaming runs this same function once per micro-batch:
+``streaming.core.poll_each_batch`` returns the ``foreachBatch`` function,
+which re-reads the log and the transaction monitor, calls ``poll`` and
+carries its ``hi`` to the next batch. The reference's contract IS a
+pull-based poll loop, and backfills/replays are batch invocations of exactly
 this function.
 """
 
@@ -179,7 +181,7 @@ class RangeCommitSink:
         :meth:`committed_keys` so the marker-scanning contract (including
         truncated-marker re-validation, which must never yield a resume
         point that skips a range needing replay) lives in exactly one
-        place. Hot-poll economy (ADVICE r7): keys are probed DESCENDING and
+        place. Hot-poll economy: keys are probed DESCENDING and
         the scan stops at the first parseable marker — the common case
         (healthy newest marker) costs one file open per poll instead of
         JSON-parsing every committed range's marker. A truncated

@@ -20,6 +20,7 @@ from s4hanaconnector_spark.operators.relational import (
 )
 from s4hanaconnector_spark.queries.registry import register, t
 from s4hanaconnector_spark.sources.partsupp import PARTSUPP_CTE
+from s4hanaconnector_spark.streaming.core import drain
 
 # exact-decimal helpers (Spark side)
 _D = "decimal(18,2)"
@@ -2146,15 +2147,10 @@ def streaming_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed, "poll=*"))
     )
-    sq = (
+    drain(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise TimeoutError("streaming_distinct_sketch did not drain")
     last = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))[-1]
     drained = estimate_distinct(spark.read.parquet(last), out="__est")
     one_shot = estimate_distinct(

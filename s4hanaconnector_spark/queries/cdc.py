@@ -8,11 +8,17 @@ identical log.
 
 from __future__ import annotations
 
+import glob as _glob
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s4hanaconnector_spark.mapping import ColumnMapping, TableMapping
 from s4hanaconnector_spark.operators import cdc as C
+from s4hanaconnector_spark.poll import RangeCommitSink, materialize_snapshot, poll
 from s4hanaconnector_spark.queries.registry import register, t
 from s4hanaconnector_spark.sources.pklog import (
     CUSTOMER_PKLOG_ORACLE_CTE,
@@ -20,6 +26,14 @@ from s4hanaconnector_spark.sources.pklog import (
     TRANSACTIONS_ORACLE_CTE,
     synthetic_pklog,
     synthetic_transactions,
+)
+from s4hanaconnector_spark.streaming.core import (
+    PKLOG_DDL,
+    changes_stream,
+    drain,
+    poll_each_batch,
+    stateful_latest_by_key,
+    transactional_sink,
 )
 
 LO, HI = 1005, 1040  # the delta poll's (lo, hi] transaction range
@@ -54,6 +68,52 @@ ORDERS_IDENTITY = TableMapping(
     ],
     pkcolumns=["o_orderkey"],
 )
+
+
+def _stream_polls(
+    spark: SparkSession,
+    prefix: str,
+    polls: list[DataFrame],
+    mappings: list[TableMapping],
+    sources: dict[str, DataFrame],
+    from_txid: int,
+) -> RangeCommitSink:
+    """Land each of ``polls`` as one change-log file, drain the change
+    stream with batch ``poll()`` per micro-batch (no writer in flight) and
+    return the sink holding the committed ranges."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    log_glob = os.path.join(d, "log", "poll=*")
+    for i, df in enumerate(polls):
+        df.coalesce(1).write.parquet(os.path.join(d, "log", f"poll={i}"))
+    sink = RangeCommitSink(os.path.join(d, "out"))
+    on_batch = poll_each_batch(
+        spark, mappings, lambda name: sources[name],
+        # the glob is expanded here: a batch read of a glob path logs a
+        # FileNotFoundException stack trace looking for a sink metadata dir
+        lambda: spark.read.schema(PKLOG_DDL).parquet(*_glob.glob(log_glob)),
+        lambda: spark.createDataFrame([], "update_transaction_id bigint, start_time timestamp"),
+        from_txid, sink, lambda: "2026-01-01 00:00:00",
+    )
+    drain(
+        changes_stream(spark, log_glob, max_files_per_trigger=1)
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", os.path.join(d, "ckpt"))
+    )
+    return sink
+
+
+def _state_before(
+    spark: SparkSession, state_dir: str, prefix: str, batch_id: int
+) -> DataFrame:
+    """The newest ``{prefix}_NNNNNN`` state version a micro-batch before
+    ``batch_id`` wrote, else ``{prefix}_base``. A replayed batch therefore
+    reads its predecessor's state, never its own earlier attempt."""
+    mine = os.path.join(state_dir, f"{prefix}_{batch_id:06d}")
+    prev = [
+        v for v in sorted(_glob.glob(os.path.join(state_dir, f"{prefix}_0*"))) if v < mine
+    ]
+    return spark.read.parquet(prev[-1] if prev else os.path.join(state_dir, f"{prefix}_base"))
+
 
 _DELTA_ORACLE_BODY = f"""
 WITH {PKLOG_ORACLE_CTE.strip()},
@@ -390,11 +450,6 @@ def cdc_materialize_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state the one-shot SQL defines from the committed ranges alone —
     aborted-transaction invisibility included, not just compaction
     algebra."""
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.poll import RangeCommitSink, materialize_snapshot
-
     orders = t(spark, sf_dir, "orders")
     stale = orders.filter(F.col("o_orderkey") % 3 != 0)
     pklog = synthetic_pklog(orders)
@@ -486,9 +541,9 @@ SELECT 'final' AS as_of_point, * FROM s2
 """,
 )
 def cdc_materialize_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADDITIVE schema evolution through the full consumer loop (VERDICT r7
-    next #6): range 1 is emitted under the original orders mapping, the
-    mapping is REBUILT with a computed column (O28-O30), and range 2 is
+    """ADDITIVE schema evolution through the full consumer loop: range 1
+    is emitted under the original orders mapping, the mapping is REBUILT
+    with a computed column (O28-O30), and range 2 is
     emitted under the evolved mapping — so the sink topic's committed
     ranges genuinely differ in schema, exactly the reference's mid-stream
     DDL case (rebuild mapping -> newer Avro records carry the field).
@@ -498,10 +553,6 @@ def cdc_materialize_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
     predates the rebuild read NULL; keys re-changed after it carry the
     computed value) — both hash-matched against the one-shot SQL
     reconstruction."""
-    import tempfile
-
-    from s4hanaconnector_spark.poll import RangeCommitSink, materialize_snapshot
-
     orders = t(spark, sf_dir, "orders")
     stale = orders.filter(F.col("o_orderkey") % 3 != 0)
     pklog = synthetic_pklog(orders)
@@ -610,11 +661,6 @@ def cdc_poll_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the reference delta SQL over (0, max]. What is verified is
     the whole lifecycle the reference's S4HanaProducer.poll runs per
     interval, including the sink round-trip, not just the delta plan."""
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.poll import RangeCommitSink, poll
-
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     txns = synthetic_transactions(orders)
@@ -887,11 +933,6 @@ def cdc_two_poll_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi1 with the identical watermark SQL so the split is scale-agnostic.
     A PK changed in both ranges legitimately appears twice with different
     transaction ids — exactly what a downstream consumer would see."""
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.poll import RangeCommitSink, poll
-
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     txns = synthetic_transactions(orders)
@@ -930,7 +971,7 @@ SELECT _quarantine_reason, count(*) AS n_rows FROM bad GROUP BY 1
 """,
 )
 def cdc_quarantine_poll_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The POLL-LEVEL dead-letter contract (r4 ADVICE): across TWO advancing
+    """The POLL-LEVEL dead-letter contract: across TWO advancing
     polls over a feed carrying four garbage classes — NULL pk, unknown
     change type, NULL change type, NULL txid — every malformed row lands in
     the DLQ EXACTLY once. The oracle is the one-shot classification of the
@@ -947,11 +988,6 @@ def cdc_quarantine_poll_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     polls sit 27 years apart in fixture time — under the default 7-day
     retention the second poll would legitimately RE-SHIP everything
     (that behavior has its own oracle, ``cdc_quarantine_retention``)."""
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.poll import RangeCommitSink, poll
-
     orders = t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     base = synthetic_pklog(orders)
@@ -1008,7 +1044,7 @@ FROM orders WHERE o_orderkey % 31 = 0
 """,
 )
 def cdc_quarantine_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O25 symmetry for the DLQ fingerprint state (r5 residual nit): shipped
+    """O25 symmetry for the DLQ fingerprint state: shipped
     fingerprints age out after the retention window instead of deduping
     forever, so the state stays bounded by windowed malformed volume. Three
     polls over the SAME dirty feed: poll 2 lands inside the 7-day window
@@ -1017,11 +1053,6 @@ def cdc_quarantine_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle pins both effects at once: total DLQ rows = exactly 2× the
     injected leg (one initial ship + one post-expiry re-ship, zero from the
     in-window poll), distinct content = 1× (the re-ship is the same rows)."""
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.poll import RangeCommitSink, poll
-
     orders = t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     base = synthetic_pklog(orders)
@@ -1082,16 +1113,6 @@ def cdc_stream_to_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals GROUP BY pk, max(txid) — which is exactly what the oracle
     computes. What is verified is the whole pipeline: file source ->
     state store -> exactly-once sink -> parquet readback."""
-    import glob as _glob
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.streaming.core import (
-        changes_stream,
-        stateful_latest_by_key,
-        transactional_sink,
-    )
-
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     d = tempfile.mkdtemp(prefix="cdc_stream_sink_")
@@ -1106,16 +1127,10 @@ def cdc_stream_to_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = stateful_latest_by_key(stream, ["o_orderkey"], "transactionid")
     sink = transactional_sink(out_dir)
-    q = (
-        frontier.writeStream.outputMode("update")
-        .foreachBatch(sink)
+    drain(
+        frontier.writeStream.outputMode("update").foreachBatch(sink)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("cdc_stream_to_sink did not drain")
     batches = _glob.glob(os.path.join(out_dir, "batch_id=*"))
     # collapse emissions to the final frontier: robust if AvailableNow ever
     # splits the backlog into several batches (each advance re-emits a key)
@@ -1158,17 +1173,6 @@ def cdc_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     silent. Both properties are visible in the per-batch sink output the
     oracle recomputes — a lost checkpoint would re-emit every first-half
     key in batch 1 and fail the hash."""
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-
-    from s4hanaconnector_spark.streaming.core import (
-        changes_stream,
-        stateful_latest_by_key,
-        transactional_sink,
-    )
-
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     d = tempfile.mkdtemp(prefix="cdc_restart_")
@@ -1188,16 +1192,11 @@ def cdc_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pk1").cast("bigint").alias("o_orderkey"), F.col("transactionid")
         )
         frontier = stateful_latest_by_key(stream, ["o_orderkey"], "transactionid")
-        q = (
+        drain(
             frontier.writeStream.outputMode("update")
             .foreachBatch(transactional_sink(out_dir))
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("restart-resume stream did not drain")
 
     _drop(pklog.filter(F.col("change_type") == "U"), "poll1.parquet")
     _run_once()  # batch 0: update legs
@@ -1771,10 +1770,6 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate proves the streaming fold == batch recompute. State versions
     are written per batch id (replay-safe: a re-delivered batch overwrites
     its own version, the successor always reads its predecessor)."""
-    import glob as _glob
-    import os
-    import tempfile
-
     o = t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     upd = o.filter((k % 7 == 0) & (k % 11 != 0)).select(
@@ -1828,9 +1823,7 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fold(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
-        versions = sorted(_glob.glob(os.path.join(state_dir, "v_*")))
-        prev = [v for v in versions if v < os.path.join(state_dir, f"v_{batch_id:06d}")]
-        state = s.read.parquet(prev[-1] if prev else os.path.join(state_dir, "v_base"))
+        state = _state_before(s, state_dir, "v", batch_id)
         new_state = C.maintain_grouped_agg_from_images(
             state, batch_df, group_col="pri", measure_col="price"
         )
@@ -1843,15 +1836,10 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed_dir, "poll=*"))
     )
-    q = (
+    drain(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_incremental_agg did not drain")
     final = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))[-1]
     return spark.read.parquet(final).select(
         F.col("pri").alias("o_orderpriority"),
@@ -1880,100 +1868,25 @@ FROM delta WHERE _change_type <> 'D'
 def streaming_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL consumer loop through the real streaming
     engine: the PKLOG change feed lands as two poll files (split by txid),
-    a file stream drains them one micro-batch each, and every foreachBatch
-    runs the whole delta pipeline — per-PK latest dedup of the batch's
-    keys, stream-static join against the source for current values, delete
-    classification — then MERGEs the result onto a versioned parquet
-    snapshot with apply_changes. The final materialized table must equal
-    the one-shot batch merge over the same (LO, HI] range (the
-    cdc_apply_changes oracle): per-PK latest-wins composes across
-    micro-batches because later polls carry strictly higher txids, the
-    same argument the reference relies on for its poll loop. That
-    ordering invariant is ENFORCED, not assumed: each state version
-    records the max txid it absorbed in a sidecar, and merge_batch
-    asserts the incoming batch's min txid is strictly above it — an
-    out-of-order delivery (older values clobbering newer state) fails
-    loudly instead of silently corrupting the snapshot. State versions
-    are per batch id (replay overwrites its own version, and the replayed
-    batch compares against the PRIOR version's frontier, so replays pass)."""
-    import glob as _glob
-    import os
-    import tempfile
-
+    and every micro-batch runs batch ``poll()`` (poll_each_batch) — safe
+    watermark, per-PK latest dedup of the range's keys, the join against
+    the source for current values, delete classification — into a
+    RangeCommitSink. The committed ranges are then MERGEd onto the source
+    snapshot with materialize_snapshot. The final table must equal the
+    one-shot batch merge over the same (LO, HI] range (the
+    cdc_apply_changes oracle). Each batch reads the log by txid range, so
+    delivery cannot run out of order."""
     orders = t(spark, sf_dir, "orders")
-    pklog = synthetic_pklog(orders).filter(
-        (F.col("transactionid") > LO) & (F.col("transactionid") <= HI)
-    )
-    d = tempfile.mkdtemp(prefix="stream_apply_")
-    feed_dir = os.path.join(d, "feed")
-    state_dir = os.path.join(d, "state")
-    ckpt = os.path.join(d, "ckpt")
+    txid = F.col("transactionid")
+    pklog = synthetic_pklog(orders).filter((txid > LO) & (txid <= HI))
     mid = (LO + HI) // 2
-    pklog.filter(F.col("transactionid") <= mid).coalesce(1).write.parquet(
-        os.path.join(feed_dir, "poll=0")
+    sink = _stream_polls(
+        spark, "stream_apply_", [pklog.filter(txid <= mid), pklog.filter(txid > mid)],
+        [ORDERS_IDENTITY], {"orders": orders}, LO,
     )
-    pklog.filter(F.col("transactionid") > mid).coalesce(1).write.parquet(
-        os.path.join(feed_dir, "poll=1")
+    return materialize_snapshot(
+        spark, sink, ORDERS_IDENTITY.name, ["o_orderkey"], base=orders
     )
-    orders.write.parquet(os.path.join(state_dir, "v_base"))
-
-    from s4hanaconnector_spark.streaming.core import PKLOG_DDL
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        versions = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))
-        prev = [v for v in versions if v < os.path.join(state_dir, f"v_{batch_id:06d}")]
-        state = s.read.parquet(prev[-1] if prev else os.path.join(state_dir, "v_base"))
-        # Enforce monotone delivery: apply_changes blindly upserts, so an
-        # out-of-order micro-batch (txids at or below the already-applied
-        # frontier) would let stale values overwrite newer state. Spark's
-        # FileStreamSource delivers in mod-time-then-path order, which
-        # makes this hold — but the invariant is checked, not trusted.
-        frontier = LO
-        if prev:
-            fp = os.path.join(
-                state_dir, "tx_" + os.path.basename(prev[-1])[2:] + ".txt"
-            )
-            if os.path.exists(fp):
-                with open(fp) as fh:
-                    frontier = int(fh.read())
-        span = batch_df.agg(
-            F.min("transactionid").alias("lo"), F.max("transactionid").alias("hi")
-        ).collect()[0]
-        if span["lo"] is not None and span["lo"] <= frontier:
-            raise AssertionError(
-                f"out-of-order micro-batch: min txid {span['lo']} <= "
-                f"applied frontier {frontier}"
-            )
-        # the delta pipeline against the STATIC source, scoped to this
-        # micro-batch's keys (O10-O14 inside foreachBatch)
-        batch = C.cdc_delta(
-            orders, batch_df, ORDERS_IDENTITY,
-            LO, HI, strategy="broadcast",
-        )
-        new_state = C.apply_changes(state, batch, ["o_orderkey"])
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v_{batch_id:06d}")
-        )
-        with open(os.path.join(state_dir, f"tx_{batch_id:06d}.txt"), "w") as fh:
-            fh.write(str(span["hi"] if span["hi"] is not None else frontier))
-
-    stream = (
-        spark.readStream.schema(PKLOG_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed_dir, "poll=*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_apply_changes did not drain")
-    final = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))[-1]
-    return spark.read.parquet(final)
 
 
 @register(
@@ -2010,7 +1923,7 @@ GROUP BY o.o_orderkey, o.o_orderstatus
 """,
 )
 def cdc_nested_bo_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental nested-BO maintenance (VERDICT r3 #2): master and detail
+    """Incremental nested-BO maintenance: master and detail
     CDC batches arrive, and ONLY the affected nested documents are re-nested
     and merged over the prior snapshot (operators/nesting.py
     maintain_nested_docs). The oracle recomputes the nested summary from a
@@ -2071,13 +1984,13 @@ def cdc_nested_bo_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     detail_batch = db_u.unionByName(db_d)
 
-    # Eager lineage cut between the MERGE and the MAINTENANCE legs (r4
-    # VERDICT #6): maintain_nested_docs consumes each merged table in
+    # Eager lineage cut between the MERGE and the MAINTENANCE legs:
+    # maintain_nested_docs consumes each merged table in
     # several legs (semi-join pruning, affected-key derivation, the
     # re-nest), so without the cut every leg re-embeds — and Catalyst
     # re-analyzes — the whole apply_changes subtree; composed
     # merge+maintain chains grow analysis cost superlinearly (86 shuffles
-    # in the r4 static plan). WHEN to cut: whenever a merge output fans
+    # in the uncut static plan). WHEN to cut: whenever a merge output fans
     # into 2+ maintenance legs. At 100 TB the same cut is free: the merged
     # table is the CDC apply target anyway — write it to its sink and read
     # it back instead of localCheckpoint (same lineage cut, durable).
@@ -2122,23 +2035,18 @@ FROM orders
 """,
 )
 def streaming_pk_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VERDICT r3 #6: PK-UPDATE expansion inside the real streaming engine.
+    """PK-UPDATE expansion inside the real streaming engine.
     A batch of source updates where some rows CHANGE THEIR PRIMARY KEY is
     expanded trigger-style (pk_change_expand, O7/E7 — new-key row always,
     old-key row when the PK moved, S4HanaTableMapping.java:194-220) into
-    PKLOG rows, streamed through a file source, and merged in foreachBatch
-    via the full delta pipeline: the old key is absent from the post-change
-    source, so cdc_delta classifies it 'D' and apply_changes REMOVES it,
-    while the new key upserts with its payload — upsert(new) + delete(old)
-    in one maintained snapshot. The oracle states the end-to-end contract
-    directly: the final state equals the source with keys moved and
-    payloads bumped."""
-    import glob as _glob
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.streaming.core import PKLOG_DDL
-
+    PKLOG rows and streamed through a file source; each micro-batch runs
+    batch ``poll()`` (the full delta pipeline) and materialize_snapshot
+    merges the committed ranges onto the source snapshot. The old key is
+    absent from the post-change source, so the delta classifies it 'D' and
+    the merge REMOVES it, while the new key upserts with its payload —
+    upsert(new) + delete(old) in one maintained snapshot. The oracle states
+    the end-to-end contract directly: the final state equals the source
+    with keys moved and payloads bumped."""
     orders = t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     movers = k % 39 == 0          # PK changes (39 = 3*13 -> subset of payload)
@@ -2170,42 +2078,12 @@ def streaming_pk_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("orders").alias("table_name"),
     )
 
-    d = tempfile.mkdtemp(prefix="stream_pkupd_")
-    feed_dir = os.path.join(d, "feed")
-    state_dir = os.path.join(d, "state")
-    ckpt = os.path.join(d, "ckpt")
-    pklog.coalesce(1).write.parquet(os.path.join(feed_dir, "poll=0"))
-    orders.write.parquet(os.path.join(state_dir, "v_base"))
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        versions = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))
-        prev = [v for v in versions if v < os.path.join(state_dir, f"v_{batch_id:06d}")]
-        state = s.read.parquet(prev[-1] if prev else os.path.join(state_dir, "v_base"))
-        batch = C.cdc_delta(
-            orders_new, batch_df, ORDERS_IDENTITY, 0, 10_000, strategy="broadcast"
-        )
-        new_state = C.apply_changes(state, batch, ["o_orderkey"])
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v_{batch_id:06d}")
-        )
-
-    stream = (
-        spark.readStream.schema(PKLOG_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed_dir, "poll=*"))
+    sink = _stream_polls(
+        spark, "stream_pkupd_", [pklog], [ORDERS_IDENTITY], {"orders": orders_new}, 0
     )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return materialize_snapshot(
+        spark, sink, ORDERS_IDENTITY.name, ["o_orderkey"], base=orders
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_pk_update did not drain")
-    final = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))[-1]
-    return spark.read.parquet(final)
 
 
 @register(
@@ -2228,9 +2106,6 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation. Projection pruning applies to the CSV scan like any
     source; this is the extract-file ingestion path a Spark deployment of
     the reference uses when JDBC isn't reachable."""
-    import os
-    import tempfile
-
     from s4hanaconnector_spark.sources.files import read_csv
 
     sub = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 4 == 0).select(
@@ -2270,9 +2145,6 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture, proving nested JSON round-trips typed end-to-end. Explicit
     schema keeps the scan single-pass; a malformed line would land in
     _corrupt_record instead of failing the job (tests/test_sources_files)."""
-    import os
-    import tempfile
-
     from s4hanaconnector_spark.sources.files import read_json
 
     sub = (
@@ -2337,9 +2209,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the parquet fixture, so parity proves the ORC round trip is
     value-exact. Predicate pushdown and column pruning apply to ORC scans
     like parquet (same DataSource V2 path)."""
-    import os
-    import tempfile
-
     sub = (
         t(spark, sf_dir, "lineitem")
         .filter((F.col("l_orderkey") % 16 == 0) & (F.col("l_linenumber") == 1))
@@ -2384,9 +2253,6 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, and file creation is setup, not the measured operator; at
     corpus scale the files already exist (that is the point of the
     source)."""
-    import os
-    import tempfile
-
     sub = (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 37 == 0)
@@ -2542,106 +2408,40 @@ def streaming_multi_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E115: the reference's MULTI-TABLE poll through the streaming engine —
     one PKLOG stream carries changes for BOTH orders and customer
     (S4HanaProducer.java:400-420 walks every impacted table inside a single
-    poll), and each micro-batch routes rows by table_name to that table's
-    delta pipeline + MERGE onto its own versioned snapshot. Base snapshots
-    start with rows missing (every 3rd order / 4th customer absent), so the
-    merge genuinely inserts; the final per-table row counts, key sums and
-    DECIMAL measure sums must equal the one-shot batch merges. Per-table
-    txid frontiers are enforced independently — the cross-table ordering
-    the reference gets from its per-table emit loop."""
-    import glob as _glob
-    import os
-    import tempfile
-
+    poll), and each micro-batch runs batch ``poll()``: the impacted-table
+    fan-out gives each table's mapping its own delta and its own committed
+    ranges, and each mapping resumes from its own last committed range.
+    Base snapshots start with rows missing (every 3rd order / 4th customer
+    absent), so the merge genuinely inserts; the final per-table row
+    counts, key sums and DECIMAL measure sums must equal the one-shot
+    batch merges."""
     from s4hanaconnector_spark.sources.pklog import synthetic_pklog_customer
-    from s4hanaconnector_spark.streaming.core import PKLOG_DDL
 
     orders = t(spark, sf_dir, "orders")
     customer = t(spark, sf_dir, "customer")
-    base = {
-        "orders": orders.filter(F.col("o_orderkey") % 3 != 0),
-        "customer": customer.filter(F.col("c_custkey") % 4 != 0),
-    }
-    source = {"orders": orders, "customer": customer}
-    mapping = {"orders": ORDERS_IDENTITY, "customer": CUSTOMER_IDENTITY}
-    pk = {"orders": ["o_orderkey"], "customer": ["c_custkey"]}
-
+    txid = F.col("transactionid")
     feed = (
         synthetic_pklog(orders)
         .unionByName(synthetic_pklog_customer(customer))
-        .filter((F.col("transactionid") > LO) & (F.col("transactionid") <= HI))
+        .filter((txid > LO) & (txid <= HI))
     )
-    d = tempfile.mkdtemp(prefix="stream_multi_")
-    feed_dir = os.path.join(d, "feed")
-    state_dir = os.path.join(d, "state")
     mid = (LO + HI) // 2
-    feed.filter(F.col("transactionid") <= mid).coalesce(1).write.parquet(
-        os.path.join(feed_dir, "poll=0")
+    sink = _stream_polls(
+        spark, "stream_multi_", [feed.filter(txid <= mid), feed.filter(txid > mid)],
+        [ORDERS_IDENTITY, CUSTOMER_IDENTITY], {"orders": orders, "customer": customer},
+        LO,
     )
-    feed.filter(F.col("transactionid") > mid).coalesce(1).write.parquet(
-        os.path.join(feed_dir, "poll=1")
-    )
-    for tbl, df in base.items():
-        df.write.parquet(os.path.join(state_dir, tbl, "v_base"))
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        for tbl in ("orders", "customer"):
-            sub = batch_df.filter(F.col("table_name") == tbl)
-            span = sub.agg(
-                F.min("transactionid").alias("lo"), F.max("transactionid").alias("hi")
-            ).collect()[0]
-            if span["lo"] is None:
-                continue
-            tdir = os.path.join(state_dir, tbl)
-            versions = sorted(_glob.glob(os.path.join(tdir, "v_0*")))
-            prev = [v for v in versions if v < os.path.join(tdir, f"v_{batch_id:06d}")]
-            state = s.read.parquet(prev[-1] if prev else os.path.join(tdir, "v_base"))
-            frontier = LO
-            if prev:
-                fp = os.path.join(tdir, "tx_" + os.path.basename(prev[-1])[2:] + ".txt")
-                if os.path.exists(fp):
-                    with open(fp) as fh:
-                        frontier = int(fh.read())
-            if span["lo"] <= frontier:
-                raise AssertionError(
-                    f"{tbl}: out-of-order micro-batch {span['lo']} <= {frontier}"
-                )
-            delta = C.cdc_delta(
-                source[tbl], sub, mapping[tbl], LO, HI, strategy="broadcast"
-            )
-            new_state = C.apply_changes(state, delta, pk[tbl])
-            new_state.write.mode("overwrite").parquet(
-                os.path.join(tdir, f"v_{batch_id:06d}")
-            )
-            with open(os.path.join(tdir, f"tx_{batch_id:06d}.txt"), "w") as fh:
-                fh.write(str(span["hi"]))
-
-    stream = (
-        spark.readStream.schema(PKLOG_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed_dir, "poll=*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_multi_table_merge did not drain")
-
     outs = []
-    for tbl, keycol, measure in (
-        ("orders", "o_orderkey", "o_totalprice"),
-        ("customer", "c_custkey", "c_acctbal"),
+    for mapping, base, keycol, measure in (
+        (ORDERS_IDENTITY, orders.filter(F.col("o_orderkey") % 3 != 0),
+         "o_orderkey", "o_totalprice"),
+        (CUSTOMER_IDENTITY, customer.filter(F.col("c_custkey") % 4 != 0),
+         "c_custkey", "c_acctbal"),
     ):
-        final = sorted(_glob.glob(os.path.join(state_dir, tbl, "v_0*")))[-1]
-        snap = spark.read.parquet(final)
+        snap = materialize_snapshot(spark, sink, mapping.name, [keycol], base=base)
         outs.append(
             snap.agg(
-                F.lit(tbl).alias("table_name"),
+                F.lit(mapping.mastertable).alias("table_name"),
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum(keycol).cast("bigint").alias("key_sum"),
                 F.sum(F.col(measure).cast("decimal(18,2)"))
@@ -2733,12 +2533,6 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     State per batch is the history table itself — the consumer-side
     artifact the reference's change stream implies
     (S4HanaProducer.java:442)."""
-    import glob as _glob
-    import os
-    import tempfile
-
-    from s4hanaconnector_spark.streaming.core import PKLOG_DDL
-
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     d = tempfile.mkdtemp(prefix="stream_scd2_")
@@ -2805,20 +2599,13 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_dir, f"v_{batch_id:06d}")
         )
 
-    stream = (
-        spark.readStream.schema(PKLOG_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed_dir, "poll=*"))
+    stream = changes_stream(
+        spark, os.path.join(feed_dir, "poll=*"), max_files_per_trigger=1
     )
-    q = (
+    drain(
         stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_scd2_history did not drain")
     final = sorted(_glob.glob(os.path.join(state_dir, "v_0*")))[-1]
     return spark.read.parquet(final)
 
@@ -3089,7 +2876,7 @@ def cdc_quarantine_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(leg(43, "X", k.cast("string")))
         .unionByName(leg(53, "U", F.lit(None).cast("string")))
         # NULL change_type: must classify bad_change_type, not slip through
-        # the isin() three-valued-logic hole (round-4 ADVICE)
+        # the isin() three-valued-logic hole
         .unionByName(leg(59, F.lit(None).cast("string"), k.cast("string")))
     )
     labeled = C.classify_malformed(dirty)
@@ -3141,10 +2928,6 @@ def streaming_nested_bo_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     each step's affected-set pruning sees the then-current merged tables
     (a master deleted in step 0 cannot be resurrected by its detail
     change in step 1: the semi-join finds no master)."""
-    import glob as _glob
-    import os
-    import tempfile
-
     from s4hanaconnector_spark.operators.nesting import maintain_nested_docs, nest
 
     master0 = t(spark, sf_dir, "orders").select(
@@ -3221,20 +3004,11 @@ def streaming_nested_bo_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     master0.write.parquet(os.path.join(state_dir, "m_base"))
     detail0.write.parquet(os.path.join(state_dir, "d_base"))
 
-    def prev_version(s, prefix, batch_id):
-        versions = sorted(_glob.glob(os.path.join(state_dir, f"{prefix}_0*")))
-        prev = [
-            v
-            for v in versions
-            if v < os.path.join(state_dir, f"{prefix}_{batch_id:06d}")
-        ]
-        return s.read.parquet(prev[-1] if prev else os.path.join(state_dir, f"{prefix}_base"))
-
     def merge_batch(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
-        prev_snap = prev_version(s, "snap", batch_id)
-        prev_m = prev_version(s, "m", batch_id)
-        prev_d = prev_version(s, "d", batch_id)
+        prev_snap = _state_before(s, state_dir, "snap", batch_id)
+        prev_m = _state_before(s, state_dir, "m", batch_id)
+        prev_d = _state_before(s, state_dir, "d", batch_id)
         master_batch = batch_df.filter(F.col("table_name") == "orders").select(
             "_change_type", "_transactionid",
             "o_orderkey", "o_orderstatus", "o_totalprice",
@@ -3271,15 +3045,10 @@ def streaming_nested_bo_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed_dir, "poll=*"))
     )
-    q = (
+    drain(
         stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_nested_bo_maintenance did not drain")
     final = sorted(_glob.glob(os.path.join(state_dir, "snap_0*")))[-1]
     snap = spark.read.parquet(final)
     return snap.select(
@@ -3337,7 +3106,7 @@ GROUP BY c.c_custkey, c.c_name
 )
 def streaming_nested_bo_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-LEVEL nested-document maintenance through the real streaming
-    engine (r5 VERDICT #8): the customer -> orders[] -> items[] document of
+    engine: the customer -> orders[] -> items[] document of
     ``nest_customer_orders_items``, maintained incrementally under THREE
     micro-batches (customer changes, then order changes — including
     CUSTOMER-REASSIGNMENT updates — then item changes). Each foreachBatch
@@ -3350,10 +3119,6 @@ def streaming_nested_bo_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders change in batch 1 (affected-set semi-join finds no master). The
     final snapshot's per-customer rollup must equal the oracle's flat
     3-table recompute over the merged tables."""
-    import glob as _glob
-    import os
-    import tempfile
-
     from s4hanaconnector_spark.operators.nesting import maintain_nested_docs, nest
 
     cust0 = t(spark, sf_dir, "customer").select("c_custkey", "c_name")
@@ -3467,16 +3232,6 @@ def streaming_nested_bo_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1_base.write.parquet(os.path.join(state_dir, "s1_base"))
     nest2(cust0, s1_base).write.parquet(os.path.join(state_dir, "s2_base"))
 
-    def prev_version(s, prefix, batch_id):
-        versions = sorted(_glob.glob(os.path.join(state_dir, f"{prefix}_0*")))
-        prev = [
-            v for v in versions
-            if v < os.path.join(state_dir, f"{prefix}_{batch_id:06d}")
-        ]
-        return s.read.parquet(
-            prev[-1] if prev else os.path.join(state_dir, f"{prefix}_base")
-        )
-
     def write_state(df, prefix, batch_id):
         # mode("overwrite"): replayed foreachBatch ids replace their own
         # prior uncommitted versions (at-least-once delivery); writing then
@@ -3488,11 +3243,11 @@ def streaming_nested_bo_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def merge_batch(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
-        prev_c = prev_version(s, "c", batch_id)
-        prev_m = prev_version(s, "m", batch_id)
-        prev_d = prev_version(s, "d", batch_id)
-        prev_s1 = prev_version(s, "s1", batch_id)
-        prev_s2 = prev_version(s, "s2", batch_id)
+        prev_c = _state_before(s, state_dir, "c", batch_id)
+        prev_m = _state_before(s, state_dir, "m", batch_id)
+        prev_d = _state_before(s, state_dir, "d", batch_id)
+        prev_s1 = _state_before(s, state_dir, "s1", batch_id)
+        prev_s2 = _state_before(s, state_dir, "s2", batch_id)
         cb = batch_df.filter(F.col("table_name") == "customer").select(
             "_change_type", "_transactionid", "c_custkey", "c_name"
         )
@@ -3564,15 +3319,11 @@ def streaming_nested_bo_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed_dir, "poll=*"))
     )
-    q = (
+    drain(
         stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming_nested_bo_2level did not drain")
     final = sorted(_glob.glob(os.path.join(state_dir, "s2_0*")))[-1]
     snap = spark.read.parquet(final)
     dec = "CAST(0 AS DECIMAL(18,2))"
@@ -3618,10 +3369,6 @@ def streaming_forget_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-table row counts must hash-equal the one-shot erasure of the full
     seed set — deletion composes across micro-batches because erasure is
     idempotent and monotone."""
-    import glob as _glob
-    import os
-    import tempfile
-
     cust0 = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
@@ -3644,21 +3391,10 @@ def streaming_forget_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust0.write.parquet(os.path.join(state_dir, "c_base"))
     ord0.write.parquet(os.path.join(state_dir, "o_base"))
 
-    def prev_version(s, prefix, batch_id):
-        versions = sorted(_glob.glob(os.path.join(state_dir, f"{prefix}_0*")))
-        prev = [
-            v
-            for v in versions
-            if v < os.path.join(state_dir, f"{prefix}_{batch_id:06d}")
-        ]
-        return s.read.parquet(
-            prev[-1] if prev else os.path.join(state_dir, f"{prefix}_base")
-        )
-
     def merge_batch(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
-        cust = prev_version(s, "c", batch_id)
-        orders = prev_version(s, "o", batch_id)
+        cust = _state_before(s, state_dir, "c", batch_id)
+        orders = _state_before(s, state_dir, "o", batch_id)
         keys = batch_df.select("c_custkey")
         o_del = orders.join(
             F.broadcast(keys), orders.o_custkey == keys.c_custkey, "leftsemi"
@@ -3690,15 +3426,10 @@ def streaming_forget_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed_dir, "poll=*"))
     )
-    q = (
+    drain(
         stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_forget_cascade did not drain")
     fc = sorted(_glob.glob(os.path.join(state_dir, "c_0*")))[-1]
     fo = sorted(_glob.glob(os.path.join(state_dir, "o_0*")))[-1]
     c_n = spark.read.parquet(fc).agg(F.count(F.lit(1)).alias("n_rows"))

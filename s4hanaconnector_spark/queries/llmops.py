@@ -19,6 +19,7 @@ from s4hanaconnector_spark.operators import multimodal as M
 from s4hanaconnector_spark.operators import similarity as S
 from s4hanaconnector_spark.operators import text as X
 from s4hanaconnector_spark.queries.registry import register, t
+from s4hanaconnector_spark.streaming.core import drain
 
 # ---------------------------------------------------------------------------
 # shared augmented-documents fixture (dup synthesis)
@@ -3467,15 +3468,10 @@ def similarity_index_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFram
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed, "poll=*"))
     )
-    sq = (
+    drain(
         stream.writeStream.foreachBatch(ingest)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise TimeoutError("similarity_index_stream_ingest did not drain")
     n_postings = spark.read.parquet(os.path.join(path, "codes")).count()
     n_corpus = c.count()
     if n_postings != n_corpus:
@@ -3726,15 +3722,10 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed, "poll=*"))
     )
-    sq = (
+    drain(
         stream.writeStream.foreachBatch(ingest)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise TimeoutError("streaming_semantic_ingest did not drain")
     res = spark.read.parquet(os.path.join(out_dir, "batch_*"))
     n_new = res.filter(F.col("status") == "new").count()
     n_postings = spark.read.parquet(os.path.join(path, "vectors")).count()
@@ -4017,15 +4008,10 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(feed_dir, "poll=*"))
     )
-    q = (
+    drain(
         stream.writeStream.foreachBatch(classify_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_incremental_dedup did not drain")
     return spark.read.parquet(os.path.join(out_dir, "batch_*"))
 
 

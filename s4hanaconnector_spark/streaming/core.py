@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 PKLOG_DDL = (
     "change_ts timestamp, schema_name string, change_type string, "
@@ -68,17 +69,12 @@ class transactional_sink:
         out_dir: str,
         transform: Callable[[DataFrame, int], DataFrame] | None = None,
         writer=None,
-        key_prefix: str = "",
     ) -> None:
         from s4hanaconnector_spark.poll import CommitLog, ParquetWriter
 
         self.out_dir = out_dir
         self.transform = transform
         self.writer = writer if writer is not None else ParquetWriter(out_dir)
-        # mapping-aware writers (KafkaFramedWriter) route on the delivery
-        # key's leading path segment; key_prefix="orders" makes this sink
-        # emit "orders/batch_id=N" so the per-mapping topic resolves
-        self.key_prefix = key_prefix
         # marker protocol shared with the batch RangeCommitSink — one
         # implementation of the crash-window contract (poll.CommitLog)
         self.log = CommitLog(out_dir)
@@ -90,11 +86,58 @@ class transactional_sink:
         if self.committed(batch_id):
             return  # replay of an already-committed transaction: no-op
         df = self.transform(batch_df, batch_id) if self.transform else batch_df
-        key = f"batch_id={batch_id}"
-        if self.key_prefix:
-            key = f"{self.key_prefix}/{key}"
-        n = self.writer.write(key, df)
+        n = self.writer.write(f"batch_id={batch_id}", df)
         self.log.commit(str(batch_id), {"batch_id": batch_id, "rows": n})
+
+
+# ---------------------------------------------------------------------------
+# The always-on CDC path: batch poll() under a streaming trigger
+# ---------------------------------------------------------------------------
+
+
+def poll_each_batch(
+    spark: SparkSession,
+    mappings: list,
+    load_source: Callable[[str], DataFrame],
+    pklog: Callable[[], DataFrame],
+    transactions: Callable[[], DataFrame],
+    from_txid: int,
+    sink,
+    now_ts: Callable[[], str],
+) -> Callable[[DataFrame, int], None]:
+    """A ``foreachBatch`` function that runs :func:`~s4hanaconnector_spark.
+    poll.poll` once per micro-batch; the micro-batch itself is only the
+    trigger and its rows are never read.
+
+    Each call re-reads the change log and the transaction monitor through
+    the ``pklog`` / ``transactions`` thunks (a parquet DataFrame built once
+    keeps its file listing and would never see a new file) and the clock
+    through ``now_ts``, then emits every impacted mapping's delta over
+    ``(resume, watermark]`` into ``sink`` (a ``RangeCommitSink``). The
+    watermark sits below the oldest in-flight writer
+    (S4HanaProducer.java:317-368), so rows above an open transaction wait
+    for a later batch: when that writer commits, its own rows land in the
+    log and trigger one. The returned ``hi`` becomes the next batch's
+    resume point.
+
+    The caller owns the resume point exactly as with batch ``poll()``: a
+    restarted query passes its initial ``from_txid`` again. That is safe
+    because each mapping resumes from its own last committed range in the
+    sink, so a replayed or restarted batch neither overlaps a committed
+    range nor skips one.
+
+    Use as ``stream.writeStream.foreachBatch(poll_each_batch(...))``."""
+    from s4hanaconnector_spark.poll import poll
+
+    resume = from_txid
+
+    def on_batch(_batch_df: DataFrame, _batch_id: int) -> None:
+        nonlocal resume
+        resume = poll(
+            spark, mappings, load_source, pklog(), transactions(), resume, sink, now_ts()
+        )
+
+    return on_batch
 
 
 # ---------------------------------------------------------------------------
@@ -357,20 +400,29 @@ def run_available_now(
     sink holds only the AGGREGATED result (windows, not events), so
     driver memory is bounded by |windows| — never corpus-sized."""
     sink = f"{name}_{next(_SINK_SEQ)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        out.writeStream.format("memory").queryName(sink).outputMode(output_mode),
+        timeout_sec,
     )
+    return out.sparkSession.table(sink)
+
+
+def drain(writer: DataStreamWriter, timeout_sec: float = 300.0) -> StreamingQuery:
+    """Start ``writer`` with ``Trigger.AvailableNow``, wait until it has
+    processed everything available at start, and return the stopped query
+    (its ``recentProgress`` stays readable). A query still running after
+    ``timeout_sec`` is stopped and raises ``TimeoutError``; a query that
+    failed re-raises its error."""
+    q = writer.trigger(availableNow=True).start()
     try:
         if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(f"streaming query {sink} still running after {timeout_sec}s")
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} still running after {timeout_sec}s"
+            )
     finally:
         if q.isActive:
             q.stop()
-    return out.sparkSession.table(sink)
+    return q
 
 
 def make_progress_metrics_listener(sink: list):

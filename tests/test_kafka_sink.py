@@ -146,65 +146,63 @@ def test_frame_unframe_apply_changes_roundtrip(spark):
     assert direct == via_kafka == [(1, "a"), (3, "keep")]
 
 
-def test_streaming_transactional_sink_delivers_kafka_frames(spark, tmp_path):
-    """End-to-end: a change-row STREAM drains through transactional_sink
-    composed with KafkaFramedWriter (key_prefix routes the per-mapping
-    topic), then the consumer unframes the in-memory topic and
-    apply_changes rebuilds the table — the reference's producer->topic->
-    consumer loop through the real streaming engine, with the commit log
-    making the delivery exactly-once per batch."""
-    from pyspark.sql import functions as F
-
+def test_streaming_poll_delivers_kafka_frames(spark, tmp_path):
+    """End-to-end: a change log STREAMS through the poll trigger into
+    RangeCommitSink composed with KafkaFramedWriter (the ``name/txid_hi=N``
+    range keys route the per-mapping topic), then the consumer unframes the
+    in-memory topic and apply_changes rebuilds the table — the reference's
+    producer->topic->consumer loop through the real streaming engine, with
+    the commit markers making each range's delivery exactly-once."""
     from s4hanaconnector_spark.kafka_sink import unframe
     from s4hanaconnector_spark.operators.cdc import apply_changes
-    from s4hanaconnector_spark.streaming.core import transactional_sink
+    from s4hanaconnector_spark.streaming.core import (
+        PKLOG_DDL,
+        changes_stream,
+        drain,
+        poll_each_batch,
+    )
 
-    feed = tmp_path / "feed"
-    deltas = [
-        [("A", 10, 1, "a"), ("A", 10, 2, "b")],
-        [("A", 20, 2, "b2"), ("D", 21, 1, None)],
-    ]
-    for i, rows in enumerate(deltas):
-        spark.createDataFrame(
-            rows, "_change_type string, _transactionid bigint, id bigint, val string"
-        ).coalesce(1).write.parquet(str(feed / f"poll={i}"))
-
+    log_dir = str(tmp_path / "log")
+    log_glob = f"{log_dir}/poll=*"
+    src = _src(spark, [(1, "a"), (2, "b2")])  # the post-change source state
     writer = KafkaFramedWriter({BO_MAPPING.name: BO_MAPPING})
-    sink = transactional_sink(
-        str(tmp_path / "out"), writer=writer, key_prefix=BO_MAPPING.name
-    )
-    stream = (
-        spark.readStream.schema(
-            "_change_type string, _transactionid bigint, id bigint, val string"
+    sink = RangeCommitSink(str(tmp_path / "out"), writer=writer)
+
+    def trigger():
+        return poll_each_batch(
+            spark, [BO_MAPPING], lambda name: src,
+            lambda: spark.read.schema(PKLOG_DDL).parquet(log_glob),
+            lambda: _txns(spark, []), 0, sink, lambda: NOW,
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(feed / "poll=*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
+
+    on_batch = trigger()
+    # two polls land one after the other: ids 1, 2 change; then 2 changes
+    # again and 3 is deleted from the source
+    for i, rows in enumerate([[("U", 1, 10), ("U", 2, 10)], [("U", 2, 20), ("D", 3, 21)]]):
+        _pklog(spark, rows).coalesce(1).write.parquet(f"{log_dir}/poll={i}")
+        drain(
+            changes_stream(spark, log_glob).writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
 
     topic = writer.topics[topic_name(BO_MAPPING)]
-    assert set(topic) == {f"{BO_MAPPING.name}/batch_id=0", f"{BO_MAPPING.name}/batch_id=1"}
-    all_rows = [r for rows in topic.values() for r in rows]
+    assert set(topic) == {f"{BO_MAPPING.name}/txid_hi=10", f"{BO_MAPPING.name}/txid_hi=21"}
     frames = spark.createDataFrame(
-        all_rows,
+        [r for rows in topic.values() for r in rows],
         "topic string, key string, value string, "
         "headers array<struct<key string, value binary>>",
     )
     batch = unframe(frames, BO_MAPPING)
-    base = spark.createDataFrame([], "id bigint, val string")
+    base = spark.createDataFrame([(3, "c")], "id bigint, val string")
     final = apply_changes(base, batch, ["id"])
-    assert {(r["id"], r["val"]) for r in final.collect()} == {(2, "b2")}
-    # replay of a committed batch is a no-op on the topic (exactly-once)
-    before = {k: len(v) for k, v in topic.items()}
-    sink(spark.createDataFrame(deltas[0], "_change_type string, _transactionid bigint, id bigint, val string"), 0)
-    after = {k: len(v) for k, v in writer.topics[topic_name(BO_MAPPING)].items()}
-    assert before == after
+    assert {(r["id"], r["val"]) for r in final.collect()} == {(1, "a"), (2, "b2")}
+    # a restarted trigger replays from txid 0: the committed ranges are a
+    # no-op on the topic (exactly-once)
+    before = dict(topic)
+    trigger()(None, 0)
+    after = writer.topics[topic_name(BO_MAPPING)]
+    assert after.keys() == before.keys()
+    assert all(after[k] is before[k] for k in before)  # nothing re-published
 
 
 def test_framed_writer_handles_quarantine_range(spark, tmp_path):

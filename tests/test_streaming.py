@@ -14,10 +14,13 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from s4hanaconnector_spark.operators import cdc as C
+from s4hanaconnector_spark.mapping import ColumnMapping, TableMapping
+from s4hanaconnector_spark.poll import RangeCommitSink, poll
 from s4hanaconnector_spark.queries.cdc import ORDERS_IDENTITY
 from s4hanaconnector_spark.streaming import (
     changes_stream,
+    drain,
+    poll_each_batch,
     session_window_agg,
     sliding_window_agg,
     stateful_dedup,
@@ -25,6 +28,8 @@ from s4hanaconnector_spark.streaming import (
     tumbling_window_agg,
 )
 from s4hanaconnector_spark.streaming.core import PKLOG_DDL
+
+from tests.test_poll import MAPPING, NOW, _src, _txns
 
 T0 = datetime.datetime(2026, 1, 1, 0, 0, 0)
 
@@ -52,12 +57,19 @@ def _pklog_row(ct, pk, txid, seq=1, ts=T0, table="orders"):
     )
 
 
+def _drain_into(stream, on_batch, ckpt):
+    """One AvailableNow run of the poll trigger on ``ckpt``; returns the
+    ids of the micro-batches it ran (the trigger never reads a batch's
+    rows, so its progress reports none)."""
+    q = drain(stream.writeStream.foreachBatch(on_batch).option("checkpointLocation", ckpt))
+    return [p["batchId"] for p in q.recentProgress]
+
+
 def test_changes_stream_cdc_foreachbatch(spark, sf_dir, tmp_path):
-    """E17 end-to-end: change feed -> micro-batches -> cdc_delta per batch ->
-    transactional sink. The delta of each poll lands exactly once."""
+    """E17 end-to-end: change feed -> micro-batches -> poll() per batch ->
+    RangeCommitSink. Each poll's delta lands exactly once, keyed by its
+    txid range."""
     log_dir = str(tmp_path / "pklog")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
     os.makedirs(log_dir)
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -68,28 +80,98 @@ def test_changes_stream_cdc_foreachbatch(spark, sf_dir, tmp_path):
         + [_pklog_row("D", 999999999, 103)],
         "poll1.parquet",
     )
-
-    def apply_delta(batch_df, batch_id):
-        return C.cdc_delta(orders, batch_df, ORDERS_IDENTITY, 0, 10**9)
-
-    sink = transactional_sink(out_dir, transform=apply_delta)
+    sink = RangeCommitSink(str(tmp_path / "out"))
+    on_batch = poll_each_batch(
+        spark, [ORDERS_IDENTITY], lambda name: orders,
+        lambda: spark.read.schema(PKLOG_DDL).parquet(log_dir),
+        lambda: _txns(spark, []), 0, sink, lambda: NOW,
+    )
     stream = changes_stream(spark, log_dir)
-    q = stream.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
+    ckpt = str(tmp_path / "ckpt")
+    _drain_into(stream, on_batch, ckpt)
 
-    out = spark.read.parquet(os.path.join(out_dir, "batch_id=0"))
+    name = ORDERS_IDENTITY.name
+    assert sink.committed_keys(name) == [103]
+    out = sink.read_committed(spark, name, keys=[103])
     got = {r["o_orderkey"]: r["_change_type"] for r in out.collect()}
     assert got[999999999] == "D"
     assert all(got[k] == "A" for k in some_keys)
 
-    # second poll arrives -> new batch, separate commit
+    # second poll arrives -> new batch, its own range (103, 200]
     _write_poll(spark, log_dir, [_pklog_row("U", some_keys[0], 200)], "poll2.parquet")
-    q = stream.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    commits = sorted(glob.glob(os.path.join(out_dir, "_commits", "*.json")))
-    assert len(commits) == 2
+    _drain_into(stream, on_batch, ckpt)
+    assert sink.committed_keys(name) == [103, 200]
+    second = sink.read_committed(spark, name, keys=[200]).collect()
+    assert [(r["o_orderkey"], r["_transactionid"]) for r in second] == [(some_keys[0], 200)]
+
+
+_T_UPPER = TableMapping(
+    name="t_upper",
+    mastertable="t",
+    columnmappings=[ColumnMapping("id", '"L1"."id"'), ColumnMapping("val_u", 'upper("L1"."val")')],
+    pkcolumns=["id"],
+)
+
+
+@pytest.mark.parametrize(
+    "mappings,restart",
+    [([MAPPING], False), ([MAPPING, _T_UPPER], False), ([MAPPING, _T_UPPER], True)],
+    ids=["one_mapping", "two_mappings_one_table", "restart"],
+)
+def test_poll_trigger_holds_back_rows_above_open_writer(spark, tmp_path, mappings, restart):
+    """The always-on path honours the safe watermark: with writer 11 open
+    and txids 10 and 12 in the log, batch 0 commits (0, 10] only; txid 12
+    waits until the writer commits and its own rows land, and then batch 1
+    commits (10, 12]. Every committed range equals what batch poll()
+    emits for the same (lo, hi]. ``restart``: batch 1 runs in a NEW query
+    on the same checkpoint, started again from the initial from_txid —
+    the per-mapping resume points keep its ranges from overlapping or
+    skipping the first run's."""
+    log_dir = str(tmp_path / "log")
+    os.makedirs(log_dir)
+    src = _src(spark, [(1, "a"), (2, "b"), (3, "c")])
+    open_writers = [11]
+    sink = RangeCommitSink(str(tmp_path / "out"))
+
+    def trigger():
+        return poll_each_batch(
+            spark, mappings, lambda name: src,
+            lambda: spark.read.schema(PKLOG_DDL).parquet(log_dir),
+            lambda: _txns(spark, open_writers), 0, sink, lambda: NOW,
+        )
+
+    stream = changes_stream(spark, log_dir, max_files_per_trigger=1)
+    ckpt = str(tmp_path / "ckpt")
+    on_batch = trigger()
+    _write_poll(
+        spark, log_dir,
+        [_pklog_row("U", 1, 10, table="t"), _pklog_row("U", 3, 12, table="t")], "p0.parquet",
+    )
+    assert _drain_into(stream, on_batch, ckpt) == [0]
+    for m in mappings:
+        assert sink.committed_keys(m.name) == [10]
+
+    open_writers.clear()  # writer 11 commits; its rows land in the log
+    _write_poll(spark, log_dir, [_pklog_row("U", 2, 11, table="t")], "p1.parquet")
+    assert _drain_into(stream, trigger() if restart else on_batch, ckpt) == [1]
+
+    log = spark.read.schema(PKLOG_DDL).parquet(log_dir)
+    for m in mappings:
+        assert sink.committed_keys(m.name) == [10, 12]
+        got = {
+            hi: sorted(map(tuple, sink.read_committed(spark, m.name, keys=[hi]).collect()))
+            for hi in (10, 12)
+        }
+        assert [sorted(r[2] for r in rows) for rows in got.values()] == [[1], [2, 3]]
+        for lo, hi in [(0, 10), (10, 12)]:
+            ref = RangeCommitSink(str(tmp_path / f"ref_{m.name}_{hi}"))
+            assert poll(
+                spark, [m], lambda name: src,
+                log.filter(F.col("transactionid") <= hi), _txns(spark, []),
+                lo, ref, NOW,
+            ) == hi
+            want = sorted(map(tuple, ref.read_committed(spark, m.name).collect()))
+            assert got[hi] == want
 
 
 def test_transactional_sink_replay_is_idempotent(spark, tmp_path):
