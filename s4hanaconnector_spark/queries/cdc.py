@@ -78,13 +78,18 @@ def _stream_polls(
     sources: dict[str, DataFrame],
     from_txid: int,
 ) -> RangeCommitSink:
-    """Land each of ``polls`` as one change-log file, drain the change
-    stream with batch ``poll()`` per micro-batch (no writer in flight) and
-    return the sink holding the committed ranges."""
+    """Land ``polls`` one change-log file at a time, draining the change
+    stream with batch ``poll()`` per micro-batch (no writer in flight)
+    after each, and return the sink holding the committed ranges.
+
+    A poll reads the whole log up to its watermark, so landing every file
+    before the first drain would commit everything in micro-batch 0. One
+    file per drain gives every mapping one committed range per poll, which
+    is asserted: the snapshot then composes ranges across micro-batches,
+    and each mapping resumes from its own range on every batch after the
+    first."""
     d = tempfile.mkdtemp(prefix=prefix)
     log_glob = os.path.join(d, "log", "poll=*")
-    for i, df in enumerate(polls):
-        df.coalesce(1).write.parquet(os.path.join(d, "log", f"poll={i}"))
     sink = RangeCommitSink(os.path.join(d, "out"))
     on_batch = poll_each_batch(
         spark, mappings, lambda name: sources[name],
@@ -94,11 +99,18 @@ def _stream_polls(
         lambda: spark.createDataFrame([], "update_transaction_id bigint, start_time timestamp"),
         from_txid, sink, lambda: "2026-01-01 00:00:00",
     )
-    drain(
-        changes_stream(spark, log_glob, max_files_per_trigger=1)
-        .writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-    )
+    his: list[int] = []
+    for i, df in enumerate(polls):
+        df.coalesce(1).write.parquet(os.path.join(d, "log", f"poll={i}"))
+        his.append(max([*his[-1:], df.agg(F.max("transactionid")).first()[0]]))
+        drain(
+            changes_stream(spark, log_glob)
+            .writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", os.path.join(d, "ckpt"))
+        )
+    for m in mappings:
+        got = sink.committed_keys(m.name)
+        assert got == his, f"{m.name}: committed ranges {got}, one per poll expected {his}"
     return sink
 
 

@@ -116,9 +116,20 @@ def poll_each_batch(
     ``(resume, watermark]`` into ``sink`` (a ``RangeCommitSink``). The
     watermark sits below the oldest in-flight writer
     (S4HanaProducer.java:317-368), so rows above an open transaction wait
-    for a later batch: when that writer commits, its own rows land in the
-    log and trigger one. The returned ``hi`` becomes the next batch's
-    resume point.
+    for a later batch. The returned ``hi`` becomes the next batch's resume
+    point.
+
+    Only a new log file starts a micro-batch. A writer that commits rows
+    lands a file and so triggers the batch that emits what it held back.
+    A writer that rolls back, writes only to tables without log rows, or
+    ages out of the staleness window lands nothing, and the rows it held
+    back stay unemitted until some later file arrives. The reference polls
+    on a timer whether or not new rows exist; to match it, also call the
+    returned function on a timer (``on_batch(None, -1)``), outside the
+    stream.
+
+    Every call re-reads the whole log: the watermark's max and the
+    impacted-table scan cost grow with the log, not with the new file.
 
     The caller owns the resume point exactly as with batch ``poll()``: a
     restarted query passes its initial ``from_txid`` again. That is safe

@@ -59,8 +59,8 @@ def _pklog_row(ct, pk, txid, seq=1, ts=T0, table="orders"):
 
 def _drain_into(stream, on_batch, ckpt):
     """One AvailableNow run of the poll trigger on ``ckpt``; returns the
-    ids of the micro-batches it ran (the trigger never reads a batch's
-    rows, so its progress reports none)."""
+    batch ids its progress events report. A run that finds no new file
+    still reports the next id without calling the trigger."""
     q = drain(stream.writeStream.foreachBatch(on_batch).option("checkpointLocation", ckpt))
     return [p["batchId"] for p in q.recentProgress]
 
@@ -172,6 +172,48 @@ def test_poll_trigger_holds_back_rows_above_open_writer(spark, tmp_path, mapping
             ) == hi
             want = sorted(map(tuple, ref.read_committed(spark, m.name).collect()))
             assert got[hi] == want
+
+
+def test_poll_trigger_aborted_writer_waits_for_a_timer_call(spark, tmp_path):
+    """Pins a limit of the file trigger: writer 11 rolls back, so no log
+    file lands and no micro-batch runs; txid 12, held back while the writer
+    was open, stays unemitted. Calling the trigger function outside the
+    stream, as a timer would, emits (10, 12]."""
+    log_dir = str(tmp_path / "log")
+    os.makedirs(log_dir)
+    src = _src(spark, [(1, "a"), (2, "b"), (3, "c")])
+    open_writers = [11]
+    sink = RangeCommitSink(str(tmp_path / "out"))
+    on_batch = poll_each_batch(
+        spark, [MAPPING], lambda name: src,
+        lambda: spark.read.schema(PKLOG_DDL).parquet(log_dir),
+        lambda: _txns(spark, open_writers), 0, sink, lambda: NOW,
+    )
+    calls = []
+
+    def counted(df, batch_id):
+        calls.append(batch_id)
+        on_batch(df, batch_id)
+
+    stream = changes_stream(spark, log_dir)
+    ckpt = str(tmp_path / "ckpt")
+    _write_poll(
+        spark, log_dir,
+        [_pklog_row("U", 1, 10, table="t"), _pklog_row("U", 3, 12, table="t")], "p0.parquet",
+    )
+    _drain_into(stream, counted, ckpt)
+    assert calls == [0]
+    assert sink.committed_keys(MAPPING.name) == [10]
+
+    open_writers.clear()  # writer 11 rolls back: nothing lands in the log
+    _drain_into(stream, counted, ckpt)
+    assert calls == [0]
+    assert sink.committed_keys(MAPPING.name) == [10]
+
+    on_batch(None, -1)
+    assert sink.committed_keys(MAPPING.name) == [10, 12]
+    rows = sink.read_committed(spark, MAPPING.name, keys=[12]).collect()
+    assert sorted(r[2] for r in rows) == [3]
 
 
 def test_transactional_sink_replay_is_idempotent(spark, tmp_path):
