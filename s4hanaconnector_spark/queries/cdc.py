@@ -82,12 +82,10 @@ def _stream_polls(
     stream with batch ``poll()`` per micro-batch (no writer in flight)
     after each, and return the sink holding the committed ranges.
 
-    A poll reads the whole log up to its watermark, so landing every file
-    before the first drain would commit everything in micro-batch 0. One
-    file per drain gives every mapping one committed range per poll, which
-    is asserted: the snapshot then composes ranges across micro-batches,
-    and each mapping resumes from its own range on every batch after the
-    first."""
+    A poll reads the whole log up to its watermark, so files landed before
+    one drain would all commit in micro-batch 0. The assert holds every
+    mapping to one committed range per poll: the snapshot composes ranges
+    across micro-batches, and each mapping resumes from its own range."""
     d = tempfile.mkdtemp(prefix=prefix)
     log_glob = os.path.join(d, "log", "poll=*")
     sink = RangeCommitSink(os.path.join(d, "out"))
@@ -102,7 +100,8 @@ def _stream_polls(
     his: list[int] = []
     for i, df in enumerate(polls):
         df.coalesce(1).write.parquet(os.path.join(d, "log", f"poll={i}"))
-        his.append(max([*his[-1:], df.agg(F.max("transactionid")).first()[0]]))
+        hi = df.agg(F.max("transactionid")).first()[0]
+        his.append(max(hi, his[-1]) if his else hi)
         drain(
             changes_stream(spark, log_glob)
             .writeStream.foreachBatch(on_batch)

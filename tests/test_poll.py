@@ -550,7 +550,9 @@ def test_poll_jobs_inherit_the_callers_job_group(spark, tmp_path):
     finally:
         sc._jsc.clearJobGroup()  # _jobs_run_by asserts no group is set
     bus.waitUntilEmpty()
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    # no new ungrouped job; the status store may have evicted old ones
+    # (spark.ui.retainedJobs), so the ungrouped set can also shrink
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
     # the watermark and impacted-table collects, plus a write per mapping
     assert len(sc.statusTracker().getJobIdsForGroup("poll-g")) >= 5
     assert all(sink.committed(n, 10) for n in ("t", "u", "v"))
