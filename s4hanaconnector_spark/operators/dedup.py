@@ -644,8 +644,6 @@ def semantic_dedup(
     centroids: DataFrame | None = None,
     round_digits: int = 6,
     max_cell: int | None = None,
-    assignment: str = "auto",
-    pairing: str = "expr",
     n_assign: int = 1,
 ) -> DataFrame:
     """Cluster-partitioned semantic dedup (the SemDeDup shape, Abbas et al.
@@ -662,31 +660,22 @@ def semantic_dedup(
     100 TB plan shape: cell assignment is the IVF operator's — the
     centroid table collected once, one row-local argmax pass, zero corpus
     shuffle (operators/similarity.py cell_assigner). The only
-    shuffle is ONE hash exchange of (id, vec, cell) on the cell id for the
-    within-cell self-join; with ~sqrt(N) cells each side of the join holds
-    ~sqrt(N) rows per cell and the pairwise work is N^1.5 total instead of
-    N² — the SemDeDup trade. ``max_cell`` drops oversized cells BEFORE the
-    self-join (the same pre-join hot-bucket discipline as
+    shuffle is ONE hash exchange of (id, vec, cell) on the cell id, into
+    the per-cell pairing kernel (:func:`_arrow_cell_min_neighbor`); with
+    ~sqrt(N) cells each cell holds ~sqrt(N) rows and the pairwise work is
+    N^1.5 total instead of N² — the SemDeDup trade. ``max_cell`` drops
+    oversized cells BEFORE pairing (the same hot-bucket discipline as
     minhash_lsh_candidates — an oversized cell means the quantizer carries
-    no locality signal for its members, and capping after the join would
-    still materialize the quadratic candidate set); rows in dropped cells
-    keep themselves. Determinism: affinities and cosines are rounded at
+    no locality signal for its members); rows in dropped cells keep
+    themselves. Determinism: affinities and cosines are rounded at
     ``round_digits`` with id tiebreaks, so cells and contraction are
     engine-replicable bit for bit (the declared oracle replays both).
-
-    ``pairing`` picks the within-cell scoring backend (the same split as
-    ivf_topk's ``assignment``): ``"expr"`` (default) is the Catalyst-HOF
-    semantics reference the oracle replays exactly; ``"arrow"`` scores
-    each joined pair with one numpy row-wise dot per Arrow batch — the
-    scale path, since pairing is ~90% of the operator's wall at the x100
-    ladder tier — under the documented _arrow_assign boundary class
-    (fixture equality vs expr is test-pinned).
     """
     from s4hanaconnector_spark.operators.similarity import cell_assigner
 
     assign = cell_assigner(
         df, n_centroids=n_centroids, c_id=id_col, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
+        round_digits=round_digits, centroids=centroids,
     )
     # n_assign > 1 is MULTI-PROBE SemDeDup: each vector joins pairing in
     # its top-n cells, recovering the true near-dup pairs a single Voronoi
@@ -699,7 +688,7 @@ def semantic_dedup(
     # recall/cost dial as ivf_topk's n_probe.
     cells = assign(df.select(id_col, vec), id_col, n_assign)
     return _contract_cells(
-        df, cells, id_col, vec, threshold, round_digits, max_cell, pairing
+        df, cells, id_col, vec, threshold, round_digits, max_cell
     )
 
 
@@ -712,8 +701,6 @@ def semantic_dedup_windowed(
     centroids: DataFrame | None = None,
     round_digits: int = 6,
     pair_window: int = 8,
-    assignment: str = "auto",
-    pairing: str = "expr",
 ) -> DataFrame:
     """SemDeDup with a PAIR BUDGET — the winnowed rung that caps
     :func:`semantic_dedup`'s within-cell quadratic pairing (the one
@@ -731,28 +718,25 @@ def semantic_dedup_windowed(
     Plan shape (the 100 TB contract): cell assignment is the shared
     row-local argmax (zero corpus shuffle); own-centroid affinity comes
     from a broadcast join with the sqrt(N)-row centroid table; the rank
-    AND all ``pair_window`` successor candidates come from ONE window
-    (``row_number`` + ``lead(id, o)``/``lead(vec, o)`` over the same
-    spec), so there is no pairing self-join at all — the only shuffle in
-    the operator is the window's exchange on ``__cell``. ``max_cell`` is
-    deliberately absent: the cap exists to bound quadratic occupancy, and
-    this rung's work is linear in occupancy by construction.
+    and the successor scoring run in one per-cell kernel
+    (:func:`_arrow_cell_window_neighbor`), so there is no pairing
+    self-join at all — the only shuffle in the operator is the exchange on
+    ``__cell``. ``max_cell`` is deliberately absent: the cap exists to
+    bound quadratic occupancy, and this rung's work is linear in occupancy
+    by construction.
 
     Determinism matches the family contract: affinities and cosines are
     rounded at ``round_digits``; rank ties break to the lowest id; the
     contraction is the same lowest-id-neighbor single step, so the
-    declared oracle replays the result bit for bit. ``pairing`` picks the
-    scoring backend exactly as in :func:`semantic_dedup` ("expr" is the
-    Catalyst-HOF oracle-semantics reference, "arrow" the vectorized scale
-    path via the shared per-cell :func:`_arrow_cell_window_neighbor`). Recall vs the
+    declared oracle replays the result bit for bit. Recall vs the
     uncapped rung is GATED, not assumed (tests/test_scale_smoke.py ladders
     both and measures the contraction-set recall)."""
     from s4hanaconnector_spark.operators.similarity import cell_assigner
 
-    _check_window(pair_window, pairing)
+    _check_window(pair_window)
     assign = cell_assigner(
         df, n_centroids=n_centroids, c_id=id_col, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
+        round_digits=round_digits, centroids=centroids,
     )
     cells = assign(df.select(id_col, vec), id_col, 1)
     # the centroid table again, this time as DATA for the own-cell
@@ -764,15 +748,13 @@ def semantic_dedup_windowed(
         )
     return _windowed_contract(
         df.select(F.col(id_col)), cells, centroids, id_col, vec,
-        threshold, round_digits, pair_window, pairing,
+        threshold, round_digits, pair_window,
     )
 
 
-def _check_window(pair_window: int, pairing: str) -> None:
+def _check_window(pair_window: int) -> None:
     if pair_window < 1:
         raise ValueError(f"pair_window must be >= 1, got {pair_window}")
-    if pairing not in ("expr", "arrow"):
-        raise ValueError(f"unknown pairing backend: {pairing}")
 
 
 def _windowed_contract(
@@ -784,7 +766,6 @@ def _windowed_contract(
     threshold: float,
     round_digits: int,
     pair_window: int,
-    pairing: str,
 ) -> DataFrame:
     """Shared pair-budget tail (:func:`semantic_dedup_windowed` and the
     from-index variant): every ``(id, vec, __cell)`` member of ``cells``
@@ -792,8 +773,6 @@ def _windowed_contract(
     with the ``(cent_id, vec)`` table), pairs only with its next
     ``pair_window`` successors in (affinity desc, id) rank order within
     the cell, then contracts exactly as :func:`_contract_cells` does."""
-    from pyspark.sql import Window as W
-
     from s4hanaconnector_spark.operators.similarity import cosine
 
     cent = centroids.select(
@@ -805,62 +784,21 @@ def _windowed_contract(
         id_col, vec, "__cell",
         F.round(cosine(F.col(vec), F.col("__cv")), round_digits).alias("__aff"),
     )
-    if pairing == "arrow":
-        # per-cell applyInArrow (same shape as _contract_cells) instead of
-        # the window+lead successor arrays, which materialize
-        # ``pair_window`` copies of every member's VECTOR in the JVM and
-        # would ship both vectors per candidate pair through the boundary
-        # — one member-sized crossing per cell instead. The rank
-        # order ((__aff desc, id asc), NaN affinities first like Spark's
-        # NaN-greatest desc) and the next-``pair_window``-successors pair
-        # set are reproduced exactly; scoring is row-wise float64.
-        neigh = _arrow_cell_window_neighbor(
-            ranked.select(id_col, vec, "__cell", "__aff"), id_col, vec,
-            threshold, round_digits, pair_window,
-        )
-        neigh = neigh.groupBy("id_b").agg(
-            F.min("__min_neighbor").alias("__min_neighbor")
-        )
-    else:
-        # ONE window yields the rank order AND every successor candidate:
-        # lead(id, o)/lead(vec, o) share the spec, so Catalyst evaluates
-        # them in a single Window operator — the pairing stage has NO join
-        w_ord = W.partitionBy("__cell").orderBy(F.desc("__aff"), F.asc(id_col))
-        succ = F.array(
-            *[
-                F.struct(
-                    F.lead(F.col(id_col), o).over(w_ord).alias("idb"),
-                    F.lead(F.col(vec), o).over(w_ord).alias("vb"),
-                )
-                for o in range(1, pair_window + 1)
-            ]
-        )
-        cand = (
-            # the window must evaluate in its own step — a generator
-            # (explode) cannot share a projection with window expressions
-            ranked.withColumn("__succ", succ)
-            .select(
-                F.col(id_col).alias("__ida"), F.col(vec).alias("__va"),
-                F.explode(F.col("__succ")).alias("__s"),
-            )
-            .filter(F.col("__s.idb").isNotNull())
-            .select(
-                "__ida", "__va",
-                F.col("__s.idb").alias("__idb"), F.col("__s.vb").alias("__vb"),
-            )
-        )
-        # rank adjacency does not respect id order; the contraction
-        # contract does — normalize each unordered pair to (low id,
-        # high id). Cosine is symmetric elementwise, so the score needs
-        # no corresponding swap.
-        cos = F.round(cosine(F.col("__va"), F.col("__vb")), round_digits)
-        pairs = cand.select(
-            F.least("__ida", "__idb").alias("id_a"),
-            F.greatest("__ida", "__idb").alias("id_b"),
-            cos.alias("cosine"),
-        ).filter(F.col("cosine") >= threshold)
-        neigh = pairs.groupBy("id_b").agg(F.min("id_a").alias("__min_neighbor"))
-    return _contract(ids, neigh, id_col)
+    # one member-sized boundary crossing per cell: a JVM window with
+    # lead() successor arrays would materialize ``pair_window`` copies of
+    # every member's vector and ship both vectors per candidate pair
+    neigh = _arrow_cell_window_neighbor(
+        ranked, id_col, vec, threshold, round_digits, pair_window,
+    )
+    return _contract(ids, _min_neighbor(neigh), id_col)
+
+
+def _min_neighbor(neigh: DataFrame) -> DataFrame:
+    """Fold per-cell ``(id_b, __min_neighbor)`` rows to one per id: under
+    multi-probe an id receives a min-neighbor from each of its cells."""
+    return neigh.groupBy("id_b").agg(
+        F.min("__min_neighbor").alias("__min_neighbor")
+    )
 
 
 def _contract(ids: DataFrame, neigh: DataFrame, id_col: str) -> DataFrame:
@@ -880,7 +818,6 @@ def semantic_dedup_from_index(
     path: str,
     threshold: float = 0.95,
     max_cell: int | None = None,
-    pairing: str = "expr",
     pair_window: int | None = None,
 ) -> DataFrame:
     """SemDeDup straight off a persisted :func:`build_ann_index` index —
@@ -889,7 +826,7 @@ def semantic_dedup_from_index(
     skips BOTH quantizer derivation AND the O(N·sqrt(N)) assignment scan
     and goes directly to within-cell pairing + contraction, reading the
     cell-partitioned parquet the ingest path maintains incrementally
-    (append_to_ann_index). Pairing semantics, ``max_cell`` pre-join
+    (append_to_ann_index). Pairing semantics, ``max_cell`` pre-pairing
     capping, rounding and tiebreaks are byte-identical to
     :func:`semantic_dedup` — pinned by tests and by the declared query's
     shared oracle — because the tail IS the same code
@@ -911,6 +848,8 @@ def semantic_dedup_from_index(
         _read_postings,
     )
 
+    if pair_window is not None:
+        _check_window(pair_window)
     meta = _read_index_meta(spark, path)
     id_col, vec = meta["c_id"], meta["vec"]
     cells = _read_postings(spark, path, "vectors")
@@ -920,14 +859,13 @@ def semantic_dedup_from_index(
         # from the output id set (same reader contract as probe_ann_index)
         cells = cells.join(F.broadcast(tomb), on=id_col, how="left_anti")
     if pair_window is not None:
-        _check_window(pair_window, pairing)
         return _windowed_contract(
             cells, cells, spark.read.parquet(os.path.join(path, "centroids")),
-            id_col, vec, threshold, meta["round_digits"], pair_window, pairing,
+            id_col, vec, threshold, meta["round_digits"], pair_window,
         )
     return _contract_cells(
         cells.select(id_col, vec), cells, id_col, vec,
-        threshold, meta["round_digits"], max_cell, pairing,
+        threshold, meta["round_digits"], max_cell,
     )
 
 
@@ -939,7 +877,6 @@ def _contract_cells(
     threshold: float,
     round_digits: int,
     max_cell: int | None,
-    pairing: str,
 ) -> DataFrame:
     """Shared SemDeDup tail: within-cell pairwise cosine over ``cells``
     (``id, vec, __cell``) and single-step contraction of every row of
@@ -947,12 +884,10 @@ def _contract_cells(
     :func:`semantic_dedup` for the full plan-shape contract)."""
     from pyspark.sql import Window as W
 
-    from s4hanaconnector_spark.operators.similarity import cosine
-
     # max_cell bounds cell MEMBERSHIP — under multi-probe (n_assign > 1)
     # that includes secondary (probe) members, so a cell can be dropped
     # whose primary occupancy is under the cap. Deliberate:
-    # the self-join below is quadratic in MEMBERS, probe members included,
+    # per-cell pairing is quadratic in MEMBERS, probe members included,
     # so membership is exactly the quantity the cap must bound to keep the
     # pairing stage N^1.5; a primary-only cap would re-admit the quadratic
     # blowup through probe fan-in. Within one cell each id appears at most
@@ -966,46 +901,15 @@ def _contract_cells(
             .filter(F.col("__cn") <= max_cell)
             .drop("__cn")
         )
-    if pairing not in ("expr", "arrow"):
-        raise ValueError(f"unknown pairing backend: {pairing}")
-    if pairing == "arrow":
-        # move heavy bytes once: a JVM within-cell SELF-JOIN would send
-        # every candidate PAIR across the Python boundary carrying BOTH
-        # vectors (|pairs| x 2 x dims doubles, quadratic in cell
-        # occupancy). Per-cell applyInArrow ships each member vector ONCE
-        # (|members| x dims — the same bytes the exchange already moves),
-        # computes the full within-cell cosine matrix blockwise in numpy,
-        # and emits only each member's min qualifying lower-id neighbor
-        # (<= 1 row per member instead of every qualifying pair). Same
-        # hash exchange on __cell, no join, linear boundary traffic.
-        # Rounding is round-half-up on the binary double; zero-norm NaN
-        # passes like Spark's NaN-greatest; the matmul's BLAS reduction
-        # order is the documented boundary class (_arrow_assign
-        # docstring) — fixture equality vs expr is test-pinned away from
-        # boundaries.
-        neigh = _arrow_cell_min_neighbor(
-            cells.select(id_col, vec, "__cell"), id_col, vec,
-            threshold, round_digits,
-        )
-        # multi-probe (n_assign > 1): the same id can receive a
-        # min-neighbor from each of its cells — fold to the global min,
-        # exactly what the pair-level groupBy produced before
-        neigh = neigh.groupBy("id_b").agg(
-            F.min("__min_neighbor").alias("__min_neighbor")
-        )
-    else:
-        a, b = cells.alias("a"), cells.alias("b")
-        joined = a.join(b, F.col("a.__cell") == F.col("b.__cell")).filter(
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-        )
-        cos = F.round(cosine(F.col(f"a.{vec}"), F.col(f"b.{vec}")), round_digits)
-        pairs = joined.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        ).filter(F.col("cosine") >= threshold)
-        neigh = pairs.groupBy("id_b").agg(F.min("id_a").alias("__min_neighbor"))
-    return _contract(df, neigh, id_col)
+    # move heavy bytes once: a JVM within-cell SELF-JOIN would send every
+    # candidate PAIR across the Python boundary carrying BOTH vectors
+    # (quadratic in cell occupancy). The per-cell kernel ships each member
+    # vector ONCE and emits at most one row per member.
+    neigh = _arrow_cell_min_neighbor(
+        cells.select(id_col, vec, "__cell"), id_col, vec,
+        threshold, round_digits,
+    )
+    return _contract(df, _min_neighbor(neigh), id_col)
 
 
 def _arrow_cell_min_neighbor(
@@ -1022,8 +926,9 @@ def _arrow_cell_min_neighbor(
     among its >= ``threshold`` lower-id cell-mates, with one member-sized
     boundary crossing per cell.
 
-    Contract (identical to the expr self-join): cosine rounded
-    half-up on the binary double at ``round_digits`` before thresholding;
+    Contract: cosine rounded half-up on the binary double at
+    ``round_digits`` before thresholding (the :func:`_arrow_assign`
+    rounding, which the declared queries' oracle replays);
     zero-norm vectors produce NaN/inf affinities that PASS the threshold
     (Spark NaN-greatest semantics); the min-neighbor is the smallest
     qualifying id. Memory per task is bounded: the cosine matrix is
@@ -1171,23 +1076,12 @@ def incremental_semantic_dedup(
     n_centroids: int = 16,
     centroids: DataFrame | None = None,
     round_digits: int = 6,
-    assignment: str = "auto",
     n_assign: int = 1,
-    scoring: str = "expr",
 ) -> DataFrame:
     """Incremental (batch-vs-corpus) SEMANTIC dedup: classify every vector
     of a new ingest batch against the accepted corpus by cell-partitioned
     cosine — the embedding-space analogue of :func:`incremental_dedup`,
     for the paraphrase/re-encode duplicates fingerprints cannot see.
-
-    ``scoring`` picks the corpus-leg backend (the same split as
-    :func:`semantic_dedup`'s ``pairing``): ``"expr"`` is the Catalyst-HOF
-    reference the declared oracle queries replay; ``"arrow"`` scores each
-    cell's corpus rows against that cell's batch vectors as blockwise
-    numpy matmuls inside a ``mapInArrow`` pass over the corpus scan (the
-    per-pair interpreted HOF cosine on the corpus scan is the classify
-    tail's wall at scale). The tiny within-batch leg stays expr under
-    both backends.
 
     ``n_assign > 1`` multi-probes the BATCH side only: a batch vector
     whose true corpus twin sits just across a Voronoi boundary misses it
@@ -1196,9 +1090,9 @@ def incremental_semantic_dedup(
     ingest pipeline), but its top-2 cells almost always include the
     twin's cell. The corpus stays single-assigned — its cells are the
     index's resident layout — so corpus scan cost is unchanged and only
-    the (tiny) batch table fans out n_assign-fold; duplicate joined pairs
-    are absorbed by the min-contraction in both legs, the same argument
-    as :func:`semantic_dedup`'s multi-probe.
+    the (tiny) batch table fans out n_assign-fold; duplicate pairs are
+    absorbed by the min-contraction in both legs, the same argument as
+    :func:`semantic_dedup`'s multi-probe.
 
     Status per batch row (same vocabulary as incremental_dedup):
       * ``dup_of_corpus`` — some corpus vector in the SAME CELL has cosine
@@ -1210,8 +1104,9 @@ def incremental_semantic_dedup(
     100 TB plan shape — the corpus is NEVER shuffled: the quantizer is
     frozen from the corpus (or passed in — at scale, the ANN index's own
     trained centroids), both sides get the shared row-local cell
-    assignment, and the corpus side's only join is a broadcast-hash
-    join against the (tiny) batch cell table keyed on the cell id — one
+    assignment, and the corpus leg is one ``mapInArrow`` pass over the
+    corpus cell scan that scores each cell's corpus rows against that
+    cell's batch vectors (:func:`_arrow_classify_corpus_hits`) — one
     corpus scan, hits only survive. The within-batch leg self-joins the
     batch alone. A batch row in a corpus-hot cell costs one cosine per
     same-cell corpus row on that cell's scan partition — the linear-in-
@@ -1223,21 +1118,21 @@ def incremental_semantic_dedup(
 
     assign = cell_assigner(
         corpus, n_centroids=n_centroids, c_id=id_col, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
+        round_digits=round_digits, centroids=centroids,
     )
     c_cells = assign(corpus.select(id_col, vec), id_col, 1).select(
         F.col(id_col).alias("__cid"), F.col(vec).alias("__cv"), "__cell"
     )
-    # the batch cell table feeds three consumers (corpus probe, batch
-    # self-join twice); localCheckpoint materializes the tiny frame once —
-    # lazy, same rationale as incremental_dedup's b_fp
+    # the batch cell table feeds three consumers (corpus scoring closure,
+    # batch self-join twice); localCheckpoint materializes the tiny frame
+    # once — lazy, same rationale as incremental_dedup's b_fp
     b_cells = (
         assign(batch.select(id_col, vec), id_col, n_assign)
         .select(F.col(id_col).alias("batch_id"), F.col(vec).alias("__bv"), "__cell")
         .localCheckpoint(eager=False)
     )
     return _classify_batch_vs_cells(batch, c_cells, b_cells, id_col,
-                                    threshold, round_digits, scoring)
+                                    threshold, round_digits)
 
 
 def _classify_batch_vs_cells(
@@ -1247,31 +1142,18 @@ def _classify_batch_vs_cells(
     id_col: str,
     threshold: float,
     round_digits: int,
-    scoring: str = "expr",
 ) -> DataFrame:
     """Shared classification tail of :func:`incremental_semantic_dedup` and
     :func:`incremental_semantic_dedup_from_index`: given corpus cells
     ``(__cid, __cv, __cell)`` and batch cells ``(batch_id, __bv, __cell)``,
     produce one (batch_id, status, canonical_id) row per batch vector
     under the rounded-cosine / id-tiebreak contract documented on the
-    public operator. ``scoring`` switches the corpus leg between the expr
-    reference and the per-cell vectorized arrow backend."""
+    public operator."""
     from s4hanaconnector_spark.operators.similarity import cosine
 
-    if scoring not in ("expr", "arrow"):
-        raise ValueError(f"unknown scoring backend: {scoring}")
-    if scoring == "arrow":
-        corpus_hits = _arrow_classify_corpus_hits(
-            c_cells, b_cells, threshold, round_digits
-        )
-    else:
-        ccos = F.round(cosine(F.col("__cv"), F.col("__bv")), round_digits)
-        corpus_hits = (
-            c_cells.join(F.broadcast(b_cells), on="__cell")
-            .filter(ccos >= threshold)
-            .groupBy("batch_id")
-            .agg(F.min("__cid").alias("__corpus_canonical"))
-        )
+    corpus_hits = _arrow_classify_corpus_hits(
+        c_cells, b_cells, threshold, round_digits
+    )
     lo = b_cells.select(
         F.col("batch_id").alias("__lo_id"), F.col("__bv").alias("__lv"), "__cell"
     )
@@ -1308,33 +1190,26 @@ def _arrow_classify_corpus_hits(
     threshold: float,
     round_digits: int,
 ) -> DataFrame:
-    """Vectorized corpus-vs-batch scoring: ``mapInArrow`` straight
-    over the corpus cell scan — the corpus is STILL never shuffled (the
-    operator's 100 TB design claim holds under both backends). The tiny
-    batch side is materialized once (same |batch| bound as the expr leg's
-    ``F.broadcast(b_cells)``) and its per-cell matrices ship in the task
-    closure, the way :func:`_arrow_assign` ships its centroid table; each
-    corpus Arrow batch groups its rows by cell, scores them against that
-    cell's batch matrix as blockwise numpy matmul, and emits at most one
+    """Corpus-vs-batch scoring: ``mapInArrow`` straight over the corpus
+    cell scan, so the corpus is never shuffled. The tiny batch side is
+    materialized once, at construction time (one small job), and its
+    per-cell matrices ship in the task closure, the way
+    :func:`_arrow_assign` ships its centroid table; each corpus Arrow
+    batch groups its rows by cell, scores them against that cell's batch
+    matrix as blockwise numpy matmul, and emits at most one
     ``(batch_id, __corpus_canonical)`` row per batch vector — the lowest
     qualifying corpus id seen in THIS Arrow batch. A final
     min-contraction folds Arrow-batch partials and the multi-probe
-    fan-out exactly like the expr leg's groupBy (min is associative).
-    It avoids the expr leg's broadcast-join fan-out, whose per-pair
-    interpreted HOF cosine dominates the corpus scan at scale (|cell| x
-    |batch in cell| interpreted folds -> one BLAS matmul per corpus
-    block).
+    fan-out (min is associative).
 
-    Contract (same as the expr leg): cosine rounded half-up on the binary
-    double at ``round_digits`` before thresholding; zero-norm vectors
-    produce NaN cosines that PASS the threshold (Spark NaN-greatest
-    comparison semantics); min corpus id by VALUE (ids may be strings).
-    Memory per task is bounded: the cosine matrix is computed in
-    corpus-row blocks capped at ~16M elements (128 MB of float64), and
-    the closure holds |batch| x dims float64 — broadcast-sized by the
-    operator's batch-is-small contract. Note the arrow backend
-    materializes the batch at CONSTRUCTION time (one tiny job), where the
-    expr leg defers it to the broadcast build."""
+    Contract: cosine rounded half-up on the binary double at
+    ``round_digits`` before thresholding (the :func:`_arrow_assign`
+    rounding); zero-norm vectors produce NaN cosines that PASS the
+    threshold (Spark NaN-greatest comparison semantics); min corpus id by
+    VALUE (ids may be strings). Memory per task is bounded: the cosine
+    matrix is computed in corpus-row blocks capped at ~16M elements
+    (128 MB of float64), and the closure holds |batch| x dims float64 —
+    broadcast-sized by the operator's batch-is-small contract."""
     import numpy as np
 
     from s4hanaconnector_spark.operators.similarity import _vec_matrix
@@ -1428,7 +1303,6 @@ def incremental_semantic_dedup_from_index(
     batch: DataFrame,
     threshold: float = 0.95,
     n_assign: int = 1,
-    scoring: str = "expr",
 ) -> DataFrame:
     """Batch-vs-INDEX semantic dedup — :func:`incremental_semantic_dedup`
     where the accepted corpus IS a persisted :func:`build_ann_index` index,
@@ -1437,8 +1311,8 @@ def incremental_semantic_dedup_from_index(
 
       * the resident side's cells are NOT recomputed — ``vectors/`` already
         carries ``(id, vec, __cell)`` in its partition layout, assigned at
-        build/append time with the index's frozen backend (meta.json
-        ``assignment``), so the values are bit-identical to a re-assignment;
+        build/append time under the index's frozen centroids, so the
+        values are bit-identical to a re-assignment;
       * the resident read is PARTITION-PRUNED to the batch's own cell set:
         a cell no batch vector probes can contribute no pair, so skipping
         it is exact — per-batch resident bytes are |batch cells| x cell
@@ -1451,11 +1325,7 @@ def incremental_semantic_dedup_from_index(
     on the batch side only when ``n_assign > 1``; classification
     semantics, rounding and tiebreaks are the shared tail
     (:func:`_classify_batch_vs_cells`) — equality with the full-scan
-    operator on the same frozen centroids is test-pinned. ``scoring``
-    picks the corpus-leg backend exactly as on
-    :func:`incremental_semantic_dedup` (``"arrow"`` = the per-cell
-    vectorized scale path; declared oracle queries stay on ``"expr"``).
-    Returns (batch_id, status, canonical_id) keyed by the index's own id
+    operator on the same frozen centroids is test-pinned. Returns (batch_id, status, canonical_id) keyed by the index's own id
     column.
     """
     from s4hanaconnector_spark.operators.similarity import (
@@ -1488,7 +1358,7 @@ def incremental_semantic_dedup_from_index(
         F.col(id_col).alias("__cid"), F.col(vec).alias("__cv"), "__cell"
     )
     return _classify_batch_vs_cells(batch, c_cells, b_cells, id_col,
-                                    threshold, round_digits, scoring)
+                                    threshold, round_digits)
 
 
 def winnowed_fingerprints(

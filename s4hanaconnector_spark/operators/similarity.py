@@ -147,7 +147,7 @@ def kmeans_centroids(
     an index-BUILD-time cost, not a query-time one. Training runs on a
     seeded sample (at 100 TB, fit on ~1M sampled vectors, never the full
     corpus); the resulting centroid table is tiny (sqrt(N) rows) and is
-    collected once by ivf_topk, so cell assignment stays a single projection
+    collected once by ivf_topk, so cell assignment stays a single row-local
     pass over the corpus. Seeded KMeans is run-to-run deterministic, but
     NOT engine-portable like the prefix quantizer the declared oracle
     uses — which is exactly why both exist.
@@ -258,20 +258,6 @@ def _lloyd_fit(X, k: int, seed: int, max_iter: int):
     return centers
 
 
-# cell_assigner's auto-backend threshold and the ceiling of the literal
-# expr backend. An interleaved A/B at 16/48/96/141 cells x {x10, x100}
-# corpora measured the Arrow matmul backend ahead of the interpreted HOF
-# argmax from ~48 cells up (141 cells at the x100 corpus: expr 9.1 s vs
-# arrow 0.9 s — the HOF path pays O(cells x dims) interpreted dispatches
-# and a cells-sized struct array_sort PER ROW). 64 keeps every declared
-# query (all pin n_centroids=16, <= 44 cells for sqrt-sized paths at the
-# driver-checked SFs) on the expr literal path — the oracle-replicable
-# semantics reference — while production-sized quantizers (sqrt(N) cells)
-# get the vectorized backend. Past it the literal would also inline
-# n_centroids x d ``F.lit`` nodes into every plan.
-_LITERAL_CENTROID_MAX = 64
-
-
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -283,7 +269,6 @@ def ivf_topk(
     vec: str = "embedding",
     round_digits: int = 6,
     centroids: DataFrame | None = None,
-    assignment: str = "auto",
     rescore: str = "float",
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index: a coarse quantizer
@@ -295,32 +280,13 @@ def ivf_topk(
     vectors) so the DuckDB oracle can replicate the index bit-for-bit; the
     PRODUCTION path passes ``centroids=kmeans_centroids(corpus, ...)``
     (``(cent_id, <vec>)`` rows) — sampled KMeans with ~sqrt(N) cells. Either
-    way the centroid table is collected once and cell assignment is a pure
-    projection over one corpus pass (no shuffle). Affinities are rounded
-    before ranking with id tiebreaks so cell boundaries and the k-frontier
-    are engine-independent. Recall against the exact rung is a MEASURED
-    contract: the ``similarity_ivf_recall`` declared query gates it.
-
-    ``assignment`` picks the argmax backend:
-      * ``"expr"`` — Catalyst higher-order functions over the centroid
-        table inlined as a literal array, the semantics REFERENCE (every
-        rounding/NaN/tiebreak rule is one shared expression,
-        oracle-replicable bit for bit). At most ``_LITERAL_CENTROID_MAX``
-        (64) cells; past that it raises ``ValueError``;
-      * ``"arrow"`` — a numpy-vectorized ``mapInArrow`` argmax (one BLAS
-        matmul per Arrow batch). Interpreted HOF lambdas cost
-        ~O(n_centroids x dims) interpreter dispatches per ROW — the x100
-        ladder measured the expr backend at 2500 cells x 200k vectors at
-        730 s (linear, but wide) — while the Arrow backend does the same
-        work as a dense matmul. Same contract (round-half-up at
-        ``round_digits``, ties to lowest cent_id, NaN ranks first);
-        float64 summation ORDER differs sub-ulp from the expr fold, so
-        cross-backend equality holds after rounding except on
-        ~1e-10-of-a-boundary knife edges (fixture-pinned by tests).
-      * ``"auto"`` — expr up to 64 cells, Arrow past it (where the per-row
-        interpreter cost dominates): every declared query pins 16 cells
-        and stays on the expr/oracle semantics, sqrt(N)-sized production
-        quantizers get the vectorized backend.
+    way the centroid table is collected once and cell assignment is one
+    row-local ``mapInArrow`` argmax over one corpus pass (no shuffle;
+    :func:`_arrow_assign` states its rounding contract). Affinities are
+    rounded before ranking with id tiebreaks so cell boundaries and the
+    k-frontier are engine-independent. Recall against the exact rung is a
+    MEASURED contract: the ``similarity_ivf_recall`` declared query gates
+    it.
 
     ``rescore`` picks the candidate-scoring representation:
       * ``"float"`` — candidates rescored against the raw corpus vectors;
@@ -336,7 +302,7 @@ def ivf_topk(
     cells, probes = ivf_assign(
         queries, corpus, n_centroids=n_centroids, n_probe=n_probe,
         q_id=q_id, c_id=c_id, vec=vec, round_digits=round_digits,
-        centroids=centroids, assignment=assignment,
+        centroids=centroids,
     )
     return _rescore(cells, probes, k, q_id, c_id, vec, round_digits, rescore)
 
@@ -351,18 +317,17 @@ def ivf_assign(
     vec: str = "embedding",
     round_digits: int = 6,
     centroids: DataFrame | None = None,
-    assignment: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """The IVF index WITHOUT the rescore tail: ``cells`` = one row per
     corpus vector ``(c_id, vec, __cell)`` (its nearest cell), ``probes`` =
     ``(q_id, __qv, __cell)`` rows (each query x its n_probe nearest cells).
-    Same quantizer resolution and backend choice as ivf_topk — which is
-    assign + _rescore over this function's output. Composed rungs
-    (IVF x PQ) and cell-partitioned operators (semantic dedup) consume the
-    assignment directly."""
+    Same quantizer resolution as ivf_topk — which is assign + _rescore
+    over this function's output. Composed rungs (IVF x PQ) and
+    cell-partitioned operators (semantic dedup) consume the assignment
+    directly."""
     assign = cell_assigner(
         corpus, n_centroids=n_centroids, c_id=c_id, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
+        round_digits=round_digits, centroids=centroids,
     )
     cells = assign(corpus.select(c_id, vec), c_id, 1)
     probes = assign(queries.select(q_id, vec), q_id, n_probe).withColumnRenamed(
@@ -378,26 +343,18 @@ def cell_assigner(
     vec: str = "embedding",
     round_digits: int = 6,
     centroids: DataFrame | None = None,
-    assignment: str = "auto",
 ):
-    """Resolve the coarse quantizer ONCE (centroid table and argmax
-    backend) and return ``assign(df, id_col, keep_rn) -> DataFrame``
-    mapping any ``(id, vec)`` frame to ``(id, vec, __cell)`` rows — the
-    nearest ``keep_rn`` cells per row under the shared rounding/NaN/tiebreak
-    contract. This is the assignment seam of :func:`ivf_topk`, the
-    composed IVF x PQ rung, the persisted index and the semantic-dedup
-    operators. The returned function carries the resolved backend as
-    ``assign.backend`` (``"expr"`` or ``"arrow"``; see :func:`ivf_topk`
-    for the choice), which :func:`build_ann_index` persists. ``corpus`` is
-    only consulted for the default prefix quantizer — callers that pass
+    """Resolve the coarse quantizer ONCE and return
+    ``assign(df, id_col, keep_rn) -> DataFrame`` mapping any ``(id, vec)``
+    frame to ``(id, vec, __cell)`` rows — the nearest ``keep_rn`` cells per
+    row under :func:`_arrow_assign`'s rounding/NaN/tiebreak contract. This
+    is the assignment seam of :func:`ivf_topk`, the composed IVF x PQ
+    rung, the persisted index and the semantic-dedup operators. ``corpus``
+    is only consulted for the default prefix quantizer — callers that pass
     ``centroids`` (e.g. probing a PERSISTED index) may pass None.
 
-    Whatever the backend, the centroid table is collected to the driver
-    exactly once: it is ~sqrt(N) rows by design, and both backends need
-    its rows — the expr backend inlines them as a literal array, the
-    Arrow backend ships them in the task closure."""
-    if assignment not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown assignment backend: {assignment}")
+    The centroid table is collected to the driver exactly once: it is
+    ~sqrt(N) rows by design and ships in the task closure."""
     if centroids is not None:
         cent = centroids.select(
             F.col("cent_id").alias("__cent_id"), F.col(vec).alias("__cent")
@@ -411,74 +368,10 @@ def cell_assigner(
     cent_rows = sorted(
         (r["__cent_id"], [float(x) for x in r["__cent"]]) for r in cent.collect()
     )
-    if assignment == "auto":
-        assignment = (
-            "expr" if len(cent_rows) <= _LITERAL_CENTROID_MAX else "arrow"
-        )
-    elif assignment == "expr" and len(cent_rows) > _LITERAL_CENTROID_MAX:
-        raise ValueError(
-            f"assignment='expr' inlines the centroid table into the plan and "
-            f"takes at most {_LITERAL_CENTROID_MAX} cells, got "
-            f"{len(cent_rows)}; use assignment='arrow' or 'auto'"
-        )
-
-    if assignment == "arrow":
-
-        def assign(df: DataFrame, id_col: str, keep_rn: int) -> DataFrame:
-            return _arrow_assign(df, id_col, vec, keep_rn, cent_rows, round_digits)
-
-        assign.backend = "arrow"
-        return assign
-
-    # Cell assignment is a ROW-LOCAL argmax over the literal centroid array
-    # — no join at all, zero corpus shuffle. A broadcast crossJoin ->
-    # row_number window partitioned by the row id would push |corpus| x
-    # n_centroids rows through a full shuffle-sort just to keep one row per
-    # id. Semantics: affinity rounded to ``round_digits`` BEFORE ranking,
-    # ties to the lowest cent_id, NaN affinities (zero-norm vectors) rank
-    # first exactly as a DESC NaN-greatest window order would.
-    import math as _m
-
-    cent_lit = F.array(
-        *[
-            F.struct(
-                F.lit(cid).cast("bigint").alias("cid"),
-                F.array(*[F.lit(x) for x in cv]).alias("cv"),
-                F.lit(_m.sqrt(sum(x * x for x in cv))).alias("cnorm"),
-            )
-            for cid, cv in cent_rows
-        ]
-    )
 
     def assign(df: DataFrame, id_col: str, keep_rn: int) -> DataFrame:
-        # materialize the row norm FIRST: higher-order lambdas re-evaluate
-        # referenced subtrees per element (repo-wide perf rule), so _norm
-        # inside the transform would recompute per centroid
-        with_norm = df.select(
-            id_col, vec, _norm(F.col(vec)).alias("__vnorm"),
-            cent_lit.alias("__cents"),
-        )
-        aff = lambda c: F.round(  # noqa: E731
-            _dot(F.col(vec), c["cv"]) / (F.col("__vnorm") * c["cnorm"]), round_digits
-        )
-        ranked = F.array_sort(
-            F.transform(
-                F.col("__cents"),
-                # ascending struct sort on (-aff, cid): max affinity first,
-                # ties to lowest cent_id; NaN -> +inf reproduces the window's
-                # DESC NaN-first placement
-                lambda c: F.struct(
-                    (-F.nanvl(aff(c), F.lit(float("inf")))).alias("negaff"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )
-        picked = F.slice(ranked, 1, keep_rn)
-        return with_norm.select(
-            id_col, vec, F.explode(F.transform(picked, lambda s: s["cid"])).alias("__cell")
-        )
+        return _arrow_assign(df, id_col, vec, keep_rn, cent_rows, round_digits)
 
-    assign.backend = "expr"
     return assign
 
 
@@ -540,34 +433,25 @@ def _arrow_assign(
     cent_rows: list[tuple],
     round_digits: int,
 ) -> DataFrame:
-    """Vectorized cell assignment: one dense float64 matmul per Arrow batch
-    instead of O(n_centroids x dims) interpreted lambda dispatches per row.
-    Row-local like the expr backend (mapInArrow adds no shuffle), same
-    contract: affinity rounded HALF_UP at ``round_digits`` before ranking,
-    ties to the lowest cent_id (cent_rows arrive cid-sorted, and numpy's
-    stable argsort keeps first-index-wins on equal keys), NaN affinities
-    (zero-norm vectors) rank first.
+    """Cell assignment: one dense float64 matmul per Arrow batch, row-local
+    (``mapInArrow`` adds no shuffle). Each ``(id, vec)`` row keeps its
+    ``keep_rn`` highest-affinity cells, where affinity is the cosine to
+    the centroid and the rounding contract is:
 
-    Boundary caveat (two distinct classes):
-      * reduction order — numpy's pairwise/BLAS summation differs sub-ulp
-        from the expr fold, so a cosine within ~1e-10 of a rounding
-        boundary can round differently across backends;
-      * rounding rule — Spark's F.round is BigDecimal.valueOf HALF_UP:
-        it rounds the SHORTEST-DECIMAL repr of the double, so a value
-        whose repr is an exact half-tie at digit round_digits+1 (e.g.
-        repr 0.1234565) rounds AWAY (0.123457), while this backend's
-        floor(|x|*scale+0.5) rounds the BINARY double, which for such a
-        repr sits just below the half and rounds down (0.123456).
-    Both classes only move affinities sitting exactly on a cell boundary;
-    since ``assignment='auto'`` switches backends past
-    ``_LITERAL_CENTROID_MAX`` cells, boundary-vector cell assignment can
-    depend on centroid count. A per-element Python-decimal emulation of
-    BigDecimal would serialize the (rows x cells) affinity matrix through
-    the interpreter — exactly the cost this backend exists to avoid — so
-    the contract is DOCUMENTED and the shipped default is recall-gated where it actually engages: the
-    x100 ladder's 2500-cell rung measures the Arrow backend's recall
-    floor against exact brute force (test_scale_smoke.py), and the
-    fixture tests pin expr==arrow row equality away from boundaries."""
+      * the cosine is rounded half-up at ``round_digits`` on the BINARY
+        double (``floor(|x| * 10**round_digits + 0.5)`` with the sign put
+        back), before ranking;
+      * ties go to the lowest ``cent_id`` (``cent_rows`` arrive
+        cid-sorted and numpy's stable argsort keeps the first index);
+      * NaN affinities (zero-norm vectors) rank first.
+
+    Rounding the binary double is also what the declared queries' DuckDB
+    oracle does, so the oracle checks this kernel directly; there is no
+    second kernel to compare it with. Spark's ``F.round`` rounds the
+    shortest decimal repr instead (a repr that is an exact half-tie at
+    digit ``round_digits + 1``, e.g. 0.1234565, rounds away there and down
+    here), so an affinity on such a tie can land in a different cell than
+    a Catalyst-expression argmax would give it."""
     import numpy as np
 
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
@@ -653,8 +537,7 @@ def _arrow_assign(
             order = np.argsort(-r, axis=1, kind="stable")[:, :keep_rn]
             picked = cids[order]  # (rows, min(keep_rn, n_centroids))
             # repeat by the ACTUAL width: with fewer centroids than
-            # keep_rn the slice is narrower, matching the expr path's
-            # F.slice degrading gracefully instead of a length mismatch
+            # keep_rn every cell is kept (n_probe > n_centroids probes all)
             n_picked = picked.shape[1]
             idx = pa.array(
                 np.repeat(np.arange(batch.num_rows, dtype=np.int64), n_picked)
@@ -1219,7 +1102,6 @@ def ivf_pq_topk(
     round_digits: int = 6,
     centroids: DataFrame | None = None,
     codebooks: list[list[list[float]]] | None = None,
-    assignment: str = "auto",
 ) -> DataFrame:
     """The full production ANN composition — FAISS ``IVFx,PQy`` + refine
     (IVFADC, Jégou et al. TPAMI'11): an IVF coarse quantizer prunes the
@@ -1252,7 +1134,7 @@ def ivf_pq_topk(
     cells, probes = ivf_assign(
         queries, corpus, n_centroids=n_centroids, n_probe=n_probe,
         q_id=q_id, c_id=c_id, vec=vec, round_digits=round_digits,
-        centroids=centroids, assignment=assignment,
+        centroids=centroids,
     )
     # encode ONCE per corpus row, keeping its cell: the inverted lists of a
     # real deployment store exactly (cell, id, codes)
@@ -1506,42 +1388,42 @@ def _fs_read_text(spark, path: str) -> str:
 def _read_index_meta(spark, path: str) -> dict:
     """Read and validate a :func:`build_ann_index` index's ``meta.json``.
     The file is input from outside the program, and every reader assigns
-    and encodes new vectors with exactly the backends the index was built
-    with — a silently substituted backend could disagree with the build
-    on the documented rounding-tie boundaries (:func:`_arrow_assign`). So
-    a missing ``assignment``/``encode`` key, or a backend this engine does
-    not have, fails loudly instead of being guessed."""
+    and encodes new vectors with the engine's one kernel per stage — an
+    index built by another kernel (an older engine's ``"expr"`` cell
+    assignment) could disagree with it on the documented rounding-tie
+    boundaries (:func:`_arrow_assign`). So a missing ``assignment``/
+    ``encode`` key, or any value but ``"arrow"``, fails loudly instead of
+    being guessed."""
     import json
     import os
 
     meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
-    for key, allowed in (("assignment", ("expr", "arrow")), ("encode", ("arrow",))):
+    for key in ("assignment", "encode"):
         if key not in meta:
             raise ValueError(
                 f"index meta.json at {path} has no {key!r} key; rebuild the "
                 "index with build_ann_index"
             )
-        if meta[key] not in allowed:
+        if meta[key] != "arrow":
             raise ValueError(
-                f"index meta.json at {path}: unsupported {key!r} backend "
-                f"{meta[key]!r} (expected one of {allowed}); rebuild the "
-                "index with build_ann_index"
+                f"index meta.json at {path}: unsupported {key!r} kernel "
+                f"{meta[key]!r} (expected 'arrow'); rebuild the index with "
+                "build_ann_index"
             )
     return meta
 
 
 def _index_assigner(spark, path: str, meta: dict):
-    """The cell assigner of a built index: its persisted centroid table
-    under the backend ``meta.json`` records — what probe, append and the
-    from-index dedup readers assign new vectors with, so a vector lands in
-    the cell a one-shot build would give it (see :func:`_read_index_meta`)."""
+    """The cell assigner of a built index: its persisted centroid table —
+    what probe, append and the from-index dedup readers assign new vectors
+    with, so a vector lands in the cell a one-shot build would give it
+    (see :func:`_read_index_meta`)."""
     import os
 
     return cell_assigner(
         None, n_centroids=meta["n_centroids"], c_id=meta["c_id"],
         vec=meta["vec"], round_digits=meta["round_digits"],
         centroids=spark.read.parquet(os.path.join(path, "centroids")),
-        assignment=meta["assignment"],
     )
 
 
@@ -1556,7 +1438,6 @@ def build_ann_index(
     round_digits: int = 6,
     centroids: DataFrame | None = None,
     codebooks: list[list[list[float]]] | None = None,
-    assignment: str = "auto",
 ) -> dict:
     """Persist a disk-resident IVFADC index: ONE corpus pass assigns cells
     and PQ-encodes every vector, then writes
@@ -1578,12 +1459,10 @@ def build_ann_index(
     deterministic prefix rules (oracle-replicable); production passes
     ``kmeans_centroids(...)`` / trained codebooks.
 
-    ``meta.json`` records the cell-assignment backend ``cell_assigner``
-    resolved (never ``"auto"``) and the encoder (``"arrow"``): every later
-    append and probe assigns and encodes with exactly these, so an
-    appended vector lands in the cell and codes a one-shot rebuild would
-    give it (the backends differ on documented rounding-tie boundaries,
-    :func:`_arrow_assign`)."""
+    ``meta.json`` records the cell-assignment and encode kernels (both
+    ``"arrow"``); readers refuse any other value, so an appended vector
+    lands in the cell and codes a one-shot rebuild would give it
+    (:func:`_read_index_meta`)."""
     import json
     import os
 
@@ -1602,7 +1481,7 @@ def build_ann_index(
     centroids = centroids.localCheckpoint(eager=False)
     assign = cell_assigner(
         corpus, n_centroids=n_centroids, c_id=c_id, vec=vec,
-        round_digits=round_digits, centroids=centroids, assignment=assignment,
+        round_digits=round_digits, centroids=centroids,
     )
     cells = assign(corpus.select(c_id, vec), c_id, 1)
     coded = _arrow_pq_encode(cells, c_id, vec, codebooks, round_digits)
@@ -1625,7 +1504,7 @@ def build_ann_index(
     meta = {
         "n_centroids": n_centroids, "m": m, "n_codes": n_codes,
         "c_id": c_id, "vec": vec, "round_digits": round_digits,
-        "encode": "arrow", "assignment": assign.backend,
+        "encode": "arrow", "assignment": "arrow",
     }
     _fs_write_text(spark, os.path.join(path, "codebooks.json"), json.dumps(codebooks))
     _fs_write_text(spark, os.path.join(path, "meta.json"), json.dumps(meta))
@@ -1661,9 +1540,7 @@ def probe_ann_index(
     )
     c_id, vec = meta["c_id"], meta["vec"]
     round_digits = meta["round_digits"]
-    # assign QUERY vectors with the index's FROZEN backend, like append: an
-    # auto-resolved probe of an explicit-'arrow' build would go through
-    # expr and diverge on the documented rounding-tie boundaries
+    # assign QUERY vectors with the index's persisted centroids, like append
     assign = _index_assigner(spark, path, meta)
     probes = assign(queries.select(q_id, vec), q_id, n_probe).withColumnRenamed(
         vec, "__qv"

@@ -18,7 +18,7 @@ from s4hanaconnector_spark.operators.relational import (
     grouped_agg,
     top_k_per_group,
 )
-from s4hanaconnector_spark.queries.registry import register, t
+from s4hanaconnector_spark.queries.registry import register, scratch_root, t
 from s4hanaconnector_spark.sources.partsupp import PARTSUPP_CTE
 from s4hanaconnector_spark.streaming.core import drain
 
@@ -1190,14 +1190,14 @@ GROUP BY nation, o_year
 """,
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 (true 6-way shape, r6 VERDICT wrong #2): profit on 'red'
+    """TPC-H Q9 (true 6-way shape): profit on 'red'
     parts by supplier nation and order year, with ps_supplycost from the
     derived partsupp bridge (sources/partsupp.py — row-local explode,
     identical in both engines). The cost stays exact: integer cents * a
     DECIMAL(3,2) 0.01 literal (multiplication, never division — the two
     engines' decimal-division scale rules differ); the sum crosses to
     DOUBLE via VARCHAR in the oracle (DuckDB's DECIMAL->DOUBLE cast is
-    1 ULP off past 2^53 — the r6 sf1 gate finding). Plan: part-name filter
+    1 ULP off past 2^53, found at sf1). Plan: part-name filter
     and the 4-rows-per-part bridge broadcast into lineitem before the
     lineitem<->orders shuffle."""
     from s4hanaconnector_spark.operators.relational import broadcast_if_small
@@ -2259,7 +2259,7 @@ WHERE window_start + INTERVAL 1 HOUR <= m - INTERVAL 10 MINUTE
 """,
 )
 def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E26's core semantic as a DIRECT declared query (r4 VERDICT #4): rows
+    """E26's core semantic as a DIRECT declared query: rows
     arriving OLDER than the watermark are dropped, not aggregated. Poll 0
     feeds all events but the latest; poll 1 feeds the max-ts row; poll 2
     then injects copies of the EARLIEST hour's rows — far below the
@@ -2294,7 +2294,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     lo, hi = b["lo"], b["hi"]  # 1-row bounded agg, plan-time only
-    d = tempfile.mkdtemp(prefix="stream_late_drop_")
+    d = tempfile.mkdtemp(prefix="stream_late_drop_", dir=scratch_root())
     feed_dir = os.path.join(d, "feed")
     # sequential writes give increasing mtimes = file-source batch order
     ev.filter(F.col("ts") < F.lit(hi)).coalesce(1).write.parquet(
@@ -3798,7 +3798,7 @@ def streaming_ss_join_cross_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     else:
         bounds = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
         mid = bounds["lo"] + (bounds["hi"] - bounds["lo"]) / 2
-    d = tempfile.mkdtemp(prefix="stream_ss_join_")
+    d = tempfile.mkdtemp(prefix="stream_ss_join_", dir=scratch_root())
     feed_dir = os.path.join(d, "feed")
     ev.filter(F.col("ts") <= F.lit(mid)).coalesce(1).write.parquet(
         os.path.join(feed_dir, "poll=0")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from s4hanaconnector_spark.mapping import ColumnMapping, TableMapping
 from s4hanaconnector_spark.operators import cdc as C
 from s4hanaconnector_spark.poll import RangeCommitSink, materialize_snapshot, poll
-from s4hanaconnector_spark.queries.registry import register, t
+from s4hanaconnector_spark.queries.registry import register, scratch_root, t
 from s4hanaconnector_spark.sources.pklog import (
     CUSTOMER_PKLOG_ORACLE_CTE,
     PKLOG_ORACLE_CTE,
@@ -37,6 +37,11 @@ from s4hanaconnector_spark.streaming.core import (
 )
 
 LO, HI = 1005, 1040  # the delta poll's (lo, hi] transaction range
+
+
+def _mkdtemp(prefix: str) -> str:
+    """A fresh scratch dir under the queries' per-process scratch root."""
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
 
 ORDERS_MAPPING = TableMapping(
     name="orders",
@@ -86,7 +91,7 @@ def _stream_polls(
     one drain would all commit in micro-batch 0. The assert holds every
     mapping to one committed range per poll: the snapshot composes ranges
     across micro-batches, and each mapping resumes from its own range."""
-    d = tempfile.mkdtemp(prefix=prefix)
+    d = _mkdtemp(prefix)
     log_glob = os.path.join(d, "log", "poll=*")
     sink = RangeCommitSink(os.path.join(d, "out"))
     on_batch = poll_each_batch(
@@ -464,7 +469,7 @@ def cdc_materialize_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     stale = orders.filter(F.col("o_orderkey") % 3 != 0)
     pklog = synthetic_pklog(orders)
-    out_dir = tempfile.mkdtemp(prefix="cdc_mat_topic_")
+    out_dir = _mkdtemp("cdc_mat_topic_")
     sink = RangeCommitSink(out_dir)
     r1 = C.cdc_delta(orders, pklog, ORDERS_IDENTITY, 0, _SPLIT_TXID)
     r2 = C.cdc_delta(orders, pklog, ORDERS_IDENTITY, _SPLIT_TXID, 10**9)
@@ -567,7 +572,7 @@ def cdc_materialize_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     stale = orders.filter(F.col("o_orderkey") % 3 != 0)
     pklog = synthetic_pklog(orders)
-    out_dir = tempfile.mkdtemp(prefix="cdc_mat_evolve_")
+    out_dir = _mkdtemp("cdc_mat_evolve_")
     sink = RangeCommitSink(out_dir)
     r1 = C.cdc_delta(orders, pklog, ORDERS_IDENTITY, 0, _SPLIT_TXID)
     r2 = C.cdc_delta(orders, pklog, ORDERS_IDENTITY_EVOLVED, _SPLIT_TXID, 10**9)
@@ -675,7 +680,7 @@ def cdc_poll_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     txns = synthetic_transactions(orders)
-    out_dir = tempfile.mkdtemp(prefix="cdc_poll_rt_")
+    out_dir = _mkdtemp("cdc_poll_rt_")
     sink = RangeCommitSink(out_dir)
     # now is far past the fixture's order dates, so no transaction falls in
     # the 7200 s staleness window -> the min-active sentinel collapses and
@@ -947,7 +952,7 @@ def cdc_two_poll_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
     txns = synthetic_transactions(orders)
-    out_dir = tempfile.mkdtemp(prefix="cdc_two_poll_")
+    out_dir = _mkdtemp("cdc_two_poll_")
     sink = RangeCommitSink(out_dir)
     hi1 = poll(
         spark, [ORDERS_MAPPING], lambda name: orders, pklog, txns,
@@ -1026,7 +1031,7 @@ def cdc_quarantine_poll_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     txns = synthetic_transactions(orders)
-    out_dir = tempfile.mkdtemp(prefix="cdc_q_poll_")
+    out_dir = _mkdtemp("cdc_q_poll_")
     sink = RangeCommitSink(out_dir)
     hi1 = poll(
         spark, [ORDERS_MAPPING], lambda name: orders, dirty, txns,
@@ -1083,7 +1088,7 @@ def cdc_quarantine_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dirty = base.unionByName(garbage)
     txns = synthetic_transactions(orders)
-    out_dir = tempfile.mkdtemp(prefix="cdc_q_retention_")
+    out_dir = _mkdtemp("cdc_q_retention_")
     sink = RangeCommitSink(out_dir)
     common = dict(
         spark=spark, mappings=[ORDERS_MAPPING],
@@ -1126,7 +1131,7 @@ def cdc_stream_to_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store -> exactly-once sink -> parquet readback."""
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
-    d = tempfile.mkdtemp(prefix="cdc_stream_sink_")
+    d = _mkdtemp("cdc_stream_sink_")
     log_dir = os.path.join(d, "log")
     out_dir = os.path.join(d, "out")
     ckpt = os.path.join(d, "ckpt")
@@ -1186,7 +1191,7 @@ def cdc_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     key in batch 1 and fail the hash."""
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
-    d = tempfile.mkdtemp(prefix="cdc_restart_")
+    d = _mkdtemp("cdc_restart_")
     log_dir = os.path.join(d, "log")
     out_dir = os.path.join(d, "out")
     ckpt = os.path.join(d, "ckpt")
@@ -1811,7 +1816,7 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = upd.unionByName(dels).unionByName(ins)
 
-    d = tempfile.mkdtemp(prefix="stream_inc_agg_")
+    d = _mkdtemp("stream_inc_agg_")
     feed_dir = os.path.join(d, "feed")
     state_dir = os.path.join(d, "state")
     ckpt = os.path.join(d, "ckpt")
@@ -2124,7 +2129,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "o_orderpriority",
     )
-    d = tempfile.mkdtemp(prefix="csv_src_")
+    d = _mkdtemp("csv_src_")
     path = os.path.join(d, "orders_csv")
     sub.write.option("header", "true").csv(path)
     back = read_csv(
@@ -2177,7 +2182,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tags"),
         )
     )
-    d = tempfile.mkdtemp(prefix="json_src_")
+    d = _mkdtemp("json_src_")
     path = os.path.join(d, "orders_json")
     sub.write.json(path)
     back = read_json(
@@ -2229,7 +2234,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
         )
     )
-    d = tempfile.mkdtemp(prefix="orc_src_")
+    d = _mkdtemp("orc_src_")
     path = os.path.join(d, "lineitem_orc")
     sub.write.orc(path)
     back = spark.read.orc(path)
@@ -2269,11 +2274,15 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 37 == 0)
         .select("doc_id", "text")
     )
-    d = tempfile.mkdtemp(prefix="binsrc_")
+    d = _mkdtemp("binsrc_")
     for r in sub.collect():
         with open(os.path.join(d, f"{r['doc_id']}.bin"), "wb") as f:
             f.write(r["text"].encode("utf-8"))
-    back = spark.read.format("binaryFile").load(os.path.join(d, "*.bin"))
+    # glob expanded here, as in _stream_polls: a glob path makes the reader
+    # log a FileNotFoundException stack trace looking for a metadata dir
+    back = spark.read.format("binaryFile").load(
+        sorted(_glob.glob(os.path.join(d, "*.bin")))
+    )
     return back.select(
         F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1).cast("bigint").alias("doc_id"),
         F.col("length").alias("n_bytes"),
@@ -2546,7 +2555,7 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     (S4HanaProducer.java:442)."""
     orders = t(spark, sf_dir, "orders")
     pklog = synthetic_pklog(orders)
-    d = tempfile.mkdtemp(prefix="stream_scd2_")
+    d = _mkdtemp("stream_scd2_")
     feed_dir = os.path.join(d, "feed")
     state_dir = os.path.join(d, "state")
     ckpt = os.path.join(d, "ckpt")
@@ -2994,7 +3003,7 @@ def streaming_nested_bo_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         F.lit(None).cast("double").alias("l_quantity"),
     )
 
-    d = tempfile.mkdtemp(prefix="stream_nest_")
+    d = _mkdtemp("stream_nest_")
     feed_dir = os.path.join(d, "feed")
     state_dir = os.path.join(d, "state")
     ckpt = os.path.join(d, "ckpt")
@@ -3208,7 +3217,7 @@ def streaming_nested_bo_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
         "D", 3,
     )
 
-    d = tempfile.mkdtemp(prefix="stream_nest2_")
+    d = _mkdtemp("stream_nest2_")
     feed_dir = os.path.join(d, "feed")
     state_dir = os.path.join(d, "state")
     ckpt = os.path.join(d, "ckpt")
@@ -3388,7 +3397,7 @@ def streaming_forget_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seeds = cust0.filter(F.col("c_custkey") % 97 == 0).select("c_custkey")
 
-    d = tempfile.mkdtemp(prefix="stream_forget_")
+    d = _mkdtemp("stream_forget_")
     feed_dir = os.path.join(d, "feed")
     state_dir = os.path.join(d, "state")
     ckpt = os.path.join(d, "ckpt")

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s4hanaconnector_spark.queries.registry import register, t
+from s4hanaconnector_spark.queries.registry import register, scratch_root, t
 from s4hanaconnector_spark.sources.derby import DRIVER, qident, stage_table
 from s4hanaconnector_spark.sources.jdbc import (
     JdbcSourceConfig,
@@ -392,7 +392,7 @@ def cdc_poll_jdbc_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     pklog_jdbc = _cfg(pklog_url, table="PKLOG").load(spark)
     txns_jdbc = _cfg(txn_url, table="TXNS").load(spark)
 
-    out_dir = tempfile.mkdtemp(prefix="cdc_poll_jdbc_")
+    out_dir = tempfile.mkdtemp(prefix="cdc_poll_jdbc_", dir=scratch_root())
     sink = RangeCommitSink(out_dir)
     hi = poll(
         spark,

@@ -20,6 +20,23 @@ class QueryDef:
 
 REGISTRY: dict[str, QueryDef] = {}
 
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_root() -> str:
+    """The one per-process directory under which declared queries keep
+    their scratch files (sinks, checkpoints, indexes); removed at
+    interpreter exit."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="query_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return _SCRATCH_ROOT
+
 
 def register(name: str, oracle: str | None, headline: bool = False):
     """Decorator: register a declared query. Duplicate names are an error —

@@ -1,4 +1,4 @@
-"""Seeded scale-tier synthesis (r5 VERDICT #1): a deterministic ~Nx replica
+"""Seeded scale-tier synthesis: a deterministic ~Nx replica
 of the sf0.1 test tables — 10x for the bench's second tier, the skew stress
 and the sf1 recall recalibration; 100x for the two-decade scaling ladder
 (tests/test_scale_smoke.py::test_x100_scaling_ladder).
@@ -44,7 +44,7 @@ REPLICAS = 10
 KEY_OFFSET = 10_000_000  # far above any sf0.1 key (max ~600k)
 DOC_OFFSET = 1_000_000  # matches tests/test_scale_smoke.py
 
-# Mixed near-dup family sizes above the x10 tier (ADVICE r8): documents with
+# Mixed near-dup family sizes above the x10 tier: documents with
 # doc_id % MID_FAMILY_MOD == 0 replicate only MID_FAMILY_REPLICAS times, so
 # the x100 tier carries families BELOW the incremental-neardup operator's
 # 64-doc hot-bucket cap alongside the 100-member hot ones — the scale rung
@@ -94,7 +94,7 @@ def synthesize_tier(
     cross-replica. Same completion-marker idempotency as the 10x tier."""
     marker = os.path.join(out_dir, "_SUCCESS_SF1")
     if os.path.exists(marker):
-        # the marker payload encodes the tier (ADVICE r7): an explicit
+        # the marker payload encodes the tier: an explicit
         # out_dir previously synthesized at a DIFFERENT replicas count must
         # re-synthesize, not silently return wrong-scale data. Same
         # cache-key self-invalidation rationale as default_tier_dir; a
@@ -196,7 +196,7 @@ def default_sf1_dir(base_dir: str) -> str:
 def default_tier_dir(base_dir: str, replicas: int) -> str:
     """Cache location for a ``replicas``x tier of ``base_dir``.
 
-    The key folds in (r6 ADVICE):
+    The key folds in:
       * the base dir — a tier synthesized from sf0.01 is never silently
         reused for a bench run against sf0.1 (which would make the
         scaling-ratio contract pass vacuously);

@@ -1415,11 +1415,12 @@ def test_index_append_equals_one_shot_build(spark, sf_dir):
 
 
 def test_index_readers_reject_incomplete_meta(spark, sf_dir):
-    """meta.json is input from outside the program. Every reader that
-    assigns or encodes vectors needs the exact backends the index was
-    built with, so a meta without the 'assignment' / 'encode' keys, or
-    naming an encoder the engine does not have, fails loudly and names
-    the key instead of guessing a backend."""
+    """meta.json is input from outside the program. build_ann_index records
+    the engine's one cell-assignment and encode kernel ("arrow" for both).
+    A meta without the 'assignment' / 'encode' keys, or naming another
+    kernel (an index built by the former "expr" cell assignment can
+    disagree on rounding-tie boundaries), makes every reader fail loudly
+    and name the key instead of guessing."""
     import json
     import os
     import tempfile
@@ -1445,7 +1446,9 @@ def test_index_readers_reject_incomplete_meta(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="ann_index_meta_")
     meta = build_ann_index(c.filter(F.col("c_id") < 64), path,
                            n_centroids=16, m=16, n_codes=32)
-    assert meta["encode"] == "arrow" and meta["assignment"] == "expr"
+    assert meta["encode"] == "arrow" and meta["assignment"] == "arrow"
+    with open(os.path.join(path, "meta.json")) as f:
+        assert json.load(f) == meta
 
     readers = {
         "probe": lambda: probe_ann_index(spark, path, q, k=5),
@@ -1460,6 +1463,7 @@ def test_index_readers_reject_incomplete_meta(spark, sf_dir):
         (legacy, "'assignment'"),
         (no_encode, "'encode'"),
         ({**meta, "encode": "expr"}, "'encode'.*'expr'"),
+        ({**meta, "assignment": "expr"}, "'assignment'.*'expr'"),
     )
     for bad, key in cases:
         _fs_write_text(spark, os.path.join(path, "meta.json"), json.dumps(bad))
@@ -1484,7 +1488,7 @@ def test_arrow_assign_all_neg_inf_row_takes_first_centroid(spark):
     row = spark.createDataFrame(
         [(1, [1e-162] * 64)], "c_id bigint, embedding array<double>"
     )
-    assign = cell_assigner(None, centroids=cents, assignment="arrow")
+    assign = cell_assigner(None, centroids=cents)
     one = [r["__cell"] for r in assign(row, "c_id", 1).collect()]
     two = [r["__cell"] for r in assign(row, "c_id", 2).collect()]
     assert one == [10], one
@@ -1530,13 +1534,11 @@ def test_stream_ingest_probe_equals_one_shot_rebuild(spark, sf_dir):
 
 
 def test_index_append_reuses_build_assignment_backend(spark, sf_dir):
-    """ADVICE r10 (the assignment twin of the r9 encode fix): an index
-    built with an EXPLICIT cell-assignment backend must append with that
-    same backend — build_ann_index resolves 'auto' and persists the
-    resolved name in meta.json, append_to_ann_index reads it back, so a
-    rounding-tie-boundary vector appended later lands in the same cell a
-    one-shot rebuild would give it (the append==rebuild bit-identical
-    contract)."""
+    """An append assigns its vectors with what the build persisted — the
+    centroid table and the assignment kernel meta.json names ("arrow",
+    the only one) — so a vector appended later lands in the same cell a
+    one-shot build over the union gives it (the append == rebuild
+    bit-identical contract)."""
     import json
     import os
     import tempfile
@@ -1558,13 +1560,9 @@ def test_index_append_reuses_build_assignment_backend(spark, sf_dir):
     )
     cbs = pq_subspace_codebooks(first, 16, 32)
 
-    # 16 centroids are within the 64-cell literal threshold, so auto
-    # resolves to expr — an explicit arrow build must override that for
-    # appends too
     inc = tempfile.mkdtemp(prefix="ann_index_asgn_")
     meta = build_ann_index(first, inc, n_centroids=16, m=16, n_codes=32,
-                           centroids=cents, codebooks=cbs,
-                           assignment="arrow")
+                           centroids=cents, codebooks=cbs)
     assert meta["assignment"] == "arrow"
     with open(os.path.join(inc, "meta.json")) as f:
         assert json.load(f)["assignment"] == "arrow"
@@ -1572,7 +1570,7 @@ def test_index_append_reuses_build_assignment_backend(spark, sf_dir):
 
     full = tempfile.mkdtemp(prefix="ann_index_asgn_full_")
     build_ann_index(c, full, n_centroids=16, m=16, n_codes=32,
-                    centroids=cents, codebooks=cbs, assignment="arrow")
+                    centroids=cents, codebooks=cbs)
     cells_inc = {
         (r["c_id"], r["__cell"])
         for r in spark.read.parquet(os.path.join(inc, "vectors")).collect()
@@ -1582,13 +1580,6 @@ def test_index_append_reuses_build_assignment_backend(spark, sf_dir):
         for r in spark.read.parquet(os.path.join(full, "vectors")).collect()
     }
     assert cells_inc == cells_full and cells_inc
-
-    # an 'auto' build persists the RESOLVED backend (expr at 16 centroids),
-    # never the literal string 'auto'
-    auto = tempfile.mkdtemp(prefix="ann_index_asgn_auto_")
-    meta2 = build_ann_index(first, auto, n_centroids=16, m=16, n_codes=32,
-                            centroids=cents, codebooks=cbs)
-    assert meta2["assignment"] == "expr"
 
 
 def test_compact_dedup_ids_repairs_replayed_append(spark, sf_dir):
@@ -1851,8 +1842,9 @@ def test_incremental_dedup_from_index_equals_full_scan(spark, sf_dir):
     quantizer, at n_assign 1 AND 2 — the pruning argument (a cell no
     batch vector probes contributes no pair) and the persisted-__cell
     argument (resident cells on disk == re-assignment under the frozen
-    backend) verified together. This is the per-batch shape
-    streaming_semantic_ingest now runs (O(probed cells), not O(index))."""
+    centroids) verified together — and the fixture must reach all three
+    statuses. This is the per-batch shape streaming_semantic_ingest runs
+    (O(probed cells), not O(index))."""
     import tempfile
 
     from s4hanaconnector_spark.operators.dedup import (
@@ -1882,25 +1874,28 @@ def test_incremental_dedup_from_index_equals_full_scan(spark, sf_dir):
             ).collect()
         }
         assert pruned == full and pruned, f"n_assign={n_assign}"
+        assert {r[1] for r in full} == {"dup_of_corpus", "dup_in_batch", "new"}
 
 
 def test_incremental_scoring_backends_agree(spark, sf_dir):
-    """The arrow scoring backend of the incremental-semantic classify tail
-    (mapInArrow over the corpus scan, per-cell numpy matmuls — the scale
-    path for the corpus leg)
-    must reproduce the expr reference classification on the fixture —
-    same statuses, same canonical ids, at n_assign 1 AND 2, through BOTH
-    the full-scan operator and the partition-pruned from-index reader —
-    and reject unknown backend names."""
+    """The Arrow corpus-scoring kernel of the incremental-semantic
+    classify tail (mapInArrow over the corpus cell scan, per-cell numpy
+    matmuls) must reproduce a reference built from the shared Spark
+    ``cosine`` expression — a broadcast join of corpus and batch cells,
+    rounded cosine >= threshold, min corpus id — on the same cells, at
+    n_assign 1 AND 2, through BOTH the full-scan operator and the
+    partition-pruned from-index reader."""
     import tempfile
-
-    import pytest as _pytest
 
     from s4hanaconnector_spark.operators.dedup import (
         incremental_semantic_dedup,
         incremental_semantic_dedup_from_index,
     )
-    from s4hanaconnector_spark.operators.similarity import build_ann_index
+    from s4hanaconnector_spark.operators.similarity import (
+        build_ann_index,
+        cell_assigner,
+        cosine,
+    )
     from s4hanaconnector_spark.queries.llmops import _sem_inc_frames
 
     corpus, batch = _sem_inc_frames(spark, sf_dir)
@@ -1908,35 +1903,38 @@ def test_incremental_scoring_backends_agree(spark, sf_dir):
     build_ann_index(corpus, path, n_centroids=16, m=16, n_codes=32,
                     c_id="vec_id", vec="embedding")
     cents = spark.read.parquet(f"{path}/centroids")
+    assign = cell_assigner(None, centroids=cents, c_id="vec_id")
+    c_cells = assign(corpus, "vec_id", 1).select(
+        F.col("vec_id").alias("__cid"), F.col("embedding").alias("__cv"),
+        "__cell",
+    )
     for n_assign in (1, 2):
-        expr = {
-            tuple(r)
-            for r in incremental_semantic_dedup(
-                corpus, batch, "vec_id", threshold=0.95,
-                centroids=cents, n_assign=n_assign, scoring="expr",
-            ).collect()
+        b_cells = assign(batch, "vec_id", n_assign).select(
+            F.col("vec_id").alias("batch_id"),
+            F.col("embedding").alias("__bv"), "__cell",
+        )
+        ref = {
+            r["batch_id"]: r["canon"]
+            for r in c_cells.join(F.broadcast(b_cells), on="__cell")
+            .filter(F.round(cosine(F.col("__cv"), F.col("__bv")), 6) >= 0.95)
+            .groupBy("batch_id")
+            .agg(F.min("__cid").alias("canon"))
+            .collect()
         }
-        arrow = {
-            tuple(r)
-            for r in incremental_semantic_dedup(
-                corpus, batch, "vec_id", threshold=0.95,
-                centroids=cents, n_assign=n_assign, scoring="arrow",
-            ).collect()
-        }
-        assert arrow == expr and expr, f"full-scan n_assign={n_assign}"
-        assert {r[1] for r in expr} == {"dup_of_corpus", "dup_in_batch", "new"}
-        idx_arrow = {
-            tuple(r)
-            for r in incremental_semantic_dedup_from_index(
-                spark, path, batch, threshold=0.95, n_assign=n_assign,
-                scoring="arrow",
-            ).collect()
-        }
-        assert idx_arrow == expr, f"from-index n_assign={n_assign}"
-    with _pytest.raises(ValueError, match="scoring"):
-        incremental_semantic_dedup(
-            corpus, batch, "vec_id", centroids=cents, scoring="nope"
+        assert ref, f"no corpus hits at n_assign={n_assign}"
+        full = incremental_semantic_dedup(
+            corpus, batch, "vec_id", threshold=0.95,
+            centroids=cents, n_assign=n_assign,
         ).collect()
+        idx = incremental_semantic_dedup_from_index(
+            spark, path, batch, threshold=0.95, n_assign=n_assign
+        ).collect()
+        for name, rows in (("full-scan", full), ("from-index", idx)):
+            got = {
+                r["batch_id"]: r["canonical_id"]
+                for r in rows if r["status"] == "dup_of_corpus"
+            }
+            assert got == ref, f"{name} n_assign={n_assign}"
 
 
 def test_semdedup_on_trained_index_centroids(spark, sf_dir):
@@ -2078,39 +2076,39 @@ def test_persisted_index_production_quantizers(spark, sf_dir):
 
 
 def test_semdedup_pairing_backends_agree(spark, sf_dir):
-    """The arrow pairing backend (numpy row-wise dot, the scale path) must
-    reproduce the expr reference backend's exact contraction on the
-    fixture — same cells, same threshold frontier away from rounding
-    boundaries — and reject unknown backend names."""
-    import pytest as _pytest
-
-    from s4hanaconnector_spark.operators.dedup import semantic_dedup
+    """The two per-cell pairing kernels agree: with a window that spans
+    every cell, semantic_dedup_windowed scores every within-cell pair, so
+    its contraction must equal semantic_dedup's full pairing on the same
+    cells."""
+    from s4hanaconnector_spark.operators.dedup import (
+        semantic_dedup,
+        semantic_dedup_windowed,
+    )
     from s4hanaconnector_spark.queries.llmops import emb_aug
 
-    d = emb_aug(spark, sf_dir)
-    expr = {
+    d = emb_aug(spark, sf_dir).localCheckpoint()
+    full = {
         (r["vec_id"], r["canonical_id"])
-        for r in semantic_dedup(d, "vec_id", threshold=0.95, pairing="expr").collect()
+        for r in semantic_dedup(d, "vec_id", threshold=0.95).collect()
     }
-    arrow = {
+    spanning = {
         (r["vec_id"], r["canonical_id"])
-        for r in semantic_dedup(d, "vec_id", threshold=0.95, pairing="arrow").collect()
+        for r in semantic_dedup_windowed(
+            d, "vec_id", threshold=0.95, pair_window=d.count()
+        ).collect()
     }
-    assert arrow == expr and expr
-    with _pytest.raises(ValueError, match="pairing"):
-        semantic_dedup(d, "vec_id", pairing="nope").collect()
+    assert spanning == full
+    assert any(i != canon for i, canon in full), "fixture has no duplicates"
 
 
 def test_probe_uses_persisted_assignment_backend(spark, sf_dir, monkeypatch):
-    """ADVICE r11 (the probe leg of the r10 build/append fix): the PRIMARY
-    reader must assign query vectors with the index's persisted backend —
-    an explicit-'arrow' build at 16 centroids would otherwise probe
-    through cell_assigner's auto rule (expr at that count) and diverge
-    from the frozen backend on the documented rounding-tie boundaries.
-    Spied via the cell_assigner seam: the backends are constructed to
-    agree except on tie boundaries, so a result diff can't detect the
-    regression on arbitrary data — the resolved-backend plumbing is the
-    contract under test."""
+    """The primary reader assigns query vectors through the cell_assigner
+    seam exactly once, with the index's persisted centroid table and
+    round_digits — never a quantizer re-derived at probe time, which
+    could place a query in a different cell than the build placed its
+    twin. Spied via the seam: a re-derived quantizer can agree with the
+    persisted one on arbitrary data, so a result diff alone cannot catch
+    the regression."""
     import tempfile
 
     from s4hanaconnector_spark.operators import similarity as S
@@ -2121,21 +2119,23 @@ def test_probe_uses_persisted_assignment_backend(spark, sf_dir, monkeypatch):
         F.col("vec_id").alias("q_id"), "embedding"
     )
     path = tempfile.mkdtemp(prefix="ann_probe_asgn_")
-    meta = S.build_ann_index(
-        c, path, n_centroids=16, m=16, n_codes=32, assignment="arrow"
-    )
+    meta = S.build_ann_index(c, path, n_centroids=16, m=16, n_codes=32)
     assert meta["assignment"] == "arrow"
+    persisted = sorted(
+        map(tuple, spark.read.parquet(f"{path}/centroids").collect())
+    )
 
     seen: list = []
     orig = S.cell_assigner
 
-    def spy(*a, **kw):
-        seen.append(kw.get("assignment", "auto"))
-        return orig(*a, **kw)
+    def spy(corpus, *a, **kw):
+        seen.append((corpus, kw.get("round_digits"),
+                     sorted(map(tuple, kw["centroids"].collect()))))
+        return orig(corpus, *a, **kw)
 
     monkeypatch.setattr(S, "cell_assigner", spy)
     assert S.probe_ann_index(spark, path, q, k=5).count() > 0
-    assert seen == ["arrow"]
+    assert seen == [(None, meta["round_digits"], persisted)]
 
 
 def test_append_of_tombstoned_id_raises(spark, sf_dir):
@@ -2301,33 +2301,27 @@ def test_semdedup_windowed_subset_and_recall(spark, sf_dir):
 
 
 def test_semdedup_windowed_backends_and_validation(spark, sf_dir):
-    """The windowed rung's arrow scoring backend must reproduce the expr
-    reference bit for bit on the fixture (same shared contract as
-    semantic_dedup's backends), and parameter validation must reject a
-    non-positive window and unknown pairing names."""
+    """Both windowed entry points, inline and from-index, reject a
+    non-positive pair_window before planning anything."""
+    import tempfile
+
     import pytest as _pytest
 
-    from s4hanaconnector_spark.operators.dedup import semantic_dedup_windowed
+    from s4hanaconnector_spark.operators.dedup import (
+        semantic_dedup_from_index,
+        semantic_dedup_windowed,
+    )
     from s4hanaconnector_spark.queries.llmops import emb_aug
 
     d = emb_aug(spark, sf_dir)
-    expr = {
-        (r["vec_id"], r["canonical_id"])
-        for r in semantic_dedup_windowed(
-            d, "vec_id", threshold=0.95, pair_window=8, pairing="expr"
-        ).collect()
-    }
-    arrow = {
-        (r["vec_id"], r["canonical_id"])
-        for r in semantic_dedup_windowed(
-            d, "vec_id", threshold=0.95, pair_window=8, pairing="arrow"
-        ).collect()
-    }
-    assert arrow == expr and expr
-    with _pytest.raises(ValueError, match="pair_window"):
-        semantic_dedup_windowed(d, "vec_id", pair_window=0)
-    with _pytest.raises(ValueError, match="pairing"):
-        semantic_dedup_windowed(d, "vec_id", pairing="nope")
+    for bad in (0, -1):
+        with _pytest.raises(ValueError, match="pair_window"):
+            semantic_dedup_windowed(d, "vec_id", pair_window=bad)
+        with _pytest.raises(ValueError, match="pair_window"):
+            # the window is checked before the index is read
+            semantic_dedup_from_index(
+                spark, tempfile.mkdtemp(prefix="ann_no_index_"), pair_window=bad
+            )
 
 
 def test_append_batch_key_replay_is_idempotent(spark, sf_dir):
@@ -2427,11 +2421,8 @@ def test_append_batch_key_validation_and_rebuild_reset(spark, sf_dir):
 def test_semdedup_from_index_pair_window_matches_inline(spark, sf_dir):
     """The composed rung (index amortization + pair budget) must contract
     EXACTLY like the inline windowed operator on the same corpus — the
-    index changes where cells and vectors come from, not what they are —
-    and must validate its window/pairing params like the inline path."""
+    index changes where cells and vectors come from, not what they are."""
     import tempfile
-
-    import pytest as _pytest
 
     from s4hanaconnector_spark.operators.dedup import (
         semantic_dedup_from_index,
@@ -2457,7 +2448,3 @@ def test_semdedup_from_index_pair_window_matches_inline(spark, sf_dir):
         ).collect()
     }
     assert indexed == inline and indexed
-    with _pytest.raises(ValueError, match="pair_window"):
-        semantic_dedup_from_index(spark, path, pair_window=0)
-    with _pytest.raises(ValueError, match="pairing"):
-        semantic_dedup_from_index(spark, path, pair_window=8, pairing="bad")

@@ -404,82 +404,64 @@ def _only_q_id_exchanges(plan: str) -> bool:
 
 
 def test_ivf_literal_assignment_never_shuffles_corpus(spark, sf_dir):
-    """The expr backend inlines the centroid table as a literal Catalyst
-    array: cell assignment is a projection with no join for the centroids
-    at all, and the corpus never shuffles before the final (tiny) ranked
-    output. Past 64 cells the literal would put cells x dims F.lit nodes
-    into every plan, so an explicit 'expr' there is refused."""
+    """At the 16 cells every declared query uses (the range a literal
+    centroid array once covered), cell assignment is one numpy argmax per
+    Arrow batch — a row-local mapInArrow with no join for the centroid
+    table, no sort-merge or cartesian product — and the corpus never
+    exchanges before the final ranked output on q_id. Past 64 cells the
+    same kernel runs; there is no cell cap to refuse."""
     from pyspark.sql import functions as F
 
     from s4hanaconnector_spark.operators.similarity import ivf_topk
 
     q, c = _ivf_fixture(spark, sf_dir)
-    lit = ivf_topk(q, c, k=10, n_centroids=16, n_probe=4, assignment="expr")
-    plan = lit._jdf.queryExecution().executedPlan().toString()
+    df = ivf_topk(q, c, k=10, n_centroids=16, n_probe=4)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "MapInArrow" not in plan, plan
     assert _only_q_id_exchanges(plan), plan
-    assert lit.count() > 0
+    assert df.count() > 0
 
     many = c.filter(F.col("c_id") < 65).select(
         F.col("c_id").alias("cent_id"), "embedding"
     )
-    with pytest.raises(ValueError, match="at most 64 cells"):
-        ivf_topk(q, c, k=10, n_probe=4, centroids=many, assignment="expr")
+    assert ivf_topk(q, c, k=10, n_probe=4, centroids=many).count() > 0
 
 
 def test_ivf_arrow_assignment_matches_expr_and_stays_rowlocal(spark, sf_dir):
-    """The numpy-vectorized Arrow argmax (the auto backend past 64 cells —
-    interpreted HOF lambdas cost O(cells x dims) dispatches per row,
-    measured 730 s at 2500 cells x 200k vectors) must produce the expr
-    reference backend's exact rows on the fixture and add no shuffle:
-    mapInArrow is a row-local map, so the corpus still never exchanges
-    before the final ranked output."""
+    """The numpy-vectorized Arrow argmax adds no shuffle past 64 cells
+    (80 here): mapInArrow is a row-local map, so the corpus still never
+    exchanges before the final ranked output. Its rows match the exact
+    expression reference: with n_probe > n_centroids every cell is probed
+    — the assigner must narrow its slice to the cells there are, not raise
+    a column-length mismatch inside mapInArrow — so ivf_topk must return
+    brute_force_topk's rows."""
     from pyspark.sql import functions as F
 
-    from s4hanaconnector_spark.operators.similarity import ivf_topk
+    from s4hanaconnector_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+    )
 
     q, c = _ivf_fixture(spark, sf_dir)
-    kw = dict(k=10, n_centroids=16, n_probe=4)
-    expr = ivf_topk(q, c, assignment="expr", **kw)
-    arrow = ivf_topk(q, c, assignment="arrow", **kw)
-    assert sorted(map(tuple, expr.collect())) == sorted(map(tuple, arrow.collect()))
-
-    plan = arrow._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan, plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan
-    assert _only_q_id_exchanges(plan), plan
-
-    # auto routing: small centroid tables stay on the (constant-folded)
-    # literal expr path; past 64 cells auto picks Arrow, still row-local
-    auto_small = ivf_topk(q, c, **kw)
-    assert "MapInArrow" not in (
-        auto_small._jdf.queryExecution().executedPlan().toString()
-    )
     many = c.filter(F.col("c_id") < 80).select(
         F.col("c_id").alias("cent_id"), "embedding"
     )
-    auto_big = ivf_topk(q, c, k=10, n_probe=4, centroids=many)
-    big_plan = auto_big._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in big_plan, big_plan
-    assert "SortMergeJoin" not in big_plan, big_plan
-    assert "CartesianProduct" not in big_plan, big_plan
-    assert _only_q_id_exchanges(big_plan), big_plan
-    assert sorted(map(tuple, auto_big.collect())) == sorted(
-        map(tuple, ivf_topk(q, c, k=10, n_probe=4, centroids=many,
-                            assignment="arrow").collect())
-    )
+    big = ivf_topk(q, c, k=10, n_probe=4, centroids=many)
+    plan = big._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert _only_q_id_exchanges(plan), plan
+    assert big.count() > 0
 
-    # degenerate probe fan-out (n_probe > n_centroids): the Arrow argmax
-    # must narrow its slice like the expr path's F.slice does, not raise a
-    # column-length mismatch inside mapInArrow
-    deg = dict(k=5, n_centroids=2, n_probe=4)
-    deg_e = ivf_topk(q, c, assignment="expr", **deg)
-    deg_a = ivf_topk(q, c, assignment="arrow", **deg)
-    assert sorted(map(tuple, deg_e.collect())) == sorted(
-        map(tuple, deg_a.collect())
+    deg = ivf_topk(q, c, k=5, n_centroids=2, n_probe=4)
+    exact = brute_force_topk(q, c, k=5)
+    assert sorted(map(tuple, deg.collect())) == sorted(
+        map(tuple, exact.collect())
     )
 
 
@@ -514,10 +496,9 @@ def _count_driver_jobs(monkeypatch) -> list:
 
 
 def test_ivf_auto_runs_one_centroid_job(spark, sf_dir, monkeypatch):
-    """Every assignment mode collects the (sqrt(N)-row) centroid table
-    exactly ONCE and feeds the chosen backend from those rows — no
-    separate sizing probe or count job, at or past the 64-cell
-    threshold."""
+    """ivf_topk collects the (sqrt(N)-row) centroid table exactly ONCE and
+    feeds the Arrow assigner from those rows — no separate sizing probe or
+    count job, at 16 cells and at 80."""
     from pyspark.sql import functions as F
 
     from s4hanaconnector_spark.operators.similarity import ivf_topk
@@ -530,24 +511,16 @@ def test_ivf_auto_runs_one_centroid_job(spark, sf_dir, monkeypatch):
     )
     calls = _count_driver_jobs(monkeypatch)
     kw = dict(k=10, n_probe=4)
-    # auto -> expr literal (within the threshold): exactly one collect
     ivf_topk(q, c, n_centroids=16, **kw)
     assert calls == ["collect"], calls
-    # auto -> arrow (past the threshold): still exactly one collect
     calls.clear()
     ivf_topk(q, c, centroids=many, **kw)
     assert calls == ["collect"], calls
-    # explicit backends: the same single collect
-    for backend in ("expr", "arrow"):
-        calls.clear()
-        ivf_topk(q, c, n_centroids=16, assignment=backend, **kw)
-        assert calls == ["collect"], (backend, calls)
 
 
 def test_build_ann_index_runs_one_centroid_job(spark, sf_dir, monkeypatch):
-    """build_ann_index persists the backend cell_assigner resolved, so the
-    centroid table is read to the driver once — no separate count job to
-    re-derive the auto rule — and meta.json records that backend."""
+    """build_ann_index reads the centroid table to the driver once — no
+    separate count job — and meta.json records the Arrow kernels."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -570,7 +543,7 @@ def test_build_ann_index_runs_one_centroid_job(spark, sf_dir, monkeypatch):
         centroids=cents, codebooks=cbs,
     )
     assert calls == ["collect"], calls
-    assert meta["assignment"] == "expr" and meta["encode"] == "arrow", meta
+    assert meta["assignment"] == "arrow" and meta["encode"] == "arrow", meta
 
 
 def test_ivf_int8_rescore_plan_quantizes_candidates_only(spark, sf_dir):
@@ -599,25 +572,6 @@ def test_ivf_int8_rescore_plan_quantizes_candidates_only(spark, sf_dir):
 
     with _pytest.raises(ValueError, match="rescore"):
         ivf_topk(q, c, rescore="float16")
-
-
-def test_ivf_int8_rescore_agrees_across_assignment_backends(spark, sf_dir):
-    """rescore='int8' composes with BOTH assignment backends (the auto
-    default switches past 64 cells, so the quantized rescore must not care
-    which backend assigned the cells)."""
-    from pyspark.sql import functions as F
-
-    from s4hanaconnector_spark.operators.similarity import ivf_topk
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-    kw = dict(k=10, n_centroids=16, n_probe=4, rescore="int8")
-    expr = ivf_topk(q, c, assignment="expr", **kw)
-    arrow = ivf_topk(q, c, assignment="arrow", **kw)
-    assert sorted(map(tuple, expr.collect())) == sorted(map(tuple, arrow.collect()))
 
 
 def test_pq_rerank_plan_never_shuffles_corpus(spark, sf_dir):
@@ -675,13 +629,14 @@ def test_pq_lut_score_matches_adc_expr_and_stays_rowlocal(spark, sf_dir):
 
 
 def test_semdedup_no_cartesian_and_rowlocal_assignment(spark, sf_dir):
-    """SemDeDup: pairwise cosine must be confined to within-cell joins — a
+    """SemDeDup: pairwise cosine must be confined to cells — a
     CartesianProduct/BNLJ here is the N² catastrophe the cells exist to
-    prevent. Cell assignment itself is the literal-delivery projection
-    (no join for the centroid table at fixture cell counts)."""
+    prevent. Cell assignment is the row-local Arrow argmax (no join for
+    the centroid table) and pairing runs per cell in Arrow."""
     plan = plan_of(spark, sf_dir, "dedup_semdedup")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan, plan
 
 
 def test_semdedup_indexed_no_cartesian(spark, sf_dir):
@@ -697,9 +652,10 @@ def test_semdedup_indexed_no_cartesian(spark, sf_dir):
 def test_semdedup_from_index_skips_assignment(spark, sf_dir):
     """semantic_dedup_from_index must go STRAIGHT to pairing: the plan
     reads the index's cell-partitioned vectors (``__cell`` is a partition
-    column, no centroid argmax projection, no centroid scan) and its only
-    join is the within-cell self-join. This is the measured amortization
-    of the scale ladder's dedup_semdedup_from_index rung."""
+    column, no assignment kernel, no centroid scan) and hands each cell to
+    the per-cell pairing kernel; its only join is the broadcast
+    contraction. This is the measured amortization of the scale ladder's
+    dedup_semdedup_from_index rung."""
     import tempfile
 
     from s4hanaconnector_spark.operators.dedup import semantic_dedup_from_index
@@ -715,8 +671,11 @@ def test_semdedup_from_index_skips_assignment(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    # the quantizer never appears: no argmax-over-centroids projection
-    # (greatest( / aggregate( literal trees) and no centroids/ scan
+    assert "SortMergeJoin" not in plan, plan
+    # the quantizer never appears: no assignment MapInArrow and no
+    # centroids/ scan; pairing is the per-cell FlatMapGroupsInArrow
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "MapInArrow" not in plan.replace("FlatMapGroupsInArrow", ""), plan
     assert "centroids" not in plan, plan
     # the contraction must equal the inline operator's on the same corpus
     from s4hanaconnector_spark.operators.dedup import semantic_dedup
@@ -732,12 +691,20 @@ def test_semdedup_from_index_skips_assignment(spark, sf_dir):
 
 
 def test_incremental_semantic_corpus_never_shuffles(spark, sf_dir):
-    """Incremental semantic dedup: the corpus side must meet the batch
-    through broadcast hash joins only, exactly like the fingerprint rung —
-    a SortMergeJoin would shuffle the full accepted corpus every ingest."""
+    """Incremental semantic dedup: the corpus leg is one MapInArrow pass
+    over the corpus cell scan (the batch's per-cell vectors ride in its
+    closure), so the corpus is never exchanged — the only hash exchanges
+    fold the small per-batch-vector hit rows on batch_id. The batch-side
+    joins are broadcast hash joins; a SortMergeJoin would shuffle the
+    full accepted corpus every ingest."""
     plan = plan_of(spark, sf_dir, "dedup_semantic_incremental")
     assert "SortMergeJoin" not in plan, plan
+    assert "MapInArrow" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 3, plan
+    hash_ex = [
+        line for line in plan.splitlines() if "Exchange hashpartitioning" in line
+    ]
+    assert hash_ex and all("batch_id" in line for line in hash_ex), hash_ex
 
 
 def test_ivf_pq_plan_corpus_single_pass_no_smj(spark, sf_dir):

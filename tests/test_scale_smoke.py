@@ -557,14 +557,11 @@ def test_x100_scaling_ladder(spark):
     _ladder_entry(ladder, "similarity_ivf_probe_fixed_index", t10, t100, n100,
                   rerun=lambda: (probe(x10)[0], probe(x100)[0]))
 
-    # cell assignment at >=2k centroids: past 64 cells auto assigns with
-    # the Arrow matmul backend instead of inlining the centroid table as a
-    # literal plan tree (2500 cells x d F.lit nodes) — this rung proves
-    # assignment stays linear in corpus size at that count. It measures
-    # the DEFAULT backend (an interpreted-HOF argmax measured alpha 1.0 at
-    # 73 s -> 730 s, which motivated the Arrow default — see BENCH_NOTES).
-    # The deterministic prefix quantizer keeps the rung about ASSIGNMENT
-    # cost, not KMeans build cost.
+    # cell assignment at >=2k centroids: the Arrow matmul argmax — this
+    # rung proves assignment stays linear in corpus size at that count (a
+    # former interpreted-HOF argmax measured alpha 1.0 at 73 s -> 730 s,
+    # see BENCH_NOTES). The deterministic prefix quantizer keeps the rung
+    # about ASSIGNMENT cost, not KMeans build cost.
     def assign2k(d):
         q, c = emb(d)
         df = ivf_topk(q, c, k=10, n_centroids=2500, n_probe=4)
@@ -579,12 +576,9 @@ def test_x100_scaling_ladder(spark):
     _ladder_entry(ladder, "similarity_ivf_assign_2500_cells", t10, t100, n100,
                   rerun=lambda: (assign2k(x10)[0], assign2k(x100)[0]))
 
-    # recall gate ON the shipped >2048-cell default (ADVICE r8): auto picks
-    # the Arrow argmax at 2500 cells, and its rounding rule differs from
-    # F.round on shortest-decimal half-ties (operators/similarity.py
-    # _arrow_assign docstring) — so the backend that actually ships at high
-    # cell counts carries its own measured recall floor against exact brute
-    # force, not just row-equality fixtures away from boundaries.
+    # recall gate at 2500 cells: the declared queries' oracle checks the
+    # Arrow argmax at 16 cells, so at production cell counts it carries its
+    # own measured recall floor against exact brute force.
     from s4hanaconnector_spark.operators.similarity import brute_force_topk
 
     q100, c100 = emb(x100)
@@ -596,7 +590,7 @@ def test_x100_scaling_ladder(spark):
     _record_raw("arrow_backend_recall_2500_cells_x100", {
         "recall_at_10": f"{hit}/{len(bf)}",
         "floor": ">=80%",
-        "backend": "arrow (auto past 64 cells)",
+        "backend": "arrow",
     })
     assert hit * 100 >= len(bf) * 80, (
         f"arrow-backend IVF recall regression at 2500 cells: {hit}/{len(bf)}"
@@ -641,14 +635,9 @@ def test_x100_scaling_ladder(spark):
         return base.unionByName(twins).localCheckpoint()
 
     def sem_run(n):
-        # arrow on BOTH stages — the backends that actually ship at scale
-        # (assignment past 64 cells, pairing as ~90% of the
-        # wall); the expr reference backends carry the identical
-        # complexity, measured alpha 1.38-1.41 in the r9 expr-pairing runs
         out = semantic_dedup(
             sem_frame(n), "vec_id", threshold=0.95,
-            n_centroids=max(4, int(n ** 0.5)), assignment="arrow",
-            pairing="arrow",
+            n_centroids=max(4, int(n ** 0.5)),
         )
         n_rows = out.count()  # untimed, for the non-empty asserts
         dups = out.filter(F.col("vec_id") != F.col("canonical_id")).count()
@@ -701,9 +690,7 @@ def test_x100_scaling_ladder(spark):
             sem_frame(n), path, n_centroids=max(4, int(n ** 0.5)),
             m=8, n_codes=16, c_id="vec_id",
         )
-        out = semantic_dedup_from_index(
-            spark, path, threshold=0.95, pairing="arrow"
-        )
+        out = semantic_dedup_from_index(spark, path, threshold=0.95)
         n_rows = out.count()  # untimed, for the non-empty asserts
         dups = out.filter(F.col("vec_id") != F.col("canonical_id")).count()
         t0 = _t.perf_counter()
@@ -753,7 +740,7 @@ def test_x100_scaling_ladder(spark):
     # rung: near-linear ladder (alpha cap 1.2).
     def win_indexed_run(path):
         out = semantic_dedup_from_index(
-            spark, path, threshold=0.95, pairing="arrow", pair_window=8
+            spark, path, threshold=0.95, pair_window=8
         )
         dups = out.filter(F.col("vec_id") != F.col("canonical_id")).count()
         t0 = _t.perf_counter()
@@ -807,8 +794,7 @@ def test_x100_scaling_ladder(spark):
     def win_run(n):
         out = semantic_dedup_windowed(
             sem_frame(n), "vec_id", threshold=0.95,
-            n_centroids=max(4, int(n ** 0.5)), assignment="arrow",
-            pairing="arrow", pair_window=8,
+            n_centroids=max(4, int(n ** 0.5)), pair_window=8,
         )
         n_rows = out.count()  # untimed, for the non-empty asserts
         dups = out.filter(F.col("vec_id") != F.col("canonical_id")).count()
@@ -828,8 +814,7 @@ def test_x100_scaling_ladder(spark):
         rw = tw100 / max(tw10, 0.5)
     unc10 = semantic_dedup(
         sem_frame(20_000), "vec_id", threshold=0.95,
-        n_centroids=max(4, int(20_000 ** 0.5)), assignment="arrow",
-        pairing="arrow",
+        n_centroids=max(4, int(20_000 ** 0.5)),
     )
     unc_d = unc10.filter(F.col("vec_id") != F.col("canonical_id")).select(
         "vec_id"
@@ -1032,25 +1017,12 @@ def test_x100_scaling_ladder(spark):
         cls = incremental_semantic_dedup_from_index(spark, path, b)
         cls.write.format("noop").mode("overwrite").save()
         t_classify = _t.perf_counter() - t0
-        # r12: the arrow scoring backend (mapInArrow over the resident
-        # scan, per-cell numpy matmuls) — the scale path for the classify
-        # half of the ingest loop; result equality asserted, both walls
-        # recorded so the ladder shows the backend delta at x100
-        t0 = _t.perf_counter()
-        cls_a = incremental_semantic_dedup_from_index(
-            spark, path, b, scoring="arrow"
-        )
-        cls_a.write.format("noop").mode("overwrite").save()
-        t_classify_arrow = _t.perf_counter() - t0
-        assert {tuple(r) for r in cls_a.collect()} == {
-            tuple(r) for r in cls.collect()
-        }
         t0 = _t.perf_counter()
         append_to_ann_index(b, path)
-        return t_classify, t_classify_arrow, _t.perf_counter() - t0
+        return t_classify, _t.perf_counter() - t0
 
-    tc10, tca10, tap10 = timed_ingest(p10, fixed_batch(x10, 50_000_000))
-    tc100, tca100, tap100 = timed_ingest(p100, fixed_batch(x100, 50_000_000))
+    tc10, tap10 = timed_ingest(p10, fixed_batch(x10, 50_000_000))
+    tc100, tap100 = timed_ingest(p100, fixed_batch(x100, 50_000_000))
     r_ap = tap100 / max(tap10, 0.5)
     _record_raw("index_ingest_vs_index_size", {
         "batch_rows": 5_000,
@@ -1059,8 +1031,6 @@ def test_x100_scaling_ladder(spark):
         "append_ratio": round(r_ap, 1),
         "classify_sec_x10_index": round(tc10, 2),
         "classify_sec_x100_index": round(tc100, 2),
-        "classify_arrow_sec_x10_index": round(tca10, 2),
-        "classify_arrow_sec_x100_index": round(tca100, 2),
         "note": "same 5k batch against a 10x-larger resident index; "
                 "append gated flat (<3x); classify recorded — its cost "
                 "is |batch cells| x cell occupancy by design (partition-"
@@ -1071,15 +1041,12 @@ def test_x100_scaling_ladder(spark):
                 "~3.2x per decade (sublinear classify), and the 5k batch "
                 "probes all 16 cells so pruning cannot help at this cell "
                 "count — it prunes when |batch cells| << n_cells. "
-                "classify_arrow_* = the r12 scoring='arrow' backend "
-                "(mapInArrow over the resident scan, per-cell numpy "
-                "matmuls, result-equality asserted) — the scale path for "
-                "the ingest loop's dedup gate; expr stays the "
-                "declared-oracle reference",
+                "classify = mapInArrow over the resident scan, per-cell "
+                "numpy matmuls",
     })
     print(f"LADDER index_ingest_vs_index_size: append {tap10:.2f}s -> "
-          f"{tap100:.2f}s ({r_ap:.1f}x), classify expr {tc10:.2f}s -> "
-          f"{tc100:.2f}s / arrow {tca10:.2f}s -> {tca100:.2f}s")
+          f"{tap100:.2f}s ({r_ap:.1f}x), classify {tc10:.2f}s -> "
+          f"{tc100:.2f}s")
     assert r_ap < 3, (
         f"append_to_ann_index wall grew {r_ap:.1f}x for a 10x larger "
         f"index ({tap10:.2f}s -> {tap100:.2f}s) — per-batch ingest must "
