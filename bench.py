@@ -10,8 +10,12 @@ artifact. A full three-tier run writes the whole document (per-sample walls
 and steal, host facts) to ``BENCH_LAST_FULL.json``; stdout gets ONE compact
 JSON line: metric, value, unit, sf, host, summary.
 
-Timing = full query execution materialized via ``df.write.format("noop")``:
-every row is produced, nothing hits disk. Building the DataFrame is untimed.
+Timing = planning plus ``queryExecution().toRdd().count()`` through
+``s4hanaconnector_spark.profile``: every row is produced, nothing is
+collected or written. Building the DataFrame is untimed. Each query record
+also carries ``layers``, the profile's layer split of its fastest sample
+(build, plan and execution walls, build-time jobs, then what the scans,
+pipelines, exchanges, broadcasts and Python/Arrow nodes report).
 
 Environment: ``SPARK_GRAFT_SF_DIR`` (base tier), ``SPARK_GRAFT_SF1=0`` (skip
 the 10x and IVF tiers), ``SPARK_GRAFT_STREAMING=0`` (skip the streaming leg).
@@ -28,6 +32,8 @@ import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
+
+from s4hanaconnector_spark.profile import profile  # noqa: E402
 
 BASE_SAMPLES = 3
 X10_SAMPLES = 2
@@ -68,7 +74,7 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
     for q in headline.values():
-        q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+        profile(lambda: q.fn(spark, warm_dir))
 
     base = _tier(spark, headline, sf_dir, BASE_SAMPLES)
     doc = {
@@ -141,18 +147,24 @@ def _record(runs: list[tuple[float, float]]) -> dict:
     }
 
 
-def _sample_writes(make_df, n: int) -> dict:
-    """``n`` samples of materializing a freshly built frame."""
-    runs = []
+def _sample(make_df, n: int) -> dict:
+    """``n`` profiled runs of a freshly built frame, each timed from
+    planning to the last row; steal covers the whole sample, build
+    included."""
+    runs, profiles = [], []
     for _ in range(n):
-        df = make_df()
-        runs.append(_measure(df.write.format("noop").mode("overwrite").save))
-    return _record(runs)
+        steal = _steal()
+        p = profile(make_df)
+        runs.append((p.plan_s + p.exec_s, _steal() - steal))
+        profiles.append(p)
+    rec = _record(runs)
+    rec["layers"] = min(profiles, key=lambda p: p.plan_s + p.exec_s).layers()
+    return rec
 
 
 def _tier(spark, headline, sf_dir: str, n: int) -> dict:
     queries = {
-        name: _sample_writes(lambda: q.fn(spark, sf_dir), n)
+        name: _sample(lambda: q.fn(spark, sf_dir), n)
         for name, q in headline.items()
     }
     return {
@@ -396,7 +408,7 @@ def _ivf_build_probe(spark, base_dir: str, x10_dir: str) -> dict:
     out = {"build": _record([_measure(build) for _ in range(BUILD_SAMPLES)])}
 
     def probe(d):
-        return _sample_writes(
+        return _sample(
             lambda: ivf_topk(
                 queries_df(d), corpus(d), k=10, n_probe=4, centroids=built[-1]
             ),

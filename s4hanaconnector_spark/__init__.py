@@ -20,7 +20,8 @@ Layout:
     sources/        synthetic deterministic CDC fixtures (pklog etc.)
     streaming/      Structured Streaming: changes_stream, windowed aggs,
                     stateful dedup, transactional foreachBatch sink
-    plans/          plan-inspection helpers (pushdown / broadcast asserts)
+    profile         run one query, read per-operator metrics off its final
+                    AQE plan (s4spark plan, PLANS.md, bench.py)
 """
 
 __version__ = "0.1.0"

@@ -1,6 +1,6 @@
 """Command-line surface — the engine's equivalent of the reference's
 REST/servlet layer (O31, ``rest/SourceTableService.java:39-74``): list what
-the engine can do, run any declared query, inspect its physical plan, and
+the engine can do, run any declared query, profile the plan it ran, and
 import a table mapping. A user of the reference drives it over HTTP; a user
 of this engine drives the same operations from the shell or Python.
 
@@ -30,7 +30,11 @@ def _build_parser() -> argparse.ArgumentParser:
     runp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     runp.add_argument("--limit", type=int, default=20, help="max rows printed (0 = all)")
 
-    planp = sub.add_parser("plan", help="print a query's physical plan")
+    planp = sub.add_parser(
+        "plan",
+        help="run a declared query once and print the final physical plan, "
+        "one operator per line with its non-zero metrics",
+    )
     planp.add_argument("query")
     planp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
 
@@ -128,10 +132,13 @@ def main(argv: list[str] | None = None, out=None) -> int:
             return 2
         from s4hanaconnector_spark.session import get_spark
 
-        df = reg[args.query].fn(get_spark(), args.sf_dir)
+        spark = get_spark()
         if args.cmd == "plan":
-            print(df._jdf.queryExecution().executedPlan().toString(), file=out)
+            from s4hanaconnector_spark.profile import profile
+
+            print(profile(lambda: reg[args.query].fn(spark, args.sf_dir)).render(), file=out)
             return 0
+        df = reg[args.query].fn(spark, args.sf_dir)
         # display path: bound the collect — an unbounded collect on a 100 TB
         # result is a driver OOM. --limit 0 ("all") still goes through
         # toLocalIterator so rows stream to the driver one partition at a time.

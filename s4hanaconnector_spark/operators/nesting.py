@@ -108,7 +108,7 @@ def maintain_nested_docs(
     master+detail CDC batches: re-nest ONLY the documents whose master row
     changed or whose detail set changed, keep every other document as-is.
 
-    BATCH CONTRACT for detail-side key changes (r6 ADVICE): a U row carries
+    BATCH CONTRACT for detail-side key changes: a U row carries
     only its NEW join key, so the OLD parent's document re-nests only if
     the old key is also visible in the batch — deliver key changes as a
     D(old)+I(new) pair (``pk_change_expand`` does this when the key is in

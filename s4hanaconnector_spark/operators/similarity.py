@@ -162,12 +162,9 @@ def kmeans_centroids(
     iteration. Larger fits (the true 100 TB regime: sqrt(N) centroids x
     100 samples each) keep the distributed spark.ml path — the
     driver-side rule is a bounded-sample fast path, not a scale
-    assumption; ``SPARK_GRAFT_KMEANS_DRIVER_FIT=0`` disables it. Both
-    paths are deterministic per seed; neither is engine-portable, and
-    recall stays gated downstream (similarity_ivf_recall, the x100
-    ladder floors)."""
-    import os
-
+    assumption. Both paths are deterministic per seed; neither is
+    engine-portable, and recall stays gated downstream
+    (similarity_ivf_recall, the x100 ladder floors)."""
     sample = corpus.select(F.col(vec).alias("__v"))
     if sample_fraction < 1.0:
         sample = sample.sample(fraction=sample_fraction, seed=seed)
@@ -175,14 +172,10 @@ def kmeans_centroids(
         import math
 
         n_centroids = max(2, int(math.isqrt(corpus.count())))
-    rows = None
-    if os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_FIT", "1") != "0":
-        # bounded probe: limit(N+1) collect instead of a count() job — the
-        # sample may be corpus-sized and only "is it small?" matters here
-        head = sample.limit(_DRIVER_FIT_MAX_ROWS + 1).collect()
-        if n_centroids <= len(head) <= _DRIVER_FIT_MAX_ROWS:
-            rows = head
-    if rows is not None:
+    # bounded probe: limit(N+1) collect instead of a count() job — the
+    # sample may be corpus-sized and only "is it small?" matters here
+    rows = sample.limit(_DRIVER_FIT_MAX_ROWS + 1).collect()
+    if n_centroids <= len(rows) <= _DRIVER_FIT_MAX_ROWS:
         import numpy as np
 
         X = np.array([r["__v"] for r in rows], dtype=np.float64)

@@ -256,7 +256,7 @@ FROM orders
 """,
 )
 def sap_type_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VERDICT r3 #7 — the HANA type-map EDGES as oracle-gated values, not
+    """The HANA type-map EDGES as oracle-gated values, not
     just unit-tested declarations (S4HanaTableMapping.java:619-667):
 
       * TINYINT is UNSIGNED 0..255 (:619): mapped to SMALLINT/short, the

@@ -51,8 +51,8 @@ def qident(name: str) -> str:
 
 
 def _user_cache_root() -> str:
-    # per-user (uid-suffixed) so another user on a shared host can neither
-    # poison nor collide with this cache (ADVICE r6: world-shared tmp paths)
+    # per-user (uid-suffixed): a world-shared tmp path would let another
+    # user on a shared host poison or collide with this cache
     uid = os.getuid() if hasattr(os, "getuid") else 0
     root = os.path.join(tempfile.gettempdir(), f"spark-graft-derby-u{uid}")
     os.makedirs(root, exist_ok=True)

@@ -14,6 +14,12 @@ sys.path.insert(0, ROOT)
 import bench  # noqa: E402
 
 
+LAYER_KEYS = (
+    "build_s", "build_jobs", "plan_s", "exec_s", "scan_s", "pipeline_s",
+    "shuffle_write_bytes", "fetch_wait_s", "broadcast_s", "python",
+)
+
+
 def _last_full() -> dict:
     with open(os.path.join(ROOT, "BENCH_LAST_FULL.json")) as f:
         return json.load(f)
@@ -27,14 +33,22 @@ def _assert_sampled(rec: dict) -> None:
 
 def test_last_full_artifact_is_current_shape():
     """The in-repo full-run artifact must parse and carry host facts, every
-    sample's wall and steal for the base, x10 and IVF tiers, and the
-    tail-window summary as its LAST key."""
+    sample's wall and steal for the base, x10 and IVF tiers, each base
+    query's layer split, and the tail-window summary as its LAST key."""
     d = _last_full()
     for k in ("nproc", "mem_total_bytes", "spark", "master"):
         assert d["host"][k]
     assert d["queries"] and d["x10"]["queries"].keys() == d["queries"].keys()
     for rec in [*d["queries"].values(), *d["x10"]["queries"].values()]:
         _assert_sampled(rec)
+    # every base-tier record carries the plan profiler's layer split of
+    # its fastest sample, whose plan + exec walls are that sample's wall
+    for rec in d["queries"].values():
+        lay = rec["layers"]
+        assert set(LAYER_KEYS) <= set(lay)
+        assert lay["build_jobs"] >= 0 and lay["shuffle_write_bytes"] >= 0
+        assert all(lay[k] >= 0 for k in LAYER_KEYS if k.endswith("_s"))
+        assert abs(lay["plan_s"] + lay["exec_s"] - rec["min"]) <= 0.005
     assert d["x10"]["base_sf"] == 0.1
     for leg in ("build", "probe", "probe_x10"):
         _assert_sampled(d["ivf"][leg])

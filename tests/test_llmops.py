@@ -96,6 +96,26 @@ def test_ivf_kmeans_production_path(spark, sf_dir):
     assert auto.count() == 10
 
 
+def test_kmeans_centroids_spark_ml_leg(spark, sf_dir, monkeypatch):
+    """A training sample above ``_DRIVER_FIT_MAX_ROWS`` fits with spark.ml
+    instead of the driver-side numpy Lloyd fit; the size rule is the only
+    selector between the two, so shrinking the cap drives a ~100-row
+    corpus down the distributed leg."""
+    from s4hanaconnector_spark.operators import similarity
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    c = e.select(F.col("vec_id").alias("c_id"), "embedding").limit(100)
+    dim = len(c.first()["embedding"])
+    monkeypatch.setattr(similarity, "_DRIVER_FIT_MAX_ROWS", 50)
+    lloyd = []
+    monkeypatch.setattr(similarity, "_lloyd_fit", lambda *a: lloyd.append(a))
+
+    rows = similarity.kmeans_centroids(c, n_centroids=4, seed=7, max_iter=5).collect()
+    assert not lloyd
+    assert sorted(r["cent_id"] for r in rows) == [0, 1, 2, 3]
+    assert all(len(r["embedding"]) == dim for r in rows)
+
+
 def test_similarity_topk_shape(spark, sf_dir):
     reg = load_all()
     out = reg["similarity_topk_bruteforce"].fn(spark, sf_dir).collect()

@@ -10,7 +10,7 @@ once each, asserting
     the affordability bound.
 
 Run explicitly: ``pytest -m slow tests/test_scale_smoke.py``. Numbers are
-recorded in PLANS.md ("Scale smoke" section).
+recorded in SCALE_SMOKE.json.
 """
 
 from __future__ import annotations
@@ -84,9 +84,8 @@ def _timed(spark, name, sf_dir):
 
 
 def _record_raw(name, payload: dict):
-    """Persist one measurement entry into SCALE_SMOKE.json — plan_audit.py
-    renders PLANS.md's scale-smoke tables from this file, so the doc always
-    carries the last MEASURED numbers, never a stale paste."""
+    """Persist one measurement entry into SCALE_SMOKE.json, so the file
+    always carries the last MEASURED numbers, never a stale paste."""
     import json
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -190,7 +189,7 @@ def test_salted_join_beats_naive_on_skewed_sf1(spark, tmp_path_factory):
     the configuration salting exists for (stream-static joins, engines
     without AQE). The salted plan must produce hash-identical results AND
     beat the naive shuffle join's straggler wall clock. Numbers land in
-    SCALE_SMOKE.json -> PLANS.md."""
+    SCALE_SMOKE.json."""
     import time as _t
 
     from s4hanaconnector_spark.operators.skew import salted_join
@@ -293,7 +292,7 @@ def test_recall_gates_green_at_sf1(spark):
     must hold on the sf1 corpus (20k vectors, every family of 10 being
     near-duplicates). The query functions raise internally below their
     floors; this test records the sf1 measured values into
-    SCALE_SMOKE.json so PLANS.md carries the evidence."""
+    SCALE_SMOKE.json so the file carries the evidence."""
     from s4hanaconnector_spark.queries import load_all
     from s4hanaconnector_spark.scale_data import default_sf1_dir, synthesize_sf1
 
